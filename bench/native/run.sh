@@ -4,4 +4,4 @@
 set -e
 cd "$(dirname "$0")"
 gcc -O3 -march=native -funroll-loops -fopenmp spmv_native.c -o spmv_native
-OMP_NUM_THREADS=${OMP_NUM_THREADS:-32} ./spmv_native "${1:-20}"
+OMP_NUM_THREADS=${OMP_NUM_THREADS:-$(nproc)} ./spmv_native "${1:-20}"

@@ -5,8 +5,9 @@
  * was measured on an AVX-512 machine with 31-44 GB/s effective bandwidth.
  * THIS sandbox's CPU has no AVX at all (SSE2-only Xeon @2.1GHz), so the only
  * meaningful like-for-like bar is: the same algorithm, in native code, on
- * THIS box. This file is a textbook CSR SpMV (float values, 32 threads,
- * OpenMP static row partition balanced by nnz) written from scratch — no
+ * THIS box. This file is a textbook CSR SpMV (float values, OpenMP static
+ * row partition balanced by nnz; run.sh defaults OMP_NUM_THREADS to nproc)
+ * written from scratch — no
  * reference code — plus a STREAM-style triad to measure the DRAM bandwidth
  * ceiling the kernel is bounded by.
  *

@@ -131,8 +131,9 @@ object ConnectedComponents {
     // unchanged. Threshold in edges; ~32 B/edge collected, so the default
     // 2^21 bounds the driver at the size of a modest broadcast relation.
     val localMax = spark.conf.get("spark.graft.cc.localContractEdges", (1L << 21).toString).toLong
-    val nStar = { // Σ(|rs| - 1) in ONE cached-scan job
-      val row = g.agg(sum(size(col("rs"))).cast("long"), count(lit(1))).head()
+    val nStar = { // Σ(|rs| - 1) in ONE cached-scan job (0 on an edge-less graph)
+      val row = g.agg(coalesce(sum(size(col("rs"))).cast("long"), lit(0L)),
+        count(lit(1))).head()
       row.getLong(0) - row.getLong(1)
     }
     val (rootLabelsDf, phase2Metrics) =

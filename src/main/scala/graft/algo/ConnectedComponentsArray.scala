@@ -1,18 +1,17 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import java.nio.{ByteBuffer, ByteOrder}
-import graft.model.IterationMetrics
+import graft.exec.BlockIterate
+import graft.exec.BlockIterate.Kernel
 
 /** Connected components over per-partition flat CSR blocks with a broadcast
   * primitive label array — [[PageRankArray]]'s K6 broadcast-gather kernel
   * (`/root/reference/include/graphCSR.hpp:215-249`) re-instantiated on the
   * (min, ·) semiring: per row, gather `labels[colInd[j]]` and take the MIN
   * instead of a multiply-accumulate. Same CSR layout
-  * (`include/graphCSR.hpp:382-384`), same per-iteration protocol (packed
-  * little-endian broadcast down, packed disjoint slices back), no values
-  * array at all — CC only ever reads neighbor IDs.
+  * (`include/graphCSR.hpp:382-384`) and the same per-iteration protocol
+  * ([[graft.exec.BlockIterate]]), no values array at all — CC only ever
+  * reads neighbor IDs.
   *
   * WHY a second CC path: the DataFrame [[ConnectedComponents]] (two-phase:
   * partition-local union-find contraction + pointer jumping on the root
@@ -22,8 +21,7 @@ import graft.model.IterationMetrics
   * one zero-shuffle gather job plus a driver-side pointer compression:
   *   1. executors: label'[v] = min(label[v], min over neighbors(v)) over the
   *      cached CSR blocks, returning packed slices + a changed-count;
-  *   2. driver: scatter slices (disjoint dst sets — hash partition + chunks
-  *      closed at dst boundaries), then compress pointers to FIXPOINT
+  *   2. driver: scatter the slices, then compress pointers to FIXPOINT
   *      (label[v] <- label[label[v]] passes; labels are vertex ids and only
   *      ever decrease, so each pass is monotone and the loop is O(log chain)
   *      passes of an O(V) primitive scan — microseconds at 1M, no job).
@@ -37,94 +35,53 @@ import graft.model.IterationMetrics
   * labeling the north rule requires).
   *
   * Scope mirrors PageRankArray: broadcast regime only (V ≤ ~10^8); beyond
-  * that use [[ConnectedComponents]] (the shuffle path). Labels travel as
-  * packed little-endian longs — architecture-independent wire format.
+  * that use [[ConnectedComponents]] (the shuffle path).
   */
 object ConnectedComponentsArray {
-  import graft.graph.CsrBlocks.{packL, unpackL, LabelCache}
 
   def run(
       spark: SparkSession,
       edges: DataFrame,
       nVertices: Long,
       maxIter: Int = 100): ConnectedComponents.Result = {
-    require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
-    val n = nVertices.toInt
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    // value-less symmetric CSR: CC gathers ids only (4 B/edge colInd + rowPtr)
+    val (labels, metrics) = BlockIterate.labels(spark, edges, nVertices, maxIter,
+      "BroadcastArrayMin", afterScatter = compress)(minRows)
+    ConnectedComponents.Result(labels, metrics)
+  }
 
-    // one-time value-less CSR build: symmetrized neighbors keyed by dst,
-    // hash-partitioned + dst-sorted row stream -> chunked flat blocks (the
-    // PageRankArray build shape minus the normalize join and the values
-    // array — CC gathers ids only, so CSR here is 4 B/edge colInd + rowPtr;
-    // shared with LabelPropagationArray via graft.graph.CsrBlocks)
-    val (blocks, dstsByPart, nEdges) =
-      graft.graph.CsrBlocks.build(edges, nVertices, nParts)
-
-    val sc = spark.sparkContext
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
-    var x = Array.tabulate(n)(_.toLong) // label = own id
-    var iter = 0
-    var changed = Long.MaxValue
-    while (iter < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
-      val bc = sc.broadcast(packL(x))
-      val bcId = bc.id
-      val slices = blocks.map { b =>
-        val xs = LabelCache.longs(bcId, bc.value)
-        val out = new Array[Long](b.dsts.length)
-        var ch = 0L
-        var r0 = 0
-        while (r0 < b.dsts.length) {
-          val own = xs(b.dsts(r0).toInt)
-          var m = own
-          var i = b.rowPtr(r0); val end = b.rowPtr(r0 + 1)
-          while (i < end) {
-            val lv = xs(b.colInd(i)); if (lv < m) m = lv; i += 1
-          }
-          out(r0) = m
-          if (m < own) ch += 1
-          r0 += 1
-        }
-        (packL(out), ch)
-      }.collect()
-      bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-      val next = x.clone() // uncovered (isolated) vertices keep their label
-      // disjoint per-block dst sets -> racefree parallel plain assign
-      java.util.stream.IntStream.range(0, slices.length).parallel().forEach { pi =>
-        val ids = dstsByPart(pi); val vs = unpackL(slices(pi)._1)
-        var i = 0
-        while (i < ids.length) { next(ids(i).toInt) = vs(i); i += 1 }
+  /** label'[v] = min(label[v], min over neighbors(v)); partial = #changed. */
+  private val minRows: Kernel[Array[Long]] = (b, xs) => {
+    val out = new Array[Long](b.rows)
+    var ch = 0L
+    var r = 0
+    while (r < out.length) {
+      val own = xs(b.base + r)
+      var m = own
+      var i = b.rowPtr(r); val end = b.rowPtr(r + 1)
+      while (i < end) {
+        val lv = xs(b.colInd(i)); if (lv < m) m = lv; i += 1
       }
-      changed = slices.foldLeft(0L)(_ + _._2)
-      // pointer compression to fixpoint: labels are vertex ids, label[u]<=u,
-      // so label[label[v]] only decreases — each O(V) pass halves remaining
-      // tree depth (driver-side, no Spark job; ~ms at V=10^6)
-      var jumped = changed > 0
-      while (jumped) {
-        jumped = false
-        var v = 0
-        while (v < n) {
-          val m = next(next(v).toInt)
-          if (m < next(v)) { next(v) = m; jumped = true }
-          v += 1
-        }
-      }
-      x = next
-      val secs = (System.nanoTime() - t0) / 1e9
-      metrics += IterationMetrics(iter + 1, nEdges, secs,
-        if (secs > 0) nEdges / secs else 0.0, changed.toDouble,
-        "BroadcastArrayMin")
-      iter += 1
+      out(r) = m
+      if (m < own) ch += 1
+      r += 1
     }
-    blocks.unpersist()
+    (out, ch.toDouble)
+  }
 
-    // driver-boxing-free handoff (the PageRankArray.stateDf pattern)
-    import spark.implicits._
-    val bc = sc.broadcast(packL(x))
-    val labels = spark.range(n.toLong).as[Long].mapPartitions { it =>
-      val bb = ByteBuffer.wrap(bc.value).order(ByteOrder.LITTLE_ENDIAN)
-      it.map(i => (i, bb.getLong(8 * i.toInt)))
-    }.toDF("id", "label")
-    ConnectedComponents.Result(labels, metrics.toSeq)
+  /** Pointer compression to fixpoint: labels are vertex ids, label[u] <= u,
+    * so label[label[v]] only decreases — each O(V) pass halves the remaining
+    * tree depth (driver-side, no Spark job; ~ms at V=10^6). */
+  private def compress(next: Array[Long], changed: Double): Unit = {
+    var jumped = changed > 0
+    while (jumped) {
+      jumped = false
+      var v = 0
+      while (v < next.length) {
+        val m = next(next(v).toInt)
+        if (m < next(v)) { next(v) = m; jumped = true }
+        v += 1
+      }
+    }
   }
 }

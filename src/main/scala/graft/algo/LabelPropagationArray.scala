@@ -1,11 +1,8 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.{ByteBuffer, ByteOrder}
-
-import graft.graph.CsrBlocks
-import graft.graph.CsrBlocks.{packL, unpackL, LabelCache}
-import graft.model.IterationMetrics
+import graft.exec.BlockIterate
+import graft.exec.BlockIterate.Kernel
 
 /** Synchronous label propagation over per-partition flat CSR blocks with a
   * broadcast primitive label array — the K6 broadcast-gather kernel
@@ -22,8 +19,7 @@ import graft.model.IterationMetrics
   * (V <= ~10^8, labels fit one executor at 8 B/vertex) a whole LP round is
   * ONE zero-shuffle gather job over the cached CSR blocks: executors
   * compute per-row neighbor-label modes against the broadcast array and
-  * return packed disjoint slices + a changed-count; the driver scatters
-  * (disjoint dst sets — hash partition + chunks closed at dst boundaries).
+  * return packed slices + a changed-count ([[graft.exec.BlockIterate]]).
   * No pointer compression (LP labels are NOT monotone, unlike CC's).
   *
   * Per-row mode: copy neighbor labels into a reused scratch buffer, sort,
@@ -45,76 +41,40 @@ object LabelPropagationArray {
       edges: DataFrame,
       nVertices: Long,
       maxIter: Int = 20): LabelPropagation.Result = {
-    require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
-    val n = nVertices.toInt
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val (labels, metrics) = BlockIterate.labels(spark, edges, nVertices, maxIter,
+      "BroadcastArrayMode")(modeRows)
+    LabelPropagation.Result(labels, metrics)
+  }
 
-    val (blocks, dstsByPart, nEdges) = CsrBlocks.build(edges, nVertices, nParts)
-
-    val sc = spark.sparkContext
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
-    var x = Array.tabulate(n)(_.toLong) // label = own id
-    var iter = 0
-    var changed = Long.MaxValue
-    while (iter < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
-      val bc = sc.broadcast(packL(x))
-      val bcId = bc.id
-      val slices = blocks.map { b =>
-        val xs = LabelCache.longs(bcId, bc.value)
-        val out = new Array[Long](b.dsts.length)
-        var scratch = new Array[Long](1024)
-        var ch = 0L
-        var r0 = 0
-        while (r0 < b.dsts.length) {
-          val own = xs(b.dsts(r0).toInt)
-          val beg = b.rowPtr(r0); val end = b.rowPtr(r0 + 1)
-          val deg = end - beg
-          if (scratch.length < deg)
-            scratch = new Array[Long](Integer.highestOneBit(deg - 1) << 1)
-          var i = beg
-          while (i < end) { scratch(i - beg) = xs(b.colInd(i)); i += 1 }
-          java.util.Arrays.sort(scratch, 0, deg)
-          // run-length scan, first strict max wins -> smallest label on ties
-          var best = own; var bestCnt = 0
-          var j = 0
-          while (j < deg) {
-            var k = j + 1
-            while (k < deg && scratch(k) == scratch(j)) k += 1
-            if (k - j > bestCnt) { bestCnt = k - j; best = scratch(j) }
-            j = k
-          }
-          out(r0) = best
-          if (best != own) ch += 1
-          r0 += 1
-        }
-        (packL(out), ch)
-      }.collect()
-      bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-      val next = x.clone() // uncovered (isolated) vertices keep their label
-      // disjoint per-block dst sets -> racefree parallel plain assign
-      java.util.stream.IntStream.range(0, slices.length).parallel().forEach { pi =>
-        val ids = dstsByPart(pi); val vs = unpackL(slices(pi)._1)
-        var i = 0
-        while (i < ids.length) { next(ids(i).toInt) = vs(i); i += 1 }
+  /** label'[v] = most frequent neighbor label, smallest on ties, own label
+    * without neighbors; partial = #changed. */
+  private val modeRows: Kernel[Array[Long]] = (b, xs) => {
+    val out = new Array[Long](b.rows)
+    var scratch = new Array[Long](1024)
+    var ch = 0L
+    var r = 0
+    while (r < out.length) {
+      val own = xs(b.base + r)
+      val beg = b.rowPtr(r); val end = b.rowPtr(r + 1)
+      val deg = end - beg
+      if (scratch.length < deg)
+        scratch = new Array[Long](Integer.highestOneBit(deg - 1) << 1)
+      var i = beg
+      while (i < end) { scratch(i - beg) = xs(b.colInd(i)); i += 1 }
+      java.util.Arrays.sort(scratch, 0, deg)
+      // run-length scan, first strict max wins -> smallest label on ties
+      var best = own; var bestCnt = 0
+      var j = 0
+      while (j < deg) {
+        var k = j + 1
+        while (k < deg && scratch(k) == scratch(j)) k += 1
+        if (k - j > bestCnt) { bestCnt = k - j; best = scratch(j) }
+        j = k
       }
-      changed = slices.foldLeft(0L)(_ + _._2)
-      x = next
-      val secs = (System.nanoTime() - t0) / 1e9
-      metrics += IterationMetrics(iter + 1, nEdges, secs,
-        if (secs > 0) nEdges / secs else 0.0, changed.toDouble,
-        "BroadcastArrayMode")
-      iter += 1
+      out(r) = best
+      if (best != own) ch += 1
+      r += 1
     }
-    blocks.unpersist()
-
-    // driver-boxing-free handoff (the PageRankArray.stateDf pattern)
-    import spark.implicits._
-    val bc = sc.broadcast(packL(x))
-    val labels = spark.range(n.toLong).as[Long].mapPartitions { it =>
-      val bb = ByteBuffer.wrap(bc.value).order(ByteOrder.LITTLE_ENDIAN)
-      it.map(i => (i, bb.getLong(8 * i.toInt)))
-    }.toDF("id", "label")
-    LabelPropagation.Result(labels, metrics.toSeq)
+    (out, ch.toDouble)
   }
 }

@@ -2,10 +2,9 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import java.nio.{ByteBuffer, ByteOrder}
-import graft.exec.IterConfig
-import graft.model.IterationMetrics
+import graft.exec.{BlockIterate, IterConfig, StateCodec}
+import graft.exec.BlockIterate.Kernel
+import graft.graph.RangedCsr
 
 /** PageRank over per-partition FLAT CSR blocks with a broadcast primitive-
   * array state — the reference's K6 broadcast-gather kernel
@@ -23,98 +22,33 @@ import graft.model.IterationMetrics
   * array indexed by the dense vertex id; the inner loop is a multiply-add
   * stream at ~ns/edge.
   *
-  * PER-ITERATION PROTOCOL (round 3: the measured bound was O(V) driver
-  * serde, not the kernel — VERDICT r02 "What's wrong #1"):
-  *   1. driver computes the dangling mass and the additive `base` term from
-  *      the CURRENT state (an O(#dangling) loop, zero for link graphs with
-  *      full out-degree), packs the state into a native-order byte[] (a
-  *      bulk memcpy — serializer-independent, so no Kryo/JavaSerializer
-  *      float-by-float loop), and torrent-broadcasts the bytes;
-  *   2. each task unpacks the state ONCE PER EXECUTOR per iteration (a
-  *      keyed cache — 32 local tasks share one 16 MB unpack), runs the CSR
-  *      gather, applies base + damping INSIDE the task, computes its
-  *      partial convergence delta against the old state, and returns a
-  *      byte-packed slice of the NEXT state (≤ V/P values, under the 1 MB
-  *      direct-task-result fast path at bench shapes);
-  *   3. the driver scatters the slices (disjoint dst SETS: dsts are hash-
-  *      partitioned across Spark partitions and each partition builds ONE
-  *      block, so every dst lives in exactly one
-  *      block — the scatter runs in parallel) and folds in the delta
-  *      contributions of in-degree-0 vertices.
-  * Driver work per iteration is two O(V) memcpys + an O(V/P)-parallel
-  * scatter; everything O(E) and every reduction is executor-side.
+  * The iteration protocol is [[graft.exec.BlockIterate]]'s. Per iteration
+  * the driver computes the dangling mass and the additive `base` term from
+  * the CURRENT state (an O(#dangling) loop, zero for link graphs with full
+  * out-degree); each block's row kernel applies base + damping INSIDE the
+  * task and returns its partial convergence delta against the old state.
   *
-  * `floatPrecision = true` switches the whole pipeline (CSR values, state,
-  * broadcast, slices) to Float — the REFERENCE'S OWN precision
-  * (`graphCOO.hpp:20-21` uses float) — halving serde and kernel memory
-  * traffic; use it for baseline-parity lanes, keep doubles (default) for
-  * engine results (north rule compares allclose 1e-6 in double).
+  * `floatPrecision = true` moves CSR values, the broadcast state, the
+  * kernel and the slices to Float (the [[graft.exec.StateCodec.F32]]
+  * codec) — the REFERENCE'S OWN precision (`graphCOO.hpp:20-21` uses
+  * float) — halving serde and kernel memory traffic; use it for
+  * baseline-parity lanes, keep doubles (default) for engine results (north
+  * rule compares allclose 1e-6 in double). The driver state, dangling mass
+  * and `base` stay double either way.
   *
   * Scope: the BROADCAST REGIME ONLY — V must fit in executor+driver memory
   * (~8 B/vertex, fine to ~10^8 locally). Beyond that, the DataFrame
   * ShuffleJoin path in [[PageRank]] is the 10^12-vertex design; this is the
-  * small-V accelerator, selected explicitly (`bucketed`/strategy knobs in
-  * the bench harness). Measured crossover context on this box (r02): DF
+  * small-V accelerator, selected by [[graft.exec.GatherStrategy.Auto]]
+  * (4M-vertex switch) or explicitly. Measured crossover context (r02): DF
   * broadcast rebuilds the hashed relation per iteration (N→4N efficiency
   * 0.28 but 4.45 s/iter at 2^21) vs ShuffleJoin (0.84 efficiency, 16.9
-  * s/iter) — hence [[graft.exec.GatherStrategy.Auto]]'s 4M-vertex switch.
+  * s/iter).
   */
 object PageRankArray {
 
-  /** One partition's in-adjacency as flat CSR: row r gathers from
-    * colInd[rowPtr(r) until rowPtr(r+1)] with weights colVal (double) or
-    * colValF (float) — exactly one of the two is populated. */
-  final case class CsrBlock(
-      dsts: Array[Long],
-      rowPtr: Array[Int],
-      colInd: Array[Int],
-      colVal: Array[Double],
-      colValF: Array[Float])
-
-  // ---- byte packing (bulk copies, serializer-independent). Pinned
-  // LITTLE_ENDIAN, not nativeOrder: the packed state crosses JVM boundaries
-  // (driver <-> executors), so the wire format must not depend on the
-  // architecture either end happens to run on. On x86/ARM64 LE == native,
-  // so the pin costs nothing on the hot path. ----
-
-  private[graft] def packD(x: Array[Double]): Array[Byte] = {
-    val b = new Array[Byte](x.length * 8)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().put(x)
-    b
-  }
-  private[graft] def unpackD(b: Array[Byte]): Array[Double] = {
-    val x = new Array[Double](b.length / 8)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(x)
-    x
-  }
-  private[graft] def packF(x: Array[Float]): Array[Byte] = {
-    val b = new Array[Byte](x.length * 4)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer().put(x)
-    b
-  }
-  private[graft] def unpackF(b: Array[Byte]): Array[Float] = {
-    val x = new Array[Float](b.length / 4)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer().get(x)
-    x
-  }
-
-  /** Once-per-executor-per-iteration unpack of the broadcast state: all
-    * tasks of one iteration share a single unpacked array (keyed by the
-    * broadcast id, which is unique per iteration). A stale or foreign key
-    * just re-unpacks — correctness never depends on a hit. */
-  private object StateCache {
-    private var key = -1L
-    private var f: Array[Float] = _
-    private var d: Array[Double] = _
-    def floats(id: Long, bytes: Array[Byte]): Array[Float] = synchronized {
-      if (key != id || f == null) { f = unpackF(bytes); d = null; key = id }
-      f
-    }
-    def doubles(id: Long, bytes: Array[Byte]): Array[Double] = synchronized {
-      if (key != id || d == null) { d = unpackD(bytes); f = null; key = id }
-      d
-    }
-  }
+  /** A double state in the F64 wire format (pre-packed SpMV bench inputs). */
+  private[graft] def packD(x: Array[Double]): Array[Byte] = StateCodec.F64.pack(x)
 
   def run(
       spark: SparkSession,
@@ -126,11 +60,8 @@ object PageRankArray {
       floatPrecision: Boolean = false): PageRank.Result = {
     require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
     val n = nVertices.toInt
-    import spark.implicits._
 
-    // one-time CSR build (in-neighbor orientation; reference C1+C2), cached
-    // DESERIALIZED as one flat block per partition: iterations touch
-    // primitive arrays directly — no columnar decode, no object-per-vertex.
+    // one-time CSR build (in-neighbor orientation; reference C1+C2).
     //
     // r06 fast path (guide §2.3/§3.1; measured with graft.bench.BuildProbe,
     // before/after in OPTIMIZATION_r06.md): the normalize JOIN is gone —
@@ -169,220 +100,73 @@ object PageRankArray {
       while (i < ids.length) { wtotArr(ids(i)) = ws(i); i += 1 }
     }
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val useFloat = floatPrecision
     val wtotBc = spark.sparkContext.broadcast(wtotArr)
     val sel = edges.select(col("dst").cast("long"), col("src").cast("long"),
       (if (weighted) col("w") else lit(1.0)).cast("double"))
-    val blocks = graft.graph.RangedCsr
-      .buildWeighted(sel, n, nParts, useFloat, wtotBc)
-      .persist(StorageLevel.MEMORY_ONLY)
-    // truncate lineage: without this every per-iteration job re-serializes
-    // the whole upstream Catalyst/RDD graph into its task binary (measured
-    // ~200 ms/iteration at 403M edges — 3x the kernel+scheduling floor)
-    blocks.localCheckpoint()
-    // per-partition dst ids are closed-form under the range contract
-    // (partition p owns [p*chunk, p*chunk+len)): no collect job
-    val dstsByPart: Array[Array[Long]] = graft.graph.RangedCsr.rangeIds(n, nParts)
-    // edge count off the blocks — the one action that materializes the
-    // cache + checkpoint. Counts normalized edges (out-edges of wtot>0
-    // srcs) — exactly the edges each iteration processes.
-    val nEdges = blocks.map(_.colInd.length.toLong).fold(0L)(_ + _)
+    val blocks = BlockIterate.materialize(
+      RangedCsr.buildWeighted(sel, n, nParts, floatPrecision, wtotBc), n)
+    wtotBc.destroy() // the cached blocks hold the normalized values
 
     // dangling vertices (no positive-weight out-edge): their mass re-enters
     // uniformly each iteration; wtotArr(v) == 0.0 IS "no positive out-weight"
-    // (the aggregate only populated wtot > 0 entries). O(#dangling) per
-    // iteration driver loop.
-    val danglingIds: Array[Int] = {
-      val b = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var v = 0
-      while (v < n) { if (wtotArr(v) <= 0) b += v; v += 1 }
-      b.toArray
-    }
-    // full-range blocks cover EVERY vertex (zero-in-degree rows compute
-    // base + d*0 = base in-task, matching the old driver-side fill): the
-    // uncovered set is empty by construction.
-    val uncoveredIds: Array[Int] = Array.emptyIntArray
-
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
-    val x: Array[Double] =
-      if (useFloat) {
-        val xf = iterateF(spark, blocks, dstsByPart, danglingIds, uncoveredIds,
-          n, nVertices, damping, cfg, metrics, nEdges)
-        val xd = new Array[Double](n)
-        var i = 0
-        while (i < n) { xd(i) = xf(i).toDouble; i += 1 }
-        xd
-      } else {
-        iterateD(spark, blocks, dstsByPart, danglingIds, uncoveredIds,
-          n, nVertices, damping, cfg, metrics, nEdges)
-      }
-    blocks.unpersist()
-    PageRank.Result(stateDf(spark, x), metrics.toSeq,
-      graft.exec.GatherStrategy.BroadcastState)
-  }
-
-  /** Double-precision iteration loop (engine default). */
-  private def iterateD(
-      spark: SparkSession,
-      blocks: org.apache.spark.rdd.RDD[CsrBlock],
-      dstsByPart: Array[Array[Long]],
-      danglingIds: Array[Int],
-      uncoveredIds: Array[Int],
-      n: Int, nVertices: Long, damping: Double, cfg: IterConfig,
-      metrics: scala.collection.mutable.ArrayBuffer[IterationMetrics],
-      nEdges: Long): Array[Double] = {
-    val sc = spark.sparkContext
+    // (the aggregate only populated wtot > 0 entries).
+    val danglingIds = Array.range(0, n).filter(v => wtotArr(v) <= 0)
     val l1 = cfg.norm == "l1" // scale-free convergence (see IterConfig)
-    var x = Array.fill(n)(1.0 / nVertices)
-    var next = new Array[Double](n)
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      var dm = 0.0
-      var di = 0
-      while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
-      val base = (1.0 - damping) / nVertices + damping * dm / nVertices
-      val bc = sc.broadcast(packD(x))
-      val bcId = bc.id
-      val d = damping
-      val slices = blocks.map { b =>
-        val xs = StateCache.doubles(bcId, bc.value)
-        val out = new Array[Double](b.dsts.length)
-        var pd = 0.0
-        var r0 = 0
-        while (r0 < b.dsts.length) {
-          var s = 0.0
-          var i = b.rowPtr(r0); val end = b.rowPtr(r0 + 1)
-          while (i < end) { s += b.colVal(i) * xs(b.colInd(i)); i += 1 }
-          val nv = base + d * s
-          out(r0) = nv
-          val dd = math.abs(nv - xs(b.dsts(r0).toInt))
-          if (l1) pd += dd else if (dd > pd) pd = dd
-          r0 += 1
-        }
-        (packD(out), pd)
-      }.collect()
-      bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-      java.util.Arrays.fill(next, base)
-      val nx = next
-      // every dst lives in exactly ONE block (hash repartition on dst,
-      // one block per partition) -> blocks write disjoint index
-      // sets and the scatter is a racefree parallel plain assign
-      java.util.stream.IntStream.range(0, slices.length).parallel().forEach { pi =>
-        val ids = dstsByPart(pi); val vs = unpackD(slices(pi)._1)
-        var i = 0
-        while (i < ids.length) { nx(ids(i).toInt) = vs(i); i += 1 }
+
+    def iterate[E <: AnyRef](codec: StateCodec[Array[Double], E], init: Double,
+        strategy: String)(rows: (Double, Double, Boolean) => Kernel[E]) =
+      BlockIterate.run(spark, blocks, codec, Array.fill(n)(init), cfg, strategy, "x") { x =>
+        var dm = 0.0
+        var di = 0
+        while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
+        rows((1.0 - damping) / nVertices + damping * dm / nVertices, damping, l1)
       }
-      delta = if (l1) slices.map(_._2).sum else slices.foldLeft(0.0)((a, s) => math.max(a, s._2))
-      var ui = 0
-      while (ui < uncoveredIds.length) {
-        val dd = math.abs(base - x(uncoveredIds(ui)))
-        if (l1) delta += dd else if (dd > delta) delta = dd
-        ui += 1
-      }
-      val tmp = x; x = next; next = tmp
-      val secs = (System.nanoTime() - t0) / 1e9
-      metrics += IterationMetrics(iter + 1, nEdges, secs,
-        if (secs > 0) nEdges / secs else 0.0, delta, "BroadcastArray")
-      iter += 1
-      cfg.snapshotDir.foreach { dir =>
-        if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol)
-          graft.exec.Iterate.snapshot(dir, stateDf(spark, x), iter, delta)
-      }
-    }
-    x
+    val (state, metrics) =
+      if (floatPrecision)
+        iterate(StateCodec.F32, (1.0 / nVertices).toFloat, "BroadcastArrayF32")(rowsF32)
+      else iterate(StateCodec.F64, 1.0 / nVertices, "BroadcastArray")(rowsF64)
+    PageRank.Result(state, metrics, graft.exec.GatherStrategy.BroadcastState)
   }
 
-  /** Float iteration loop — the reference's own precision; halves the
-    * broadcast/slice serde and the kernel's value+state memory traffic. */
-  private def iterateF(
-      spark: SparkSession,
-      blocks: org.apache.spark.rdd.RDD[CsrBlock],
-      dstsByPart: Array[Array[Long]],
-      danglingIds: Array[Int],
-      uncoveredIds: Array[Int],
-      n: Int, nVertices: Long, damping: Double, cfg: IterConfig,
-      metrics: scala.collection.mutable.ArrayBuffer[IterationMetrics],
-      nEdges: Long): Array[Float] = {
-    val sc = spark.sparkContext
-    val l1 = cfg.norm == "l1"
-    var x = Array.fill(n)((1.0 / nVertices).toFloat)
-    var next = new Array[Float](n)
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      var dm = 0.0
-      var di = 0
-      while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
-      val base = ((1.0 - damping) / nVertices + damping * dm / nVertices).toFloat
-      val bc = sc.broadcast(packF(x))
-      val bcId = bc.id
-      val d = damping.toFloat
-      val slices = blocks.map { b =>
-        val xs = StateCache.floats(bcId, bc.value)
-        val out = new Array[Float](b.dsts.length)
-        var pd = 0.0
-        var r0 = 0
-        while (r0 < b.dsts.length) {
-          var s = 0.0f
-          var i = b.rowPtr(r0); val end = b.rowPtr(r0 + 1)
-          while (i < end) { s += b.colValF(i) * xs(b.colInd(i)); i += 1 }
-          val nv = base + d * s
-          out(r0) = nv
-          val dd = math.abs((nv - xs(b.dsts(r0).toInt)).toDouble)
-          if (l1) pd += dd else if (dd > pd) pd = dd
-          r0 += 1
-        }
-        (packF(out), pd)
-      }.collect()
-      bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-      java.util.Arrays.fill(next, base)
-      val nx = next
-      // disjoint per-block dst sets (see iterateD) -> parallel plain assign
-      java.util.stream.IntStream.range(0, slices.length).parallel().forEach { pi =>
-        val ids = dstsByPart(pi); val vs = unpackF(slices(pi)._1)
-        var i = 0
-        while (i < ids.length) { nx(ids(i).toInt) = vs(i); i += 1 }
+  /** Row kernel: x'[v] = base + d * Σ val·x[u] over v's in-edges, with the
+    * per-block L1 (sum) or L∞ (max) delta against x[v]. */
+  private def rowsF64(base: Double, d: Double, l1: Boolean): Kernel[Array[Double]] =
+    (b, xs) => {
+      val out = new Array[Double](b.rows)
+      var pd = 0.0
+      var r = 0
+      while (r < out.length) {
+        var s = 0.0
+        var i = b.rowPtr(r); val end = b.rowPtr(r + 1)
+        while (i < end) { s += b.colVal(i) * xs(b.colInd(i)); i += 1 }
+        val nv = base + d * s
+        out(r) = nv
+        val dd = math.abs(nv - xs(b.base + r))
+        if (l1) pd += dd else if (dd > pd) pd = dd
+        r += 1
       }
-      delta = if (l1) slices.map(_._2).sum else slices.foldLeft(0.0)((a, s) => math.max(a, s._2))
-      var ui = 0
-      while (ui < uncoveredIds.length) {
-        val dd = math.abs((base - x(uncoveredIds(ui))).toDouble)
-        if (l1) delta += dd else if (dd > delta) delta = dd
-        ui += 1
-      }
-      val tmp = x; x = next; next = tmp
-      val secs = (System.nanoTime() - t0) / 1e9
-      metrics += IterationMetrics(iter + 1, nEdges, secs,
-        if (secs > 0) nEdges / secs else 0.0, delta, "BroadcastArrayF32")
-      iter += 1
-      cfg.snapshotDir.foreach { dir =>
-        if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol) {
-          val xd = new Array[Double](n)
-          var i = 0
-          while (i < n) { xd(i) = x(i).toDouble; i += 1 }
-          graft.exec.Iterate.snapshot(dir, stateDf(spark, xd), iter, delta)
-        }
-      }
+      (out, pd)
     }
-    x
-  }
 
-  /** Result handoff WITHOUT driver-side boxing: the old
-    * `parallelize(x.zipWithIndex)` allocated O(V) Tuple2 + boxed Double on
-    * the driver heap — a memory spike at the kernel's ~10^8-vertex ceiling
-    * (VERDICT r03 "What's wrong #3"). Here the state ships once as the
-    * already-packed byte[] (torrent broadcast), and each `range` partition
-    * reads its values straight out of the buffer — O(V/P) rows per task,
-    * zero driver-side per-vertex allocation. */
-  private def stateDf(spark: SparkSession, x: Array[Double]): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(packD(x))
-    spark.range(x.length.toLong).as[Long].mapPartitions { it =>
-      val bb = ByteBuffer.wrap(bc.value).order(ByteOrder.LITTLE_ENDIAN)
-      it.map(i => (i, bb.getDouble(8 * i.toInt)))
-    }.toDF("id", "x")
+  /** [[rowsF64]] in float arithmetic; the delta is accumulated in double. */
+  private def rowsF32(base: Double, d: Double, l1: Boolean): Kernel[Array[Float]] = {
+    val bf = base.toFloat
+    val df = d.toFloat
+    (b, xs) => {
+      val out = new Array[Float](b.rows)
+      var pd = 0.0
+      var r = 0
+      while (r < out.length) {
+        var s = 0.0f
+        var i = b.rowPtr(r); val end = b.rowPtr(r + 1)
+        while (i < end) { s += b.colValF(i) * xs(b.colInd(i)); i += 1 }
+        val nv = bf + df * s
+        out(r) = nv
+        val dd = math.abs((nv - xs(b.base + r)).toDouble)
+        if (l1) pd += dd else if (dd > pd) pd = dd
+        r += 1
+      }
+      (out, pd)
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.exec.{StateCache, StateCodec}
 
 /** The reference's NON-CSR matrix layouts, re-expressed on the same
   * per-partition flat-block tier as [[PageRankArray]]:
@@ -120,100 +121,66 @@ object SpmvLayouts {
     // (the old LongLongMap probe per edge). Present rows only, as before:
     // pad_ratio semantics (slots / nnz over rows that EXIST) unchanged.
     import graft.graph.RangedCsr
-    val chunk = RangedCsr.chunkFor(nVertices.toInt, nParts)
-    val blocks = RangedCsr.blobRdd(
+    val blocks = RangedCsr.mapRanges(RangedCsr.blobRdd(
       edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("w").cast("double")),
-      nVertices.toInt, nParts, RangedCsr.ValD)
-      .mapPartitions({ it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val base = pid.toLong * chunk
-        if (base >= n) Iterator.empty
-        else {
-          val len = math.min(chunk.toLong, n - base).toInt
-          val (blobList, m) = RangedCsr.gatherBlobs(it)
-          if (m == 0) Iterator.empty
-          else {
-            val tmpK = new Array[Int](1 << 17)
-            val tmpP = new Array[Int](1 << 17)
-            val tmpD = new Array[Double](1 << 17)
-            // pass 1: per-src histogram over the local range
-            val counts = new Array[Int](len)
-            var bi = 0
-            while (bi < blobList.length) {
-              val b = blobList(bi)
-              val bm = RangedCsr.blobCount(b)
-              RangedCsr.blobKeys(b, bm, tmpK)
-              var i = 0
-              while (i < bm) { counts(tmpK(i) - base.toInt) += 1; i += 1 }
-              bi += 1
-            }
-            // present-row compaction: dense row index per src WITH edges
-            val denseIdx = new Array[Int](len)
-            var nRows = 0
-            var r = 0
-            while (r < len) {
-              if (counts(r) > 0) { denseIdx(r) = nRows; nRows += 1 }
-              else denseIdx(r) = -1
-              r += 1
-            }
-            val rows = new Array[Long](nRows)
-            r = 0
-            while (r < len) {
-              if (denseIdx(r) >= 0) rows(denseIdx(r)) = base + r
-              r += 1
-            }
-            // pass 2: scatter into the padded/dense arrays
-            if (isDense) {
-              val dense = new Array[Double](nRows * w)
-              bi = 0
-              while (bi < blobList.length) {
-                val b = blobList(bi)
-                val bm = RangedCsr.blobCount(b)
-                RangedCsr.blobKeys(b, bm, tmpK)
-                RangedCsr.blobPayloads(b, bm, tmpP)
-                RangedCsr.blobValsD(b, bm, tmpD)
-                var i = 0
-                while (i < bm) {
-                  // duplicate edges ACCUMULATE — reference += semantics
-                  dense(denseIdx(tmpK(i) - base.toInt) * w + tmpP(i)) += tmpD(i)
-                  i += 1
-                }
-                bi += 1
-              }
-              Iterator.single(Block(rows, w, m.toLong, Array.emptyIntArray,
-                Array.emptyDoubleArray, dense))
-            } else {
-              // padding = (col 0, w 0.0): 0.0 * x(0) contributes nothing, so
-              // the constant-trip kernel needs no bounds logic (reference
-              // pads the same way, graphCOO.hpp:171-178)
-              val colInd = new Array[Int](nRows * w)
-              val colVal = new Array[Double](nRows * w)
-              val cursor = new Array[Int](nRows)
-              bi = 0
-              while (bi < blobList.length) {
-                val b = blobList(bi)
-                val bm = RangedCsr.blobCount(b)
-                RangedCsr.blobKeys(b, bm, tmpK)
-                RangedCsr.blobPayloads(b, bm, tmpP)
-                RangedCsr.blobValsD(b, bm, tmpD)
-                var i = 0
-                while (i < bm) {
-                  val ri = denseIdx(tmpK(i) - base.toInt)
-                  val slot = cursor(ri); cursor(ri) = slot + 1
-                  val pos = if (transposed) slot * nRows + ri else ri * w + slot
-                  colInd(pos) = tmpP(i)
-                  colVal(pos) = tmpD(i)
-                  i += 1
-                }
-                bi += 1
-              }
-              Iterator.single(Block(rows, w, m.toLong, colInd, colVal,
-                Array.emptyDoubleArray))
-            }
-          }
+      n, nParts, RangedCsr.ValD), n, nParts) { (base, len, blobList, m) =>
+      if (m == 0) Iterator.empty
+      else {
+        val tmpK = new Array[Int](1 << 17)
+        val tmpP = new Array[Int](1 << 17)
+        val tmpD = new Array[Double](1 << 17)
+        val counts = RangedCsr.rowCounts(blobList, base, len)
+        // present-row compaction: dense row index per src WITH edges
+        val denseIdx = new Array[Int](len)
+        var nRows = 0
+        var r = 0
+        while (r < len) {
+          if (counts(r) > 0) { denseIdx(r) = nRows; nRows += 1 }
+          else denseIdx(r) = -1
+          r += 1
         }
-      }, preservesPartitioning = true).persist(StorageLevel.MEMORY_ONLY)
+        val rows = new Array[Long](nRows)
+        r = 0
+        while (r < len) {
+          if (denseIdx(r) >= 0) rows(denseIdx(r)) = base + r
+          r += 1
+        }
+        // pass 2: scatter into the padded/dense arrays. ELLPACK padding =
+        // (col 0, w 0.0): 0.0 * x(0) contributes nothing, so the
+        // constant-trip kernel needs no bounds logic (reference pads the
+        // same way, graphCOO.hpp:171-178)
+        val slots = nRows * w
+        val dense = if (isDense) new Array[Double](slots) else Array.emptyDoubleArray
+        val colInd = if (isDense) Array.emptyIntArray else new Array[Int](slots)
+        val colVal = if (isDense) Array.emptyDoubleArray else new Array[Double](slots)
+        val cursor = new Array[Int](nRows)
+        var bi = 0
+        while (bi < blobList.length) {
+          val b = blobList(bi)
+          val bm = RangedCsr.blobCount(b)
+          RangedCsr.blobKeys(b, bm, tmpK)
+          RangedCsr.blobPayloads(b, bm, tmpP)
+          RangedCsr.blobValsD(b, bm, tmpD)
+          var i = 0
+          if (isDense) while (i < bm) {
+            // duplicate edges ACCUMULATE — reference += semantics
+            dense(denseIdx(tmpK(i) - base) * w + tmpP(i)) += tmpD(i)
+            i += 1
+          }
+          else while (i < bm) {
+            val ri = denseIdx(tmpK(i) - base)
+            val slot = cursor(ri); cursor(ri) = slot + 1
+            val pos = if (transposed) slot * nRows + ri else ri * w + slot
+            colInd(pos) = tmpP(i)
+            colVal(pos) = tmpD(i)
+            i += 1
+          }
+          bi += 1
+        }
+        Iterator.single(Block(rows, w, m.toLong, colInd, colVal, dense))
+      }
+    }.persist(StorageLevel.MEMORY_ONLY)
     blocks.localCheckpoint() // truncate lineage (see PageRankArray)
     val (nnz, slots) = blocks
       .map(b => (b.nnz, b.rows.length.toLong * b.width))
@@ -224,8 +191,9 @@ object SpmvLayouts {
 
   /** One SpMV pass: flow[src] = Σ_{(src -> dst, w)} w * x[dst] — identical
     * semantics to [[SpMV]] (the K2 oracle), on the padded/dense kernels.
-    * State ships as ONE packed broadcast (same wire protocol as
-    * [[PageRankArray]]); each block computes its rows and emits (id, x). */
+    * State ships as ONE packed broadcast (the [[StateCodec.F64]] wire
+    * format, unpacked once per executor); each block computes its rows and
+    * emits (id, x). */
   def spmv(
       spark: SparkSession,
       built: Built,
@@ -237,7 +205,7 @@ object SpmvLayouts {
     state.select(col("id"), col("x"))
       .as[(Long, Double)].collect()
       .foreach { case (i, v) => xs(i.toInt) = v }
-    spmvPacked(spark, built, PageRankArray.packD(xs), vertices)
+    spmvPacked(spark, built, StateCodec.F64.pack(xs), vertices)
   }
 
   /** Same pass, state pre-packed by the caller — the multi-pass bench lanes
@@ -254,7 +222,7 @@ object SpmvLayouts {
     val transposed = built.layout == EllpackT
     val flowRdd = built.blocks.mapPartitions { it =>
       it.flatMap { b =>
-        val x = PageRankArray.unpackD(bc.value)
+        val x = StateCache.get(bc, StateCodec.F64)
         val nRows = b.rows.length
         val out = new Array[Double](nRows)
         if (isDense) {

@@ -35,8 +35,8 @@ import graft.model.IterationMetrics
   *   just-materialized in-memory state: partial agg per partition + a 1-row
   *   final — a job-floor-priced action, vs r04's `dist` which re-shuffled
   *   and hash-joined old-vs-new state every iteration (VERDICT r04 #1: the
-  *   measured serial term limiting N->4N scaling). A step that emits only
-  *   (id, x) falls back to the legacy `dist` join.
+  *   measured serial term limiting N->4N scaling). Every step must emit
+  *   x_old.
   *   (First fused design used a task-side accumulator inside a typed map to
   *   make the iteration literally one job; RETIRED after N->4N legs showed
   *   the object-serde boundary erases the aggregate's hash partitioning —
@@ -61,30 +61,6 @@ final case class LoopResult(state: DataFrame, metrics: Seq[IterationMetrics])
 
 object Iterate {
 
-  /** Distance between two (id, x) states: "linf" max-delta, "l1" sum, or
-    * "changed" exact changed-row count (computed as a sum of 0/1 longs —
-    * exact at any V and any label magnitude).
-    * Works for both double states (PageRank) and long label states (CC/LP):
-    * the aggregate is cast to double AFTER the sum/max, so long states keep
-    * exact integer arithmetic inside the aggregation.
-    * LEGACY fallback: steps that emit (id, x, x_old) never call this — the
-    * loop computes a join-free scan delta over the materialized state
-    * instead (see IterConfig / scanDelta). */
-  def dist(oldState: DataFrame, newState: DataFrame,
-      norm: String = "linf"): Double = {
-    val d = abs(col("x") - col("x_old"))
-    val agg = norm match {
-      case "l1"      => sum(d)
-      case "changed" => sum((col("x") =!= col("x_old")).cast("long"))
-      case _         => max(d)
-    }
-    val row = oldState.select(col("id"), col("x").as("x_old"))
-      .join(newState.hint("shuffle_hash"), "id")
-      .agg(agg.cast("double").as("d"))
-      .head()
-    if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-  }
-
   /** Join-free convergence delta over a MATERIALIZED (id, x, x_old) state:
     * an O(V) scan of the in-memory relation, partial-aggregated per
     * partition, 1-row final — no shuffle of data, no old-vs-new join, no
@@ -102,11 +78,10 @@ object Iterate {
     if (row.isNullAt(0)) 0.0 else row.getDouble(0)
   }
 
-  /** L-infinity distance between two (id, x) states. */
-  def lInf(oldState: DataFrame, newState: DataFrame): Double =
-    dist(oldState, newState, "linf")
-
-  /** Run `step` from `init` until lInf < tol or maxIter.
+  /** Run `step` from `init` until the `cfg.norm` delta drops below
+    * `cfg.tol` or `cfg.maxIter` iterations ran. `step` must emit
+    * (id, x, x_old): the delta is a join-free scan of x against x_old over
+    * the materialized state (see [[IterConfig]]).
     *
     * @param edgesPerIter edge count processed per iteration (for throughput)
     * @param startIter    first iteration number (used by resume)
@@ -165,17 +140,17 @@ object Iterate {
       val t0 = System.nanoTime()
       collector.resetMax()
       val steppedRaw = step(state, iter)
-      // FUSED convergence (VERDICT r04 #1): a step that emits (id, x, x_old)
+      // FUSED convergence (VERDICT r04 #1): the step's (id, x, x_old)
       // carries the old state THROUGH the materialization (one extra cached
       // column), and the delta is a join-free scan-agg of the materialized
       // result — no old-vs-new shuffle join, no object boundary (see the
       // IterConfig scaladoc for the retired accumulator design). tol <= 0
       // (fixed-iteration mode) just strips x_old before caching.
-      val fused = steppedRaw.columns.contains("x_old")
-      val keepOld = fused && cfg.tol > 0.0
+      require(steppedRaw.columns.contains("x_old"),
+        s"iteration step must emit (id, x, x_old), got ${steppedRaw.columns.mkString(", ")}")
+      val keepOld = cfg.tol > 0.0
       val stepped =
-        if (fused && !keepOld) steppedRaw.select(col("id"), col("x"))
-        else steppedRaw
+        if (keepOld) steppedRaw else steppedRaw.select(col("id"), col("x"))
       // localCheckpoint (not persist) every k iterations: persist alone
       // truncates recompute but NOT the logical plan, which otherwise grows
       // linearly and blows up the planner/AQE by iteration ~100.
@@ -183,29 +158,28 @@ object Iterate {
       // the checkpoint is LAZY — the scanDelta action below materializes
       // the cache AND performs the marked local checkpoint in its own job,
       // so a checkpoint-boundary iteration is ONE job, not two (eager
-      // checkpoint + delta scan). Fixed mode and the legacy dist path keep
-      // the eager checkpoint (their materializing action differs).
+      // checkpoint + delta scan). Fixed mode keeps the eager checkpoint (it
+      // has no delta action).
       val boundary = (iter + 1) % cfg.checkpointEvery == 0
       val next =
-        if (boundary) stepped.localCheckpoint(cfg.tol <= 0.0 || !keepOld)
+        if (boundary) stepped.localCheckpoint(!keepOld)
         else stepped.persist(StorageLevel.MEMORY_AND_DISK)
       // fixed-iteration mode (tol <= 0) never stops on delta: skip the
       // convergence action — one fewer job per iteration.
       delta =
-        if (cfg.tol <= 0.0) { // localCheckpoint(true) already materialized
+        if (!keepOld) { // localCheckpoint(true) already materialized
           if (!boundary) next.count()
           Double.MaxValue
-        } else if (keepOld) {
+        } else {
           // The scan-agg delta ITSELF materializes the persist-branch cache:
           // InMemoryRelation builds its full-row cached batches on the first
           // scan regardless of the projection on top, so a count() first
           // would pay a second O(V) job per non-checkpoint iteration for
           // nothing (measured serial term at CKPT=3: the count+scan pair
-          // was 2 jobs where 1 does both). Checkpoint-boundary iterations
-          // were already materialized eagerly by localCheckpoint(true);
-          // there the scan is the usual job-floor-priced cache pass.
+          // was 2 jobs where 1 does both). At a checkpoint boundary the
+          // same scan also performs the lazy local checkpoint.
           scanDelta(next, cfg.norm)
-        } else dist(state, next, cfg.norm) // action: materializes next
+        }
       val secs = (System.nanoTime() - t0) / 1e9
       // shuffle/skew deltas for this iteration's window (async listener:
       // values are exact once the bus drains; see TaskMetricsCollector)

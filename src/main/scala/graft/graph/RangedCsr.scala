@@ -4,9 +4,23 @@ import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import java.nio.{ByteBuffer, ByteOrder}
+import scala.reflect.ClassTag
 
-import graft.algo.PageRankArray.CsrBlock
+/** One key range's in-adjacency as flat CSR (the reference's
+  * rowPtr/colInd/val layout, `include/graphCSR.hpp:382-384`): local row r is
+  * vertex `base + r` and gathers from colInd[rowPtr(r) until rowPtr(r+1)]
+  * with weights colVal (double) or colValF (float). At most one of the two
+  * is populated; label blocks (CC/LP) carry neither. */
+final case class CsrBlock(
+    base: Int,
+    rowPtr: Array[Int],
+    colInd: Array[Int],
+    colVal: Array[Double],
+    colValF: Array[Float]) {
+  def rows: Int = rowPtr.length - 1
+}
 
 /** Packed-binary RANGE-partitioned CSR-block builder — the shared fast path
   * behind the broadcast-array kernels' one-time builds (r06 optimization).
@@ -33,32 +47,15 @@ import graft.algo.PageRankArray.CsrBlock
   * partitions). The 10^12-vertex design path (ShuffleJoin DataFrames) is
   * unaffected.
   *
-  * Block contract: partition p covers the FULL key range
-  * [p*chunk, min(n, (p+1)*chunk)) — every vertex in range gets a row (rows
-  * without edges have rowPtr(r) == rowPtr(r+1)), so the per-iteration
-  * slices are contiguous id runs and the kernels' "uncovered vertex"
-  * driver-side pass is empty. A row's value for an empty row is exactly
-  * what the old driver-side fill produced (base term resp. own label), so
-  * results are bit-identical to the hash-partitioned r05 build up to
-  * intra-row float summation order (all oracle outputs round to >= 6
-  * decimals before comparison).
+  * The blocks follow the range contract stated on
+  * [[graft.exec.BlockIterate]] (partition p builds the block of key range
+  * [p*chunk, min(n, (p+1)*chunk)), one row per key).
   */
 object RangedCsr {
 
   /** Keys-per-partition chunk: ceil(n / nParts). */
   def chunkFor(n: Int, nParts: Int): Int =
     math.max(1, ((n.toLong + nParts - 1) / nParts).toInt)
-
-  /** Contiguous per-partition id arrays for the driver-side slice scatter —
-    * closed form under the range contract, no collect job. */
-  def rangeIds(n: Int, nParts: Int): Array[Array[Long]] = {
-    val chunk = chunkFor(n, nParts)
-    Array.tabulate(nParts) { p =>
-      val base = p.toLong * chunk
-      val len = math.max(0L, math.min(chunk.toLong, n - base)).toInt
-      Array.tabulate(len)(i => base + i)
-    }
-  }
 
   final class IdPartitioner(n: Int) extends Partitioner {
     def numPartitions: Int = n
@@ -209,9 +206,8 @@ object RangedCsr {
   }
 
   /** Drain a reduce partition's blobs (kept as packed byte[]s — the same
-    * bytes the shuffle moved, no intermediate row materialization) and run
-    * the two-pass histogram+scatter against the partition's dense range. */
-  def gatherBlobs(it: Iterator[(Int, Array[Byte])])
+    * bytes the shuffle moved, no intermediate row materialization). */
+  private def gatherBlobs(it: Iterator[(Int, Array[Byte])])
       : (Array[Array[Byte]], Int) = {
     val list = new scala.collection.mutable.ArrayBuffer[Array[Byte]]
     var m = 0L
@@ -225,6 +221,80 @@ object RangedCsr {
     (list.toArray, m.toInt)
   }
 
+  /** Reduce side of the range contract: `f(base, len, blobs, m)` runs once
+    * per partition whose key range [base, base + len) is non-empty, over
+    * that partition's blobs and their total edge count m. */
+  private[graft] def mapRanges[T: ClassTag](
+      blobs: RDD[(Int, Array[Byte])], n: Int, nParts: Int)(
+      f: (Int, Int, Array[Array[Byte]], Int) => Iterator[T]): RDD[T] = {
+    val chunk = chunkFor(n, nParts)
+    blobs.mapPartitions({ it =>
+      val base = TaskContext.getPartitionId().toLong * chunk
+      if (base >= n) Iterator.empty
+      else {
+        val (list, m) = gatherBlobs(it)
+        f(base.toInt, math.min(chunk.toLong, n - base).toInt, list, m)
+      }
+    }, preservesPartitioning = true)
+  }
+
+  /** Pass 1 of the histogram grouping: edge count per row of the range
+    * [base, base + len). */
+  private[graft] def rowCounts(
+      blobs: Array[Array[Byte]], base: Int, len: Int): Array[Int] = {
+    val counts = new Array[Int](len)
+    val keys = new Array[Int](FlushEdges)
+    var bi = 0
+    while (bi < blobs.length) {
+      val bm = blobCount(blobs(bi))
+      blobKeys(blobs(bi), bm, keys)
+      var i = 0
+      while (i < bm) { counts(keys(i) - base) += 1; i += 1 }
+      bi += 1
+    }
+    counts
+  }
+
+  /** The two-pass CSR build of one range: histogram + rowPtr prefix sum,
+    * then one scatter of every edge into its row in blob order. The value
+    * mode is dispatched once per blob, so no edge loop branches on it. */
+  private def csrBlock(blobs: Array[Array[Byte]], m: Int, base: Int,
+      len: Int, valMode: Int): CsrBlock = {
+    val cur = rowCounts(blobs, base, len)
+    val rowPtr = new Array[Int](len + 1)
+    var r = 0
+    while (r < len) { rowPtr(r + 1) = rowPtr(r) + cur(r); r += 1 }
+    System.arraycopy(rowPtr, 0, cur, 0, len) // cur(r): next free slot of row r
+    def take(key: Int): Int = { val ri = key - base; val p = cur(ri); cur(ri) = p + 1; p }
+    val colInd = new Array[Int](m)
+    val colVal = if (valMode == ValD) new Array[Double](m) else Array.emptyDoubleArray
+    val colValF = if (valMode == ValF) new Array[Float](m) else Array.emptyFloatArray
+    val keys = new Array[Int](FlushEdges)
+    val pay = new Array[Int](FlushEdges)
+    val tmpD = if (valMode == ValD) new Array[Double](FlushEdges) else null
+    val tmpF = if (valMode == ValF) new Array[Float](FlushEdges) else null
+    var bi = 0
+    while (bi < blobs.length) {
+      val b = blobs(bi)
+      val bm = blobCount(b)
+      blobKeys(b, bm, keys)
+      blobPayloads(b, bm, pay)
+      var i = 0
+      valMode match {
+        case ValD =>
+          blobValsD(b, bm, tmpD)
+          while (i < bm) { val p = take(keys(i)); colInd(p) = pay(i); colVal(p) = tmpD(i); i += 1 }
+        case ValF =>
+          blobValsF(b, bm, tmpF)
+          while (i < bm) { val p = take(keys(i)); colInd(p) = pay(i); colValF(p) = tmpF(i); i += 1 }
+        case _ =>
+          while (i < bm) { colInd(take(keys(i))) = pay(i); i += 1 }
+      }
+      bi += 1
+    }
+    CsrBlock(base, rowPtr, colInd, colVal, colValF)
+  }
+
   /** In-neighbor CSR blocks with normalized values: key = dst, payload =
     * src, value = w / wtot(src) (rows whose src has wtot <= 0 dropped —
     * identical to the old `filter(wtot > 0)` + inner-join semantics).
@@ -233,140 +303,44 @@ object RangedCsr {
       edges: DataFrame, // pre-projected (dst LONG, src LONG, w DOUBLE)
       n: Int, nParts: Int, useFloat: Boolean,
       norm: Broadcast[Array[Double]]): RDD[CsrBlock] = {
-    val chunk = chunkFor(n, nParts)
     val valMode = if (useFloat) ValF else ValD
-    blobRdd(edges, n, nParts, valMode, norm, sym = false)
-      .mapPartitions({ it =>
-        val pid = TaskContext.getPartitionId()
-        val base = pid.toLong * chunk
-        if (base >= n) Iterator.empty
-        else {
-          val len = math.min(chunk.toLong, n - base).toInt
-          val (blobList, m) = gatherBlobs(it)
-          val counts = new Array[Int](len)
-          val tmpK = new Array[Int](FlushEdges)
-          val tmpP = new Array[Int](FlushEdges)
-          val tmpF = if (useFloat) new Array[Float](FlushEdges) else null
-          val tmpD = if (useFloat) null else new Array[Double](FlushEdges)
-          // pass 1: histogram of local row indices
-          var bi = 0
-          while (bi < blobList.length) {
-            val b = blobList(bi)
-            val bm = blobCount(b)
-            blobKeys(b, bm, tmpK)
-            var i = 0
-            while (i < bm) { counts(tmpK(i) - base.toInt) += 1; i += 1 }
-            bi += 1
-          }
-          val rowPtr = new Array[Int](len + 1)
-          var r = 0
-          while (r < len) { rowPtr(r + 1) = rowPtr(r) + counts(r); r += 1 }
-          val cur = java.util.Arrays.copyOf(rowPtr, len)
-          val colInd = new Array[Int](m)
-          val colVal = if (useFloat) Array.emptyDoubleArray else new Array[Double](m)
-          val colValF = if (useFloat) new Array[Float](m) else Array.emptyFloatArray
-          // pass 2: scatter
-          bi = 0
-          while (bi < blobList.length) {
-            val b = blobList(bi)
-            val bm = blobCount(b)
-            blobKeys(b, bm, tmpK)
-            blobPayloads(b, bm, tmpP)
-            if (useFloat) blobValsF(b, bm, tmpF) else blobValsD(b, bm, tmpD)
-            var i = 0
-            while (i < bm) {
-              val ri = tmpK(i) - base.toInt
-              val pos = cur(ri); cur(ri) = pos + 1
-              colInd(pos) = tmpP(i)
-              if (useFloat) colValF(pos) = tmpF(i) else colVal(pos) = tmpD(i)
-              i += 1
-            }
-            bi += 1
-          }
-          val dsts = new Array[Long](len)
-          r = 0
-          while (r < len) { dsts(r) = base + r; r += 1 }
-          Iterator.single(CsrBlock(dsts, rowPtr, colInd, colVal, colValF))
-        }
-      }, preservesPartitioning = true)
+    mapRanges(blobRdd(edges, n, nParts, valMode, norm), n, nParts) {
+      (base, len, blobs, m) => Iterator.single(csrBlock(blobs, m, base, len, valMode))
+    }
   }
 
-  /** Symmetric value-less CSR blocks (CC/LP): both orientations of every
-    * edge, self-loops dropped, per-row neighbor sets SORTED + DEDUPLICATED
-    * in place — identical neighbor sets to the old
-    * `symmetrize(...).distinct()` Catalyst plan (LP's mode counts depend on
-    * dedup; CC's min does not care). Caller persists/checkpoints. */
-  def buildSymmetric(
-      edges: DataFrame, // pre-projected (src LONG, dst LONG)
-      n: Int, nParts: Int): RDD[CsrBlock] = {
-    val chunk = chunkFor(n, nParts)
-    blobRdd(edges, n, nParts, ValNone, null, sym = true)
-      .mapPartitions({ it =>
-        val pid = TaskContext.getPartitionId()
-        val base = pid.toLong * chunk
-        if (base >= n) Iterator.empty
-        else {
-          val len = math.min(chunk.toLong, n - base).toInt
-          val (blobList, m) = gatherBlobs(it)
-          val counts = new Array[Int](len)
-          val tmpK = new Array[Int](FlushEdges)
-          val tmpP = new Array[Int](FlushEdges)
-          var bi = 0
-          while (bi < blobList.length) {
-            val b = blobList(bi)
-            val bm = blobCount(b)
-            blobKeys(b, bm, tmpK)
-            var i = 0
-            while (i < bm) { counts(tmpK(i) - base.toInt) += 1; i += 1 }
-            bi += 1
+  /** Symmetric value-less CSR blocks (CC/LP) over an (src, dst) edge table:
+    * both orientations of every edge, self-loops dropped, per-row neighbor
+    * sets SORTED + DEDUPLICATED in place — identical neighbor sets to the
+    * old `symmetrize(...).distinct()` Catalyst plan (LP's mode counts depend
+    * on dedup; CC's min does not care), with no distinct exchange and 8
+    * B/edge on the wire. Caller persists/checkpoints. */
+  def buildSymmetric(edges: DataFrame, n: Int, nParts: Int): RDD[CsrBlock] = {
+    val sel = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    mapRanges(blobRdd(sel, n, nParts, ValNone, sym = true), n, nParts) {
+      (base, len, blobs, m) =>
+        val b = csrBlock(blobs, m, base, len, ValNone)
+        val colInd = b.colInd
+        // per-row sort + in-place dedup, compacting as we go (w0 <= i, so
+        // the write never passes the read)
+        val rowPtr = new Array[Int](len + 1)
+        var w0 = 0
+        var r = 0
+        while (r < len) {
+          val beg = b.rowPtr(r); val end = b.rowPtr(r + 1)
+          java.util.Arrays.sort(colInd, beg, end)
+          val first = w0
+          var i = beg
+          while (i < end) {
+            val v = colInd(i)
+            if (w0 == first || v != colInd(w0 - 1)) { colInd(w0) = v; w0 += 1 }
+            i += 1
           }
-          val rowPtr = new Array[Int](len + 1)
-          var r = 0
-          while (r < len) { rowPtr(r + 1) = rowPtr(r) + counts(r); r += 1 }
-          val cur = java.util.Arrays.copyOf(rowPtr, len)
-          var colInd = new Array[Int](m)
-          bi = 0
-          while (bi < blobList.length) {
-            val b = blobList(bi)
-            val bm = blobCount(b)
-            blobKeys(b, bm, tmpK)
-            blobPayloads(b, bm, tmpP)
-            var i = 0
-            while (i < bm) {
-              val ri = tmpK(i) - base.toInt
-              val pos = cur(ri); cur(ri) = pos + 1
-              colInd(pos) = tmpP(i)
-              i += 1
-            }
-            bi += 1
-          }
-          // per-row sort + in-place dedup, compacting as we go (replaces
-          // the Catalyst-wide `.distinct()` shuffle with O(deg log deg)
-          // primitive work exactly where the row already lives)
-          val newRowPtr = new Array[Int](len + 1)
-          var w0 = 0
-          r = 0
-          while (r < len) {
-            val beg = rowPtr(r); val end = rowPtr(r + 1)
-            java.util.Arrays.sort(colInd, beg, end)
-            var i = beg
-            var prev = Integer.MIN_VALUE
-            var first = true
-            while (i < end) {
-              val v = colInd(i)
-              if (first || v != prev) { colInd(w0) = v; w0 += 1; prev = v; first = false }
-              i += 1
-            }
-            newRowPtr(r + 1) = w0
-            r += 1
-          }
-          val dsts = new Array[Long](len)
-          r = 0
-          while (r < len) { dsts(r) = base + r; r += 1 }
-          Iterator.single(CsrBlock(dsts, newRowPtr,
-            java.util.Arrays.copyOf(colInd, w0),
-            Array.emptyDoubleArray, Array.emptyFloatArray))
+          rowPtr(r + 1) = w0
+          r += 1
         }
-      }, preservesPartitioning = true)
+        Iterator.single(CsrBlock(base, rowPtr, java.util.Arrays.copyOf(colInd, w0),
+          Array.emptyDoubleArray, Array.emptyFloatArray))
+    }
   }
 }

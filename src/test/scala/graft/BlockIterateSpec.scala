@@ -1,0 +1,101 @@
+package graft
+
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+
+import graft.algo.{ConnectedComponents, ConnectedComponentsArray, LabelPropagation,
+  LabelPropagationArray, PageRank, PageRankArray}
+import graft.exec.{GatherStrategy, IterConfig, Iterate}
+import graft.sources.Synth
+
+/** The broadcast-array tiers on the shared block driver (BlockIterate):
+  *   - f32 and f64 PageRank agree and stop together;
+  *   - a snapshot written by the array tier reads back as the returned state;
+  *   - PageRank, CC and LP array tiers are row-identical to their DataFrame
+  *     tiers on shapes that stress the range contract and the builds.
+  */
+class BlockIterateSpec extends SparkSuite {
+  import spark.implicits._
+
+  private def scores(df: DataFrame): Array[(Long, Double)] =
+    df.orderBy("id").as[(Long, Double)].collect()
+  private def labels(df: DataFrame): Seq[(Long, Long)] =
+    df.orderBy("id").as[(Long, Long)].collect().toSeq
+
+  private def withPartitions[T](p: Int)(f: => T): T = {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
+  test("f32 PageRankArray == f64 within 1e-5 relative, same iteration count") {
+    val n = 4096L
+    val edges = Synth.band(spark, n, 8)
+    val cfg = IterConfig(tol = 1e-7, maxIter = 100)
+    val d = PageRankArray.run(spark, edges, n, cfg = cfg)
+    val f = PageRankArray.run(spark, edges, n, cfg = cfg, floatPrecision = true)
+    assert(d.metrics.map(_.strategy).distinct == Seq("BroadcastArray"))
+    assert(f.metrics.map(_.strategy).distinct == Seq("BroadcastArrayF32"))
+    assert(d.metrics.length == f.metrics.length && d.metrics.length < cfg.maxIter,
+      s"f64 ran ${d.metrics.length} iterations, f32 ${f.metrics.length}")
+    val xd = scores(d.state)
+    val xf = scores(f.state)
+    assert(xd.length == n && xf.length == n)
+    xd.zip(xf).foreach { case ((i, a), (j, b)) =>
+      assert(i == j && math.abs(a - b) <= 1e-5 * math.abs(a), s"vertex $i: $a vs $b")
+    }
+  }
+
+  test("PageRankArray snapshot read back by Iterate.resume equals the returned state") {
+    val n = 300L
+    val edges = Synth.blocks(spark, n, 50)
+    for (f32 <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft-array-snap").toString
+      val r = PageRankArray.run(spark, edges, n, floatPrecision = f32,
+        cfg = IterConfig(tol = 0.0, maxIter = 4, snapshotDir = Some(dir), snapshotEvery = 2))
+      val Some((snap, iter, _)) = Iterate.resume(spark, dir)
+      assert(iter == 4)
+      assert(scores(snap).toSeq == scores(r.state).toSeq, s"f32=$f32")
+    }
+  }
+
+  /** (name, n, partitions, edges): trailing empty blocks (partitions > V),
+    * V not divisible by the partition count, all-dangling (zero weights),
+    * no edges at all, isolated vertices, self-loops and duplicate edges. */
+  private def shapes: Seq[(String, Long, Int, DataFrame)] = Seq(
+    ("partitions > V, self-loops, duplicates, isolated", 10L, 16, Seq(
+      (2L, 1L, 0.5), (2L, 1L, 0.25), (1L, 0L, 1.0), (9L, 3L, 2.0),
+      (4L, 4L, 1.0), (5L, 5L, 1.0), (5L, 6L, 1.0), (6L, 5L, 1.0)
+    ).toDF("src", "dst", "w")),
+    ("V = 101 over 4 partitions, hub", 101L, 4, Synth.skew(spark, 101L)),
+    ("V = 97 over 7 partitions, scatter + duplicates", 97L, 7,
+      Synth.scatter(spark, 97L, 3).union(Synth.scatter(spark, 97L, 2))),
+    ("all-dangling: zero-weight ring", 9L, 4,
+      (0L until 9L).map(i => (i, (i + 1) % 9, 0.0)).toDF("src", "dst", "w")),
+    ("no edges", 5L, 3, Seq.empty[(Long, Long, Double)].toDF("src", "dst", "w")))
+
+  test("PageRank array tier == DataFrame tier on adversarial shapes") {
+    for ((name, n, p, edges) <- shapes) withPartitions(p) {
+      val cfg = IterConfig(tol = 0.0, maxIter = 6)
+      val arr = scores(PageRankArray.run(spark, edges, n, cfg = cfg).state)
+      val df = scores(PageRank.run(spark, edges, n, cfg = cfg,
+        strategy = GatherStrategy.ShuffleJoin).state)
+      assert(arr.map(_._1).toSeq == (0L until n), name)
+      assert(df.map(_._1).toSeq == (0L until n), name)
+      arr.zip(df).foreach { case ((i, a), (_, b)) =>
+        assert(math.abs(a - b) < 1e-12, s"$name, vertex $i: $a vs $b")
+      }
+    }
+  }
+
+  test("CC and LP array tiers == DataFrame tiers on adversarial shapes") {
+    for ((name, n, p, edges) <- shapes) withPartitions(p) {
+      val cc = labels(ConnectedComponentsArray.run(spark, edges, n).labels)
+      assert(cc == labels(ConnectedComponents.run(spark, edges, n).labels), s"CC: $name")
+      val lp = labels(LabelPropagationArray.run(spark, edges, n, maxIter = 5).labels)
+      assert(lp == labels(LabelPropagation.run(spark, edges, n, maxIter = 5).labels),
+        s"LP: $name")
+      assert(cc.map(_._1) == (0L until n) && lp.map(_._1) == (0L until n), name)
+    }
+  }
+}
