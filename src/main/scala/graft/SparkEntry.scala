@@ -343,8 +343,8 @@ object SparkEntry {
     // --- north rule: label propagation (deterministic argmax; unrolled
     // SQL oracle) ---
     "lp_blocks" -> ((s, _) =>
-      LabelPropagation.run(s, Synth.blocks(s, CC_N, CC_B), CC_N, maxIter = 5)
-        .labels.orderBy("id")),
+      LabelPropagation.run(s, Synth.blocks(s, CC_N, CC_B), CC_N, maxIter = 5,
+        strategy = GatherStrategy.ShuffleJoin).labels.orderBy("id")),
 
     // --- same LP semantics on the broadcast-array (mode-semiring) kernel ---
     "lp_array" -> ((s, _) =>
@@ -359,8 +359,8 @@ object SparkEntry {
     "lp_skew_salted" -> ((s, _) => {
       val prev = s.conf.getOption("spark.graft.lp.salts")
       s.conf.set("spark.graft.lp.salts", "8")
-      try LabelPropagation.run(s, Synth.skew(s, SKEW_N), SKEW_N, maxIter = 3)
-        .labels.orderBy("id")
+      try LabelPropagation.run(s, Synth.skew(s, SKEW_N), SKEW_N, maxIter = 3,
+        strategy = GatherStrategy.ShuffleJoin).labels.orderBy("id")
       finally prev match {
         case Some(v) => s.conf.set("spark.graft.lp.salts", v)
         case None => s.conf.unset("spark.graft.lp.salts")

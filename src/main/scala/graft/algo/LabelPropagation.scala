@@ -3,8 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.exec.{IterConfig, Iterate}
-import graft.graph.AdjacencyBuilder
+import graft.exec.{GatherStrategy, IterConfig, Iterate}
 
 /** Synchronous label propagation (community detection) over the symmetrized
   * link set. Every vertex starts with its own id as label; each iteration it
@@ -16,6 +15,14 @@ import graft.graph.AdjacencyBuilder
   * Synchronous LP can 2-cycle on bipartite structures; the loop therefore
   * stops on no-change OR maxIter, and determinism guarantees the same final
   * assignment for the same (graph, maxIter).
+  *
+  * Tiers: `strategy` resolves like [[PageRank.run]]'s. `Auto` at
+  * V <= `maxBroadcastVertices` (4M) and an explicit `BroadcastState` run
+  * [[LabelPropagationArray]] — one zero-shuffle gather job per round over
+  * flat CSR blocks, label-identical to the DataFrame rounds. `ShuffleJoin`,
+  * explicit or from `Auto` above the bound, runs the DataFrame rounds below
+  * (one shuffle join + one typed `label_mode` aggregate per round), the
+  * 10^12-vertex design.
   */
 object LabelPropagation {
 
@@ -27,7 +34,11 @@ object LabelPropagation {
       spark: SparkSession,
       edges: DataFrame,
       nVertices: Long,
-      maxIter: Int = 20): Result = {
+      maxIter: Int = 20,
+      strategy: GatherStrategy = GatherStrategy.Auto()): Result = {
+    // before any conf.set: the array tier leaves the session conf alone
+    if (GatherStrategy.resolve(strategy, nVertices) == GatherStrategy.BroadcastState)
+      return LabelPropagationArray.run(spark, edges, nVertices, maxIter)
     // pinned on the per-round join key (see ConnectedComponents.run: only an
     // explicit repartition survives as a cached partitioning guarantee).
     // A FLAGGED plumbing self-loop per vertex rides in the link set: flagged

@@ -20,6 +20,12 @@ import graft.exec.BlockIterate.Kernel
   * ONE zero-shuffle gather job over the cached CSR blocks: executors
   * compute per-row neighbor-label modes against the broadcast array and
   * return packed slices + a changed-count ([[graft.exec.BlockIterate]]).
+  * So this is the DEFAULT tier in the broadcast regime: [[LabelPropagation]]
+  * `.run` with `GatherStrategy.Auto` (V <= 4M) or `BroadcastState` returns
+  * this path; `ShuffleJoin` keeps the DataFrame rounds. On a 2^14-vertex,
+  * ~120k-link community graph a 10-round call took 0.33 s here against
+  * 2.96 s on the DataFrame rounds (perfbench `lp_communities`, medians of
+  * 10 runs each, 4-vCPU box).
   * No pointer compression (LP labels are NOT monotone, unlike CC's).
   *
   * Per-row mode: copy neighbor labels into a reused scratch buffer, sort,

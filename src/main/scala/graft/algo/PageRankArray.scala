@@ -34,7 +34,11 @@ import graft.graph.RangedCsr
   * float) — halving serde and kernel memory traffic; use it for
   * baseline-parity lanes, keep doubles (default) for engine results (north
   * rule compares allclose 1e-6 in double). The driver state, dangling mass
-  * and `base` stay double either way.
+  * and `base` stay double either way. An f32 run cannot resolve a `cfg.tol`
+  * below [[f32TolFloor]] — ulp(1.0f) ≈ 1.2e-7 for "l1" (the ranks sum to
+  * 1), ulp(1/n as float) for "linf" (one mean-sized rank) — and its stop
+  * then depends on rounding noise; such a call logs one warning and runs
+  * unchanged (tol = 0 with a fixed maxIter never warns).
   *
   * Scope: the BROADCAST REGIME ONLY — V must fit in executor+driver memory
   * (~8 B/vertex, fine to ~10^8 locally). Beyond that, the DataFrame
@@ -60,6 +64,10 @@ object PageRankArray {
       floatPrecision: Boolean = false): PageRank.Result = {
     require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
     val n = nVertices.toInt
+    val tolFloor = f32TolFloor(cfg.norm, nVertices)
+    if (floatPrecision && cfg.tol > 0 && cfg.tol < tolFloor)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"f32 PageRank cannot resolve " +
+        s"${cfg.norm} tol ${cfg.tol} (floor $tolFloor): its stop depends on rounding noise")
 
     // one-time CSR build (in-neighbor orientation; reference C1+C2).
     //
@@ -127,6 +135,13 @@ object PageRankArray {
       else iterate(StateCodec.F64, 1.0 / nVertices, "BroadcastArray")(rowsF64)
     PageRank.Result(state, metrics, graft.exec.GatherStrategy.BroadcastState)
   }
+
+  /** The smallest convergence tolerance an f32 state resolves for `norm`:
+    * the l1 delta sums rounding errors of about ulp(1.0f) in total (the
+    * ranks sum to 1), the linf delta is one vertex's, at best ulp of a mean
+    * rank 1/n. */
+  private[graft] def f32TolFloor(norm: String, nVertices: Long): Double =
+    if (norm == "l1") Math.ulp(1.0f) else Math.ulp((1.0 / math.max(1L, nVertices)).toFloat)
 
   /** Row kernel: x'[v] = base + d * Σ val·x[u] over v's in-edges, with the
     * per-block L1 (sum) or L∞ (max) delta against x[v]. */

@@ -70,7 +70,7 @@ object SpmvLayouts {
       width: Int,
       nnz: Long,
       padRatio: Double) {
-    def unpersist(): Unit = { blocks.unpersist() }
+    def unpersist(): Unit = org.apache.spark.sql.graft.bridge.releaseRDD(blocks)
   }
 
   /** Build the layout from an (src, dst, w) edge DataFrame. One aggregate

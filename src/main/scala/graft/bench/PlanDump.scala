@@ -81,10 +81,12 @@ object PlanDump {
       val o = graft.algo.TriangleCount.orient(Synth.band(spark, 1L << 12, 8))
       dump("triangles_orient", o)
     }
-    // --- LP DataFrame round (bench lane lp_blocks_1m): links + 1 round
+    // --- LP DataFrame round (pinned to ShuffleJoin; Auto at this size, and
+    // the bench lane lp_blocks_1m, run the array tier): links + 1 round
     locally {
       val n = 1L << 14
-      val r = graft.algo.LabelPropagation.run(spark, Synth.blocks(spark, n, 64), n, maxIter = 1)
+      val r = graft.algo.LabelPropagation.run(spark, Synth.blocks(spark, n, 64), n, maxIter = 1,
+        strategy = graft.exec.GatherStrategy.ShuffleJoin)
       dump("lp_blocks_labels_after_1round", r.labels)
     }
     // --- CC stitch plan (bench lane cc_blocks_1m)

@@ -272,7 +272,7 @@ object BlockIterate {
           }
         }
       }
-    } finally blocks.rdd.unpersist()
+    } finally org.apache.spark.sql.graft.bridge.releaseRDD(blocks.rdd)
     // the handoff broadcast lives as long as the result DataFrame reads it
     (codec.toDf(spark, sc.broadcast(codec.pack(x)), n, valueCol), metrics.toSeq)
   }

@@ -5,7 +5,8 @@
  * as private[sql]. Custom Catalyst expressions (graft.functions.BoundedTopK)
  * need exactly these two functions, so this file sits in a subpackage of
  * org.apache.spark.sql — the standard extension-library pattern (same move
- * as delta/frameless bridges). Nothing else from the private API is used.
+ * as delta/frameless bridges). The other private members used are listed
+ * with their wrappers below.
  */
 package org.apache.spark.sql.graft
 
@@ -32,4 +33,12 @@ object bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
+
+  /** Drop a persisted RDD's blocks without `RDD.unpersist`'s WARN for a
+    * locally checkpointed RDD (its lineage is cut, so it cannot be
+    * recomputed afterwards) — for callers that release such an RDD for good
+    * once their last job has run. SparkContext.unpersistRDD is
+    * private[spark]. */
+  def releaseRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

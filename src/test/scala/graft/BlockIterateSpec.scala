@@ -1,32 +1,29 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.algo.{ConnectedComponents, ConnectedComponentsArray, LabelPropagation,
-  LabelPropagationArray, PageRank, PageRankArray}
+  LabelPropagationArray, PageRank, PageRankArray, SpmvLayouts}
 import graft.exec.{GatherStrategy, IterConfig, Iterate}
 import graft.sources.Synth
 
 /** The broadcast-array tiers on the shared block driver (BlockIterate):
-  *   - f32 and f64 PageRank agree and stop together;
+  *   - f32 and f64 PageRank agree and stop together; f32 warns on a
+  *     tolerance it cannot resolve;
   *   - a snapshot written by the array tier reads back as the returned state;
   *   - PageRank, CC and LP array tiers are row-identical to their DataFrame
-  *     tiers on shapes that stress the range contract and the builds.
+  *     tiers on shapes that stress the range contract and the builds;
+  *   - released blocks leave no cached RDD and log no WARN.
   */
 class BlockIterateSpec extends SparkSuite {
   import spark.implicits._
+  import BlockIterateSpec.withPartitions
 
   private def scores(df: DataFrame): Array[(Long, Double)] =
     df.orderBy("id").as[(Long, Double)].collect()
   private def labels(df: DataFrame): Seq[(Long, Long)] =
     df.orderBy("id").as[(Long, Long)].collect().toSeq
-
-  private def withPartitions[T](p: Int)(f: => T): T = {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
 
   test("f32 PageRankArray == f64 within 1e-5 relative, same iteration count") {
     val n = 4096L
@@ -46,6 +43,20 @@ class BlockIterateSpec extends SparkSuite {
     }
   }
 
+  test("f32 PageRankArray warns once on a tolerance below its floor, never at tol = 0") {
+    val n = 200L
+    val edges = Synth.band(spark, n, 4)
+    def warnings(tol: Double, f32: Boolean): Int = LogCapture.warnings(
+      PageRankArray.run(spark, edges, n, floatPrecision = f32,
+        cfg = IterConfig(tol = tol, maxIter = 3, norm = "l1")))._2
+      .count(_.contains("f32 PageRank cannot resolve"))
+    assert(PageRankArray.f32TolFloor("l1", n) == Math.ulp(1.0f))
+    assert(warnings(1e-9, f32 = true) == 1)
+    assert(warnings(0.0, f32 = true) == 0)
+    assert(warnings(1e-6, f32 = true) == 0)
+    assert(warnings(1e-9, f32 = false) == 0)
+  }
+
   test("PageRankArray snapshot read back by Iterate.resume equals the returned state") {
     val n = 300L
     val edges = Synth.blocks(spark, n, 50)
@@ -59,23 +70,8 @@ class BlockIterateSpec extends SparkSuite {
     }
   }
 
-  /** (name, n, partitions, edges): trailing empty blocks (partitions > V),
-    * V not divisible by the partition count, all-dangling (zero weights),
-    * no edges at all, isolated vertices, self-loops and duplicate edges. */
-  private def shapes: Seq[(String, Long, Int, DataFrame)] = Seq(
-    ("partitions > V, self-loops, duplicates, isolated", 10L, 16, Seq(
-      (2L, 1L, 0.5), (2L, 1L, 0.25), (1L, 0L, 1.0), (9L, 3L, 2.0),
-      (4L, 4L, 1.0), (5L, 5L, 1.0), (5L, 6L, 1.0), (6L, 5L, 1.0)
-    ).toDF("src", "dst", "w")),
-    ("V = 101 over 4 partitions, hub", 101L, 4, Synth.skew(spark, 101L)),
-    ("V = 97 over 7 partitions, scatter + duplicates", 97L, 7,
-      Synth.scatter(spark, 97L, 3).union(Synth.scatter(spark, 97L, 2))),
-    ("all-dangling: zero-weight ring", 9L, 4,
-      (0L until 9L).map(i => (i, (i + 1) % 9, 0.0)).toDF("src", "dst", "w")),
-    ("no edges", 5L, 3, Seq.empty[(Long, Long, Double)].toDF("src", "dst", "w")))
-
   test("PageRank array tier == DataFrame tier on adversarial shapes") {
-    for ((name, n, p, edges) <- shapes) withPartitions(p) {
+    for ((name, n, p, edges) <- BlockIterateSpec.shapes(spark)) withPartitions(spark, p) {
       val cfg = IterConfig(tol = 0.0, maxIter = 6)
       val arr = scores(PageRankArray.run(spark, edges, n, cfg = cfg).state)
       val df = scores(PageRank.run(spark, edges, n, cfg = cfg,
@@ -89,13 +85,53 @@ class BlockIterateSpec extends SparkSuite {
   }
 
   test("CC and LP array tiers == DataFrame tiers on adversarial shapes") {
-    for ((name, n, p, edges) <- shapes) withPartitions(p) {
+    for ((name, n, p, edges) <- BlockIterateSpec.shapes(spark)) withPartitions(spark, p) {
       val cc = labels(ConnectedComponentsArray.run(spark, edges, n).labels)
       assert(cc == labels(ConnectedComponents.run(spark, edges, n).labels), s"CC: $name")
       val lp = labels(LabelPropagationArray.run(spark, edges, n, maxIter = 5).labels)
-      assert(lp == labels(LabelPropagation.run(spark, edges, n, maxIter = 5).labels),
-        s"LP: $name")
+      assert(lp == labels(LabelPropagation.run(spark, edges, n, maxIter = 5,
+        strategy = GatherStrategy.ShuffleJoin).labels), s"LP: $name")
       assert(cc.map(_._1) == (0L until n) && lp.map(_._1) == (0L until n), name)
     }
+  }
+
+  test("array tiers release their blocks without the locally-checkpointed WARN") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (_, warned) = LogCapture.warnings {
+      LabelPropagation.run(spark, Synth.blocks(spark, 300, 30), 300, maxIter = 3)
+        .labels.collect()
+      SpmvLayouts.build(spark, Synth.band(spark, 256, 8), 256, SpmvLayouts.Ellpack)
+        .unpersist()
+    }
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+    assert((sc.getRDDStorageInfo.map(_.id).toSet -- before).isEmpty)
+    assert(!warned.exists(_.contains("locally checkpointed")), warned.mkString("\n"))
+  }
+}
+
+object BlockIterateSpec {
+  def withPartitions[T](spark: SparkSession, p: Int)(f: => T): T = {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
+  /** (name, n, partitions, edges): trailing empty blocks (partitions > V),
+    * V not divisible by the partition count, all-dangling (zero weights),
+    * no edges at all, isolated vertices, self-loops and duplicate edges. */
+  def shapes(spark: SparkSession): Seq[(String, Long, Int, DataFrame)] = {
+    import spark.implicits._
+    Seq(
+      ("partitions > V, self-loops, duplicates, isolated", 10L, 16, Seq(
+        (2L, 1L, 0.5), (2L, 1L, 0.25), (1L, 0L, 1.0), (9L, 3L, 2.0),
+        (4L, 4L, 1.0), (5L, 5L, 1.0), (5L, 6L, 1.0), (6L, 5L, 1.0)
+      ).toDF("src", "dst", "w")),
+      ("V = 101 over 4 partitions, hub", 101L, 4, Synth.skew(spark, 101L)),
+      ("V = 97 over 7 partitions, scatter + duplicates", 97L, 7,
+        Synth.scatter(spark, 97L, 3).union(Synth.scatter(spark, 97L, 2))),
+      ("all-dangling: zero-weight ring", 9L, 4,
+        (0L until 9L).map(i => (i, (i + 1) % 9, 0.0)).toDF("src", "dst", "w")),
+      ("no edges", 5L, 3, Seq.empty[(Long, Long, Double)].toDF("src", "dst", "w")))
   }
 }

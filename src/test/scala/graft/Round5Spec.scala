@@ -134,7 +134,7 @@ class Round5Spec extends SparkSuite {
 
   test("r04 #2: LabelPropagationArray row-identical to DataFrame LP (blocks)") {
     val df = LabelPropagation.run(spark, Synth.blocks(spark, 600, 30), 600,
-      maxIter = 5).labels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
+      maxIter = 5, strategy = GatherStrategy.ShuffleJoin).labels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     val ar = LabelPropagationArray.run(spark, Synth.blocks(spark, 600, 30), 600,
       maxIter = 5).labels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(df.toSeq === ar.toSeq)
@@ -142,7 +142,7 @@ class Round5Spec extends SparkSuite {
 
   test("r04 #2: LabelPropagationArray row-identical to DataFrame LP (band)") {
     val df = LabelPropagation.run(spark, Synth.band(spark, 512, 6), 512,
-      maxIter = 4).labels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
+      maxIter = 4, strategy = GatherStrategy.ShuffleJoin).labels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     val ar = LabelPropagationArray.run(spark, Synth.band(spark, 512, 6), 512,
       maxIter = 4).labels.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(df.toSeq === ar.toSeq)
@@ -171,14 +171,14 @@ class Round5Spec extends SparkSuite {
     // one round, fixed mode; the step plan must contain exactly one
     // Aggregate above the links-state join (the LabelMode one-pass form)
     val r = LabelPropagation.run(spark, Synth.blocks(spark, 120, 30), 120,
-      maxIter = 1)
+      maxIter = 1, strategy = GatherStrategy.ShuffleJoin)
     assert(r.labels.count() === 120)
     // job-count form: one LP round = ONE job (the join-free scan delta
     // materializes cache + lazy checkpoint, r06), same two-config
     // isolation as the PageRank test
     def jobs(iters: Int): Int = countJobs {
       LabelPropagation.run(spark, Synth.blocks(spark, 120, 30), 120,
-        maxIter = iters)
+        maxIter = iters, strategy = GatherStrategy.ShuffleJoin)
     }
     // blocks(120,30) sync-LP needs >6 rounds to settle, so both runs hit
     // the cap and the difference is pure per-iteration cost

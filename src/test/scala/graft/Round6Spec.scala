@@ -23,11 +23,13 @@ class Round6Spec extends SparkSuite {
   test("salted LP rounds are label-identical to single-phase LP on the hub graph") {
     val n = 600L
     val edges = Synth.skew(spark, n)
-    val plain = LabelPropagation.run(spark, edges, n, maxIter = 3)
+    val plain = LabelPropagation.run(spark, edges, n, maxIter = 3,
+      strategy = GatherStrategy.ShuffleJoin)
       .labels.orderBy("id").collect().toSeq
     spark.conf.set("spark.graft.lp.salts", "8")
     val salted =
-      try LabelPropagation.run(spark, edges, n, maxIter = 3)
+      try LabelPropagation.run(spark, edges, n, maxIter = 3,
+          strategy = GatherStrategy.ShuffleJoin)
         .labels.orderBy("id").collect().toSeq
       finally spark.conf.unset("spark.graft.lp.salts")
     assert(salted == plain)
