@@ -1,8 +1,9 @@
 package graft.algo
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.exec.{BlockIterate, IterConfig, StateCodec}
+import graft.exec.{BlockIterate, IterConfig, StateCache, StateCodec}
 import graft.exec.BlockIterate.Kernel
 import graft.graph.RangedCsr
 
@@ -22,15 +23,32 @@ import graft.graph.RangedCsr
   * array indexed by the dense vertex id; the inner loop is a multiply-add
   * stream at ~ns/edge.
   *
+  * The build reads the edge table ONCE ([[graft.graph.RangedCsr.buildWeighted]]
+  * without `norm`): the CSR stores the raw weights w(u,v), and the out-
+  * weights W[u] = Σ_v w(u,v) are summed from per-map-task partials that
+  * ride the same shuffle, returned by the action that materializes the
+  * blocks. Normalization is on the state, not on the edges — the
+  * contribution form of the update:
+  *   x'[v] = base + d · Σ_{u->v} w(u,v) · c[u],   c[u] = x[u] / W[u].
+  * A source is LIVE iff W[u] is finite and > 0; every other source (no
+  * out-edge; zero, sign-cancelling, negative or non-finite total) is
+  * dangling: c[u] = 0, and its mass re-enters uniformly through `base`.
+  * For finite weights this is the DataFrame tier's rule (`filter(wtot >
+  * 0)`); a live source's zero or negative edges still count. Edges with a
+  * non-finite weight are counted into W but not stored, so no NaN or ∞
+  * reaches a score. The inverse out-weights are broadcast once per run.
+  *
   * The iteration protocol is [[graft.exec.BlockIterate]]'s. Per iteration
   * the driver computes the dangling mass and the additive `base` term from
   * the CURRENT state (an O(#dangling) loop, zero for link graphs with full
-  * out-degree); each block's row kernel applies base + damping INSIDE the
-  * task and returns its partial convergence delta against the old state.
+  * out-degree); each executor derives c once from the state it unpacked
+  * (the [[graft.exec.StateCache]] memo slot), and each block's row kernel
+  * gathers from c, applies base + damping INSIDE the task and returns its
+  * partial convergence delta against the old state x.
   *
   * `floatPrecision = true` moves CSR values, the broadcast state, the
-  * kernel and the slices to Float (the [[graft.exec.StateCodec.F32]]
-  * codec) — the REFERENCE'S OWN precision (`graphCOO.hpp:20-21` uses
+  * contributions, the kernel and the slices to Float (the
+  * [[graft.exec.StateCodec.F32]] codec) — the REFERENCE'S OWN precision (`graphCOO.hpp:20-21` uses
   * float) — halving serde and kernel memory traffic; use it for
   * baseline-parity lanes, keep doubles (default) for engine results (north
   * rule compares allclose 1e-6 in double). The driver state, dangling mass
@@ -41,7 +59,8 @@ import graft.graph.RangedCsr
   * unchanged (tol = 0 with a fixed maxIter never warns).
   *
   * Scope: the BROADCAST REGIME ONLY — V must fit in executor+driver memory
-  * (~8 B/vertex, fine to ~10^8 locally). Beyond that, the DataFrame
+  * (~24 B/vertex per executor: state, contributions and inverse out-
+  * weights; fine to ~10^8 locally). Beyond that, the DataFrame
   * ShuffleJoin path in [[PageRank]] is the 10^12-vertex design; this is the
   * small-V accelerator, selected by [[graft.exec.GatherStrategy.Auto]]
   * (4M-vertex switch) or explicitly. Measured crossover context (r02): DF
@@ -69,57 +88,33 @@ object PageRankArray {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(s"f32 PageRank cannot resolve " +
         s"${cfg.norm} tol ${cfg.tol} (floor $tolFloor): its stop depends on rounding noise")
 
-    // one-time CSR build (in-neighbor orientation; reference C1+C2).
-    //
-    // r06 fast path (guide §2.3/§3.1; measured with graft.bench.BuildProbe,
-    // before/after in OPTIMIZATION_r06.md): the normalize JOIN is gone —
-    // the O(V) out-weight aggregate is collected into a primitive double[]
-    // and broadcast, so normalization is an array lookup inside the build's
-    // map tasks (no driver-side hashed relation, no per-edge join probe) —
-    // and the O(E) exchange ships packed 12-16 B/edge column blobs through
-    // a RANGE partitioner instead of 32 B/edge UnsafeRows through a hash
-    // exchange (graft.graph.RangedCsr: bulk-memcpy serde both sides, and
-    // the downstream CSR grouping indexes rows by (dst - base) — no
-    // per-edge hash map at all).
-    val outW = edges.groupBy("src").agg(
-      (if (weighted) sum("w") else count(lit(1)).cast("double")).as("wtot"))
-      .filter(col("wtot") > 0) // wtot<=0 -> dangling, not NaN (see PageRank)
-    // collect (src, wtot) as packed per-partition primitive arrays — no
-    // per-row Row/tuple boxing on the driver at V=10^6-10^8
-    val wtotArr = new Array[Double](n)
-    outW.queryExecution.toRdd.mapPartitions { it =>
-      var ids = new Array[Int](1024)
-      var ws = new Array[Double](1024)
-      var m = 0
-      while (it.hasNext) {
-        val r = it.next()
-        if (m == ids.length) {
-          ids = java.util.Arrays.copyOf(ids, m * 2)
-          ws = java.util.Arrays.copyOf(ws, m * 2)
-        }
-        ids(m) = r.getLong(0).toInt
-        ws(m) = r.getDouble(1)
-        m += 1
-      }
-      Iterator.single((java.util.Arrays.copyOf(ids, m),
-        java.util.Arrays.copyOf(ws, m)))
-    }.collect().foreach { case (ids, ws) =>
-      var i = 0
-      while (i < ids.length) { wtotArr(ids(i)) = ws(i); i += 1 }
-    }
+    // one-time CSR build (in-neighbor orientation; reference C1+C2) in ONE
+    // scan of the edge table: the ranged-CSR shuffle (graft.graph.RangedCsr:
+    // packed 12-16 B/edge column blobs through a RANGE partitioner, bulk-
+    // memcpy serde both sides, rows indexed by dst - base, no per-edge hash
+    // map; before/after in OPTIMIZATION_r06.md) ships the raw weights w,
+    // and each map task's per-source partial Σw rides the same shuffle to
+    // the source's range, so the materializing action hands back the out-
+    // weights W[n] with the edge count. Normalization lives on the state
+    // instead of the edges: c[u] = x[u] / W[u] per iteration.
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val wtotBc = spark.sparkContext.broadcast(wtotArr)
     val sel = edges.select(col("dst").cast("long"), col("src").cast("long"),
       (if (weighted) col("w") else lit(1.0)).cast("double"))
     val blocks = BlockIterate.materialize(
-      RangedCsr.buildWeighted(sel, n, nParts, floatPrecision, wtotBc), n)
-    wtotBc.destroy() // the cached blocks hold the normalized values
+      RangedCsr.buildWeighted(sel, n, nParts, floatPrecision), n)
+    val w = blocks.outWeights
 
-    // dangling vertices (no positive-weight out-edge): their mass re-enters
-    // uniformly each iteration; wtotArr(v) == 0.0 IS "no positive out-weight"
-    // (the aggregate only populated wtot > 0 entries).
-    val danglingIds = Array.range(0, n).filter(v => wtotArr(v) <= 0)
+    // a source is live iff W is finite and > 0 (NaN fails `> 0`); every
+    // other source (no out-edge, zero, sign-cancelling, negative or
+    // non-finite total) is dangling: it contributes 0 through its edges,
+    // and its mass re-enters uniformly each iteration
+    val invW = Array.tabulate(n) { u =>
+      if (w(u) > 0 && w(u) < Double.PositiveInfinity) 1.0 / w(u) else 0.0
+    }
+    val danglingIds = Array.range(0, n).filter(u => invW(u) == 0.0)
     val l1 = cfg.norm == "l1" // scale-free convergence (see IterConfig)
+
+    val invWBc = spark.sparkContext.broadcast(invW)
 
     def iterate[E <: AnyRef](codec: StateCodec[Array[Double], E], init: Double,
         strategy: String)(rows: (Double, Double, Boolean) => Kernel[E]) =
@@ -129,10 +124,12 @@ object PageRankArray {
         while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
         rows((1.0 - damping) / nVertices + damping * dm / nVertices, damping, l1)
       }
-    val (state, metrics) =
+    val (state, metrics) = try {
       if (floatPrecision)
-        iterate(StateCodec.F32, (1.0 / nVertices).toFloat, "BroadcastArrayF32")(rowsF32)
-      else iterate(StateCodec.F64, 1.0 / nVertices, "BroadcastArray")(rowsF64)
+        iterate(StateCodec.F32, (1.0 / nVertices).toFloat, "BroadcastArrayF32")(
+          rowsF32(_, _, _, invWBc))
+      else iterate(StateCodec.F64, 1.0 / nVertices, "BroadcastArray")(rowsF64(_, _, _, invWBc))
+    } finally invWBc.destroy()
     PageRank.Result(state, metrics, graft.exec.GatherStrategy.BroadcastState)
   }
 
@@ -143,17 +140,27 @@ object PageRankArray {
   private[graft] def f32TolFloor(norm: String, nVertices: Long): Double =
     if (norm == "l1") Math.ulp(1.0f) else Math.ulp((1.0 / math.max(1L, nVertices)).toFloat)
 
-  /** Row kernel: x'[v] = base + d * Σ val·x[u] over v's in-edges, with the
-    * per-block L1 (sum) or L∞ (max) delta against x[v]. */
-  private def rowsF64(base: Double, d: Double, l1: Boolean): Kernel[Array[Double]] =
+  /** Row kernel: x'[v] = base + d * Σ w(u,v)·c[u] over v's in-edges, with
+    * the per-block L1 (sum) or L∞ (max) delta against x[v]. The
+    * contributions c[u] = x[u] / W[u] (0 for a dangling u) are derived once
+    * per executor per iteration from the cached state. */
+  private def rowsF64(base: Double, d: Double, l1: Boolean,
+      invW: Broadcast[Array[Double]]): Kernel[Array[Double]] =
     (b, xs) => {
+      val c = StateCache.derive(xs) { x =>
+        val iw = invW.value
+        val c = new Array[Double](x.length)
+        var u = 0
+        while (u < c.length) { c(u) = x(u) * iw(u); u += 1 }
+        c
+      }
       val out = new Array[Double](b.rows)
       var pd = 0.0
       var r = 0
       while (r < out.length) {
         var s = 0.0
         var i = b.rowPtr(r); val end = b.rowPtr(r + 1)
-        while (i < end) { s += b.colVal(i) * xs(b.colInd(i)); i += 1 }
+        while (i < end) { s += b.colVal(i) * c(b.colInd(i)); i += 1 }
         val nv = base + d * s
         out(r) = nv
         val dd = math.abs(nv - xs(b.base + r))
@@ -163,18 +170,27 @@ object PageRankArray {
       (out, pd)
     }
 
-  /** [[rowsF64]] in float arithmetic; the delta is accumulated in double. */
-  private def rowsF32(base: Double, d: Double, l1: Boolean): Kernel[Array[Float]] = {
+  /** [[rowsF64]] in float arithmetic (c[u] rounded once from the double
+    * product); the delta is accumulated in double. */
+  private def rowsF32(base: Double, d: Double, l1: Boolean,
+      invW: Broadcast[Array[Double]]): Kernel[Array[Float]] = {
     val bf = base.toFloat
     val df = d.toFloat
     (b, xs) => {
+      val c = StateCache.derive(xs) { x =>
+        val iw = invW.value
+        val c = new Array[Float](x.length)
+        var u = 0
+        while (u < c.length) { c(u) = (x(u) * iw(u)).toFloat; u += 1 }
+        c
+      }
       val out = new Array[Float](b.rows)
       var pd = 0.0
       var r = 0
       while (r < out.length) {
         var s = 0.0f
         var i = b.rowPtr(r); val end = b.rowPtr(r + 1)
-        while (i < end) { s += b.colValF(i) * xs(b.colInd(i)); i += 1 }
+        while (i < end) { s += b.colValF(i) * c(b.colInd(i)); i += 1 }
         val nv = bf + df * s
         out(r) = nv
         val dd = math.abs((nv - xs(b.base + r)).toDouble)

@@ -137,15 +137,29 @@ object StateCodec {
 /** Once-per-executor-per-iteration unpack of a broadcast state: all tasks
   * of one job share a single unpacked array, keyed by the broadcast id
   * (unique per SparkContext). A stale or foreign key just re-unpacks —
-  * correctness never depends on a hit. */
+  * correctness never depends on a hit. One memo slot under the same key
+  * holds an array derived from that state (PageRank's contributions), so
+  * it too is computed once per executor per iteration. */
 private[graft] object StateCache {
   private var key = -1L
   private var value: AnyRef = _
+  private var derived: AnyRef = _
   def get[E <: AnyRef](bc: Broadcast[Array[Byte]], codec: StateCodec[_, E]): E =
     synchronized {
-      if (key != bc.id || value == null) { value = codec.unpack(bc.value); key = bc.id }
+      if (key != bc.id || value == null) {
+        value = codec.unpack(bc.value); derived = null; key = bc.id
+      }
       value.asInstanceOf[E]
     }
+  /** `f(x)`, memoized while `x` is the cached state (one `f` per state);
+    * any other `x` is derived afresh. */
+  def derive[E <: AnyRef, D <: AnyRef](x: E)(f: E => D): D = synchronized {
+    if (x ne value) f(x)
+    else {
+      if (derived == null) derived = f(x)
+      derived.asInstanceOf[D]
+    }
+  }
 }
 
 /** The array-tier counterpart of [[Iterate]]: one broadcast-state
@@ -190,19 +204,29 @@ object BlockIterate {
     * its partial convergence delta. */
   type Kernel[E] = (CsrBlock, E) => (E, Double)
 
-  /** Persisted, lineage-cut range blocks of an n-vertex graph. */
+  /** Persisted, lineage-cut range blocks of an n-vertex graph: `nEdges`
+    * stored edges, and `outWeights`, the n per-vertex out-weights the
+    * blocks carry ([[CsrBlock.outW]]; empty when they carry none). */
   final class Blocks private[BlockIterate] (
-      private[BlockIterate] val rdd: RDD[CsrBlock], val n: Int, val nEdges: Long)
+      private[BlockIterate] val rdd: RDD[CsrBlock], val n: Int, val nEdges: Long,
+      val outWeights: Array[Double])
 
   /** Cache the blocks deserialized (iterations touch primitive arrays, no
     * decode) and cut their lineage: without the local checkpoint every
     * iteration job re-serializes the whole upstream Catalyst/RDD graph
-    * into its task binary (measured ~200 ms/iteration at 403M edges). The
-    * edge count is the one action that materializes both. */
+    * into its task binary (measured ~200 ms/iteration at 403M edges). One
+    * action materializes both and returns each block's edge count and
+    * out-weight slice. */
   def materialize(built: RDD[CsrBlock], n: Int): Blocks = {
     val rdd = built.persist(StorageLevel.MEMORY_ONLY)
     rdd.localCheckpoint()
-    new Blocks(rdd, n, rdd.map(_.colInd.length.toLong).fold(0L)(_ + _))
+    val parts = rdd.map(b => (b.base, b.colInd.length.toLong, b.outW)).collect()
+    val outW = if (parts.forall(_._3.isEmpty)) Array.emptyDoubleArray else {
+      val w = new Array[Double](n)
+      parts.foreach { case (base, _, slice) => System.arraycopy(slice, 0, w, base, slice.length) }
+      w
+    }
+    new Blocks(rdd, n, parts.map(_._2).sum, outW)
   }
 
   /** CC/LP: labels start at the own id over the symmetric link blocks

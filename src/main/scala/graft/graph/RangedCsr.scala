@@ -12,13 +12,16 @@ import scala.reflect.ClassTag
   * rowPtr/colInd/val layout, `include/graphCSR.hpp:382-384`): local row r is
   * vertex `base + r` and gathers from colInd[rowPtr(r) until rowPtr(r+1)]
   * with weights colVal (double) or colValF (float). At most one of the two
-  * is populated; label blocks (CC/LP) carry neither. */
+  * is populated; label blocks (CC/LP) carry neither. `outW(r)` is the total
+  * out-weight of vertex `base + r` when the build summed it (PageRank's
+  * [[RangedCsr.buildWeighted]] without `norm`), else empty. */
 final case class CsrBlock(
     base: Int,
     rowPtr: Array[Int],
     colInd: Array[Int],
     colVal: Array[Double],
-    colValF: Array[Float]) {
+    colValF: Array[Float],
+    outW: Array[Double] = Array.emptyDoubleArray) {
   def rows: Int = rowPtr.length - 1
 }
 
@@ -28,9 +31,9 @@ final case class CsrBlock(
   * WHY (guide §2.3 "shuffle fewer bytes" + §1.2 "per-task work first"): the
   * r05 builds moved every edge through a Catalyst `repartition(n, col)`
   * exchange as an UnsafeRow — 8 B null-bits + 8 B per field = 32 B/edge on
-  * the wire, plus per-row hash/copy/serde CPU on both sides (measured with
-  * `graft.bench.BuildProbe` at 403M edges, r06 baseline: 162 s summed task
-  * time map-side, 138 s reduce-side; the whole quiet build 17.2 s wall).
+  * the wire, plus per-row hash/copy/serde CPU on both sides (at 403M edges,
+  * r06 baseline: 162 s summed task time map-side, 138 s reduce-side; the
+  * whole quiet build 17.2 s wall; before/after in OPTIMIZATION_r06.md).
   * Here each upstream task packs its edges into per-target primitive column
   * buffers and ships them as FEW LARGE BLOBS (4 B dst + 4 B src + 0/4/8 B
   * value = 8-16 B/edge, serialized as one `byte[]` memcpy); the target
@@ -72,6 +75,10 @@ object RangedCsr {
   final val ValF = 1
   final val ValD = 2
 
+  // blob kinds (the header's first Int)
+  final val EdgeBlob = 0
+  final val OutWBlob = 1
+
   /** Edges per blob before a flush: 128k edges ≈ 1-2 MB — large enough that
     * serde is bulk memcpy, small enough that a map task's nParts open
     * buffers stay ~tens of MB. */
@@ -83,46 +90,58 @@ object RangedCsr {
     case _ => 0
   }
 
-  /** Blob layout (little-endian): [m: Int][keys: m Ints][payloads: m Ints]
-    * [values: m Floats|Doubles|absent]. Columnar within the blob so the
-    * reader's bulk gets are three memcpys. */
+  /** Blob layout (little-endian): a header [kind: Int][m: Int], then
+    *   - an edge blob (kind [[EdgeBlob]]): [keys: m Ints][payloads: m Ints]
+    *     [values: m Floats|Doubles|absent];
+    *   - an out-weight blob (kind [[OutWBlob]]): [keys: m Ints][sums: m
+    *     Doubles] — one map task's partial Σw per source id (the key).
+    * Columnar within the blob so the reader's bulk gets are memcpys. */
+  private final val Header = 8
+
+  private def le(b: Array[Byte], off: Int, len: Int): ByteBuffer =
+    ByteBuffer.wrap(b, off, len).order(ByteOrder.LITTLE_ENDIAN)
+
   private def packBlob(
       m: Int, keys: Array[Int], payloads: Array[Int],
       valsF: Array[Float], valsD: Array[Double], valMode: Int): Array[Byte] = {
-    val b = new Array[Byte](4 + m * (8 + valBytes(valMode)))
-    ByteBuffer.wrap(b, 0, 4).order(ByteOrder.LITTLE_ENDIAN).putInt(m)
-    ByteBuffer.wrap(b, 4, 4 * m).order(ByteOrder.LITTLE_ENDIAN)
-      .asIntBuffer().put(keys, 0, m)
-    ByteBuffer.wrap(b, 4 + 4 * m, 4 * m).order(ByteOrder.LITTLE_ENDIAN)
-      .asIntBuffer().put(payloads, 0, m)
+    val b = new Array[Byte](Header + m * (8 + valBytes(valMode)))
+    le(b, 0, Header).putInt(EdgeBlob).putInt(m)
+    le(b, Header, 4 * m).asIntBuffer().put(keys, 0, m)
+    le(b, Header + 4 * m, 4 * m).asIntBuffer().put(payloads, 0, m)
     valMode match {
-      case ValF => ByteBuffer.wrap(b, 4 + 8 * m, 4 * m)
-        .order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer().put(valsF, 0, m)
-      case ValD => ByteBuffer.wrap(b, 4 + 8 * m, 8 * m)
-        .order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().put(valsD, 0, m)
+      case ValF => le(b, Header + 8 * m, 4 * m).asFloatBuffer().put(valsF, 0, m)
+      case ValD => le(b, Header + 8 * m, 8 * m).asDoubleBuffer().put(valsD, 0, m)
       case _ => ()
     }
     b
   }
 
-  def blobCount(b: Array[Byte]): Int =
-    ByteBuffer.wrap(b, 0, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
+  private def packOutW(m: Int, keys: Array[Int], sums: Array[Double]): Array[Byte] = {
+    val b = new Array[Byte](Header + 12 * m)
+    le(b, 0, Header).putInt(OutWBlob).putInt(m)
+    le(b, Header, 4 * m).asIntBuffer().put(keys, 0, m)
+    le(b, Header + 4 * m, 8 * m).asDoubleBuffer().put(sums, 0, m)
+    b
+  }
+
+  def blobKind(b: Array[Byte]): Int = le(b, 0, 4).getInt
+
+  def blobCount(b: Array[Byte]): Int = le(b, 4, 4).getInt
 
   def blobKeys(b: Array[Byte], m: Int, out: Array[Int]): Unit =
-    ByteBuffer.wrap(b, 4, 4 * m).order(ByteOrder.LITTLE_ENDIAN)
-      .asIntBuffer().get(out, 0, m)
+    le(b, Header, 4 * m).asIntBuffer().get(out, 0, m)
 
   def blobPayloads(b: Array[Byte], m: Int, out: Array[Int]): Unit =
-    ByteBuffer.wrap(b, 4 + 4 * m, 4 * m).order(ByteOrder.LITTLE_ENDIAN)
-      .asIntBuffer().get(out, 0, m)
+    le(b, Header + 4 * m, 4 * m).asIntBuffer().get(out, 0, m)
 
   def blobValsF(b: Array[Byte], m: Int, out: Array[Float]): Unit =
-    ByteBuffer.wrap(b, 4 + 8 * m, 4 * m).order(ByteOrder.LITTLE_ENDIAN)
-      .asFloatBuffer().get(out, 0, m)
+    le(b, Header + 8 * m, 4 * m).asFloatBuffer().get(out, 0, m)
 
   def blobValsD(b: Array[Byte], m: Int, out: Array[Double]): Unit =
-    ByteBuffer.wrap(b, 4 + 8 * m, 8 * m).order(ByteOrder.LITTLE_ENDIAN)
-      .asDoubleBuffer().get(out, 0, m)
+    le(b, Header + 8 * m, 8 * m).asDoubleBuffer().get(out, 0, m)
+
+  private def blobSums(b: Array[Byte], m: Int, out: Array[Double]): Unit =
+    le(b, Header + 4 * m, 8 * m).asDoubleBuffer().get(out, 0, m)
 
   /** Map side: drain (key, payload[, value]) InternalRows into per-target
     * packed blobs, streamed (a target's buffer flushes at FlushEdges — peak
@@ -135,11 +154,22 @@ object RangedCsr {
     *                broadcast primitive-array lookup instead of a join)
     * @param sym     emit BOTH orientations of each row (symmetric link set),
     *                dropping key == payload self-loops
+    * @param outWeights also sum each payload's values (its out-weight, when
+    *                the payload is the source) and, at task end, ship the
+    *                task's partial sums to the owner of each payload range
+    *                as [[OutWBlob]]s; a non-finite value still counts
+    *                towards its sum but its edge is not shipped, so no
+    *                gather ever multiplies by it. The partial is a dense
+    *                Double slice per touched payload range, allocated on
+    *                first use: at most 8 B × n per map task.
     */
   def blobRdd(
       df: DataFrame, n: Int, nParts: Int, valMode: Int,
       norm: Broadcast[Array[Double]] = null,
-      sym: Boolean = false): RDD[(Int, Array[Byte])] = {
+      sym: Boolean = false,
+      outWeights: Boolean = false): RDD[(Int, Array[Byte])] = {
+    require(!outWeights || (valMode != ValNone && norm == null && !sym),
+      "out-weights are summed over raw edge values only")
     val chunk = chunkFor(n, nParts)
     df.queryExecution.toRdd.mapPartitions { rows =>
       // per-target buffers allocated on FIRST use: a locality-friendly input
@@ -151,6 +181,7 @@ object RangedCsr {
       val valDBuf = if (valMode == ValD) new Array[Array[Double]](nParts) else null
       val cnt = new Array[Int](nParts)
       val wtot = if (norm == null) null else norm.value
+      val wSum = if (outWeights) new Array[Array[Double]](nParts) else null
       new Iterator[(Int, Array[Byte])] {
         private val out = new java.util.ArrayDeque[(Int, Array[Byte])]
         private var flushed = false
@@ -176,6 +207,26 @@ object RangedCsr {
           cnt(p) = c + 1
           if (c + 1 == FlushEdges) emit(p)
         }
+        private def addW(pay: Long, v: Double): Unit = {
+          val p = (pay / chunk).toInt
+          val lo = p.toLong * chunk
+          if (wSum(p) == null) wSum(p) = new Array[Double](math.min(chunk, n - lo).toInt)
+          wSum(p)((pay - lo).toInt) += v
+        }
+        // one blob per touched payload range: its non-zero partial sums (a
+        // zero partial adds nothing to the total; NaN != 0 is shipped)
+        private def emitW(p: Int): Unit = {
+          val sums = wSum(p)
+          val ids = new Array[Int](sums.length)
+          val vs = new Array[Double](sums.length)
+          var m = 0
+          var i = 0
+          while (i < sums.length) {
+            if (sums(i) != 0.0) { ids(m) = p * chunk + i; vs(m) = sums(i); m += 1 }
+            i += 1
+          }
+          if (m > 0) out.add((p, packOutW(m, ids, vs)))
+        }
         private def pump(): Unit = {
           while (out.isEmpty && rows.hasNext) {
             val r = rows.next()
@@ -189,13 +240,21 @@ object RangedCsr {
             } else if (wtot != null) {
               val wt = wtot(pay.toInt)
               if (wt > 0) put(k, pay, r.getDouble(2) / wt)
+            } else if (outWeights) {
+              val v = r.getDouble(2)
+              addW(pay, v)
+              if (!v.isNaN && !v.isInfinite) put(k, pay, v)
             } else {
               put(k, pay, if (valMode == ValNone) 0.0 else r.getDouble(2))
             }
           }
           if (out.isEmpty && !flushed && !rows.hasNext) {
             var p = 0
-            while (p < nParts) { if (cnt(p) > 0) emit(p); p += 1 }
+            while (p < nParts) {
+              if (cnt(p) > 0) emit(p)
+              if (wSum != null && wSum(p) != null) emitW(p)
+              p += 1
+            }
             flushed = true
           }
         }
@@ -214,7 +273,7 @@ object RangedCsr {
     while (it.hasNext) {
       val b = it.next()._2
       list += b
-      m += blobCount(b)
+      if (blobKind(b) == EdgeBlob) m += blobCount(b)
     }
     require(m <= Int.MaxValue,
       s"ranged CSR partition holds $m edges — raise shuffle partitions")
@@ -223,7 +282,7 @@ object RangedCsr {
 
   /** Reduce side of the range contract: `f(base, len, blobs, m)` runs once
     * per partition whose key range [base, base + len) is non-empty, over
-    * that partition's blobs and their total edge count m. */
+    * that partition's blobs (of both kinds) and their total edge count m. */
   private[graft] def mapRanges[T: ClassTag](
       blobs: RDD[(Int, Array[Byte])], n: Int, nParts: Int)(
       f: (Int, Int, Array[Array[Byte]], Int) => Iterator[T]): RDD[T] = {
@@ -239,20 +298,40 @@ object RangedCsr {
   }
 
   /** Pass 1 of the histogram grouping: edge count per row of the range
-    * [base, base + len). */
+    * [base, base + len) (out-weight blobs skipped). */
   private[graft] def rowCounts(
       blobs: Array[Array[Byte]], base: Int, len: Int): Array[Int] = {
     val counts = new Array[Int](len)
     val keys = new Array[Int](FlushEdges)
     var bi = 0
     while (bi < blobs.length) {
-      val bm = blobCount(blobs(bi))
-      blobKeys(blobs(bi), bm, keys)
-      var i = 0
-      while (i < bm) { counts(keys(i) - base) += 1; i += 1 }
+      val b = blobs(bi)
+      if (blobKind(b) == EdgeBlob) {
+        val bm = blobCount(b)
+        blobKeys(b, bm, keys)
+        var i = 0
+        while (i < bm) { counts(keys(i) - base) += 1; i += 1 }
+      }
       bi += 1
     }
     counts
+  }
+
+  /** The range's total out-weights: every map task's partial sums from the
+    * out-weight blobs, added per row of [base, base + len). */
+  private def outWeightSlice(
+      blobs: Array[Array[Byte]], base: Int, len: Int): Array[Double] = {
+    val w = new Array[Double](len)
+    for (b <- blobs if blobKind(b) == OutWBlob) {
+      val bm = blobCount(b)
+      val keys = new Array[Int](bm)
+      val sums = new Array[Double](bm)
+      blobKeys(b, bm, keys)
+      blobSums(b, bm, sums)
+      var i = 0
+      while (i < bm) { w(keys(i) - base) += sums(i); i += 1 }
+    }
+    w
   }
 
   /** The two-pass CSR build of one range: histogram + rowPtr prefix sum,
@@ -276,7 +355,7 @@ object RangedCsr {
     var bi = 0
     while (bi < blobs.length) {
       val b = blobs(bi)
-      val bm = blobCount(b)
+      val bm = if (blobKind(b) == EdgeBlob) blobCount(b) else 0 // no edges in out-weight blobs
       blobKeys(b, bm, keys)
       blobPayloads(b, bm, pay)
       var i = 0
@@ -295,17 +374,27 @@ object RangedCsr {
     CsrBlock(base, rowPtr, colInd, colVal, colValF)
   }
 
-  /** In-neighbor CSR blocks with normalized values: key = dst, payload =
-    * src, value = w / wtot(src) (rows whose src has wtot <= 0 dropped —
-    * identical to the old `filter(wtot > 0)` + inner-join semantics).
+  /** In-neighbor CSR blocks over (dst, src, w) rows: key = dst, payload =
+    * src, one scan of the edge table.
+    *   - Without `norm` (the engine's build): values are the raw weights w,
+    *     and each block also carries `outW`, its rows' total out-weights Σw
+    *     summed from the map tasks' partials in the same shuffle. Edges
+    *     with a non-finite w are counted in their source's total but not
+    *     stored.
+    *   - With `norm`: value = w / norm(src), rows whose src has norm <= 0
+    *     dropped (the `filter(wtot > 0)` + inner-join semantics), no
+    *     `outW`.
     * Caller persists/checkpoints. */
   def buildWeighted(
       edges: DataFrame, // pre-projected (dst LONG, src LONG, w DOUBLE)
       n: Int, nParts: Int, useFloat: Boolean,
-      norm: Broadcast[Array[Double]]): RDD[CsrBlock] = {
+      norm: Broadcast[Array[Double]] = null): RDD[CsrBlock] = {
     val valMode = if (useFloat) ValF else ValD
-    mapRanges(blobRdd(edges, n, nParts, valMode, norm), n, nParts) {
-      (base, len, blobs, m) => Iterator.single(csrBlock(blobs, m, base, len, valMode))
+    val sumOutW = norm == null
+    mapRanges(blobRdd(edges, n, nParts, valMode, norm, outWeights = sumOutW), n, nParts) {
+      (base, len, blobs, m) =>
+        val b = csrBlock(blobs, m, base, len, valMode)
+        Iterator.single(if (sumOutW) b.copy(outW = outWeightSlice(blobs, base, len)) else b)
     }
   }
 

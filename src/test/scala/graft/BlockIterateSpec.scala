@@ -11,6 +11,8 @@ import graft.sources.Synth
 /** The broadcast-array tiers on the shared block driver (BlockIterate):
   *   - f32 and f64 PageRank agree and stop together; f32 warns on a
   *     tolerance it cannot resolve;
+  *   - the PageRank build reads its edge table once, and non-finite
+  *     weights make their source dangling instead of leaking its mass;
   *   - a snapshot written by the array tier reads back as the returned state;
   *   - PageRank, CC and LP array tiers are row-identical to their DataFrame
   *     tiers on shapes that stress the range contract and the builds;
@@ -55,6 +57,38 @@ class BlockIterateSpec extends SparkSuite {
     assert(warnings(0.0, f32 = true) == 0)
     assert(warnings(1e-6, f32 = true) == 0)
     assert(warnings(1e-9, f32 = false) == 0)
+  }
+
+  test("the PageRank array tier reads its edge table once, f64, f32 and under Auto") {
+    val rows = Synth.band(spark, 500, 6).as[(Long, Long, Double)].collect()
+    val read = spark.sparkContext.longAccumulator("edge rows read")
+    val edges = spark.sparkContext.parallelize(rows.toSeq, 4)
+      .map { e => read.add(1); e }.toDF("src", "dst", "w")
+    val cfg = IterConfig(tol = 0.0, maxIter = 3)
+    def reads(run: => PageRank.Result): Long = {
+      read.reset()
+      run.state.collect()
+      read.value
+    }
+    assert(reads(PageRankArray.run(spark, edges, 500, cfg = cfg)) == rows.length, "f64")
+    assert(reads(PageRankArray.run(spark, edges, 500, cfg = cfg, floatPrecision = true)) ==
+      rows.length, "f32")
+    assert(reads(PageRank.run(spark, edges, 500, cfg = cfg)) == rows.length, "Auto")
+  }
+
+  test("a NaN or +inf weight makes its source dangling: scores finite, mass 1") {
+    // damping 1/2 on 4 vertices keeps every score a short binary fraction
+    // for 8 iterations, so the f32 run sums to 1 exactly as well. Sources 0
+    // (w = NaN) and 1 (w = +inf) are dangling; 0's finite edge carries 0.
+    val edges = Seq((0L, 1L, Double.NaN), (0L, 3L, 1.0), (1L, 2L, Double.PositiveInfinity),
+      (2L, 3L, 1.0), (3L, 2L, 1.0)).toDF("src", "dst", "w")
+    for (f32 <- Seq(false, true)) {
+      val x = scores(PageRankArray.run(spark, edges, 4, damping = 0.5, floatPrecision = f32,
+        cfg = IterConfig(tol = 0.0, maxIter = 8)).state).map(_._2)
+      assert(x.length == 4 && x.forall(v => !v.isNaN && !v.isInfinite), s"f32=$f32: ${x.toSeq}")
+      assert(math.abs(x.sum - 1.0) <= 1e-9, s"f32=$f32: ${x.toSeq}")
+      assert(x(0) == x(1) && x(2) == x(3), s"f32=$f32: ${x.toSeq}")
+    }
   }
 
   test("PageRankArray snapshot read back by Iterate.resume equals the returned state") {
@@ -119,7 +153,8 @@ object BlockIterateSpec {
 
   /** (name, n, partitions, edges): trailing empty blocks (partitions > V),
     * V not divisible by the partition count, all-dangling (zero weights),
-    * no edges at all, isolated vertices, self-loops and duplicate edges. */
+    * no edges at all, isolated vertices, self-loops, duplicate edges, and
+    * weights whose out-weight totals are summed across map tasks. */
   def shapes(spark: SparkSession): Seq[(String, Long, Int, DataFrame)] = {
     import spark.implicits._
     Seq(
@@ -132,6 +167,16 @@ object BlockIterateSpec {
         Synth.scatter(spark, 97L, 3).union(Synth.scatter(spark, 97L, 2))),
       ("all-dangling: zero-weight ring", 9L, 4,
         (0L until 9L).map(i => (i, (i + 1) % 9, 0.0)).toDF("src", "dst", "w")),
-      ("no edges", 5L, 3, Seq.empty[(Long, Long, Double)].toDF("src", "dst", "w")))
+      ("no edges", 5L, 3, Seq.empty[(Long, Long, Double)].toDF("src", "dst", "w")),
+      // round-robin over 3 map tasks spreads each source's out-edges, so a
+      // block sums its sources' totals from several tasks' partials
+      ("signed weights over 3 map tasks", 10L, 4, Seq(
+        (0L, 1L, 1.0), (0L, 2L, -1.0), // sign-cancelling total: dangling
+        (1L, 3L, -2.0), (1L, 0L, 0.5), // negative total: dangling
+        (2L, 4L, 0.0), (2L, 5L, 1.0), (2L, 3L, 2.0), // zero-weight edge, live
+        (3L, 0L, 1.0), (3L, 2L, 0.5), (3L, 1L, 0.5),
+        (6L, 7L, -0.5), (6L, 0L, 1.5), // negative edge of a live source
+        (7L, 0L, 0.5), (7L, 0L, 0.5), (5L, 7L, 1.0), (4L, 6L, 0.25), (4L, 5L, 0.25)
+      ).toDF("src", "dst", "w").repartition(3)))
   }
 }
