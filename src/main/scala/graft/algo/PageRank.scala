@@ -82,13 +82,16 @@ object PageRank {
     // wtot <= 0 (all-zero or sign-cancelling weights) would make p NaN/Inf
     // and poison every score through the gather sums: such vertices keep no
     // out-edges and fall into the dangling set instead (computed from
-    // normBase below), which is the probabilistically correct reading.
+    // normBase below), which is the probabilistically correct reading. So
+    // does a non-finite wtot (a NaN or infinite weight): Spark SQL orders
+    // NaN above every number, +inf included, so `< +inf` drops it — the
+    // array tier's rule (live iff 0 < W < +inf, W not NaN).
     // outW persisted at its O(V) aggregate output: consumed by BOTH the
     // normalize join and the dangling anti-join below — without it each
     // consumer re-runs the O(E) aggregation scan (r06; guide §5 caching).
     val outW = edges.groupBy("src").agg(
       (if (weighted) sum("w") else count(lit(1)).cast("double")).as("wtot"))
-      .filter(col("wtot") > 0)
+      .filter(col("wtot") > 0 && col("wtot") < Double.PositiveInfinity)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // normalize-join shape (r06, guide §3.1): broadcast the O(V) weight
     // side below 8M vertices so the O(E) edge stream never shuffles for

@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import java.nio.{ByteBuffer, ByteOrder}
+import scala.reflect.ClassTag
 
 import graft.graph.{CsrBlock, RangedCsr}
 import graft.model.IterationMetrics
@@ -179,9 +180,10 @@ private[graft] object StateCache {
   *   1. the caller's `kernel(x)` derives this iteration's block kernel from
   *      the current state (PageRank folds in its dangling mass here);
   *   2. the driver packs the state and torrent-broadcasts the bytes;
-  *   3. each executor unpacks it once ([[StateCache]]), each task runs the
-  *      kernel over its block and returns (base, packed slice, partial
-  *      delta); the broadcast is then released;
+  *   3. one `runJob` over the cached blocks: each executor unpacks the
+  *      state once ([[StateCache]]), each task runs the kernel over its
+  *      block and returns (base, packed slice, partial delta); the
+  *      broadcast is then released;
   *   4. the driver scatters the slices into `next` in parallel (disjoint id
   *      runs, so plain assignment is race-free), checks that they covered
   *      all n ids, and folds the partial deltas in block order — a sum for
@@ -215,12 +217,12 @@ object BlockIterate {
     * decode) and cut their lineage: without the local checkpoint every
     * iteration job re-serializes the whole upstream Catalyst/RDD graph
     * into its task binary (measured ~200 ms/iteration at 403M edges). One
-    * action materializes both and returns each block's edge count and
-    * out-weight slice. */
+    * action, a `runJob` over the blocks themselves, materializes both and
+    * returns each block's edge count and out-weight slice. */
   def materialize(built: RDD[CsrBlock], n: Int): Blocks = {
     val rdd = built.persist(StorageLevel.MEMORY_ONLY)
     rdd.localCheckpoint()
-    val parts = rdd.map(b => (b.base, b.colInd.length.toLong, b.outW)).collect()
+    val parts = perBlock(rdd)(b => (b.base, b.colInd.length.toLong, b.outW))
     val outW = if (parts.forall(_._3.isEmpty)) Array.emptyDoubleArray else {
       val w = new Array[Double](n)
       parts.foreach { case (base, _, slice) => System.arraycopy(slice, 0, w, base, slice.length) }
@@ -228,6 +230,13 @@ object BlockIterate {
     }
     new Blocks(rdd, n, parts.map(_._2).sum, outW)
   }
+
+  /** `f` of every block, in partition order: one `runJob` straight over the
+    * cached blocks (no per-call RDD, so a job is the job floor plus the
+    * kernel). A partition past the range contract's last block holds none.
+    * The caller's job group applies, as to any action. */
+  private def perBlock[T: ClassTag](rdd: RDD[CsrBlock])(f: CsrBlock => T): Array[T] =
+    rdd.sparkContext.runJob(rdd, (it: Iterator[CsrBlock]) => it.map(f).toArray).flatten
 
   /** CC/LP: labels start at the own id over the symmetric link blocks
     * ([[graft.graph.RangedCsr.buildSymmetric]]); a round that changes no
@@ -271,10 +280,10 @@ object BlockIterate {
         val t0 = System.nanoTime()
         val k = kernel(x)
         val bc = sc.broadcast(codec.pack(x))
-        val slices = blocks.rdd.map { b =>
+        val slices = perBlock(blocks.rdd) { b =>
           val (out, partial) = k(b, StateCache.get(bc, codec))
           (b.base, codec.packSlice(out), partial)
-        }.collect()
+        }
         bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
         val into = next
         val covered = java.util.stream.IntStream.range(0, slices.length).parallel()

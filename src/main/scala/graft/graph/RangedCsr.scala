@@ -4,7 +4,11 @@ import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.reflect.ClassTag
 
@@ -95,7 +99,9 @@ object RangedCsr {
     *     [values: m Floats|Doubles|absent];
     *   - an out-weight blob (kind [[OutWBlob]]): [keys: m Ints][sums: m
     *     Doubles] — one map task's partial Σw per source id (the key).
-    * Columnar within the blob so the reader's bulk gets are memcpys. */
+    * Columnar within the blob so the reader's bulk gets are memcpys. The
+    * map side ([[blobRdd]]) fills it from the scan's columnar batches when
+    * the input plan allows, else from rows; the bytes are the same. */
   private final val Header = 8
 
   private def le(b: Array[Byte], off: Int, len: Int): ByteBuffer =
@@ -143,9 +149,153 @@ object RangedCsr {
   private def blobSums(b: Array[Byte], m: Int, out: Array[Double]): Unit =
     le(b, Header + 4 * m, 8 * m).asDoubleBuffer().get(out, 0, m)
 
-  /** Map side: drain (key, payload[, value]) InternalRows into per-target
-    * packed blobs, streamed (a target's buffer flushes at FlushEdges — peak
-    * task transient is nParts * ~2 MB, independent of partition size).
+  /** The columnar scan under `df`, when its executed plan only reads a
+    * columnar source back into rows — `[WholeStageCodegen] Project(column
+    * references or aliases of them) ← ColumnarToRow(scan)`, or a bare
+    * `ColumnarToRow(scan)` — and `df`'s columns are (LONG, LONG[, DOUBLE]):
+    * the scan and, per column of `df`, its ordinal in the scan's batches.
+    * Any other plan (casts, literals, filters, exchanges, row sources) is
+    * None and is read as rows. */
+  private[graft] def columnarSource(df: DataFrame): Option[(SparkPlan, Array[Int])] = {
+    val types = df.schema.fields.map(_.dataType).toSeq
+    if (types != Seq(LongType, LongType) && types != Seq(LongType, LongType, DoubleType))
+      return None
+    def ordinals(out: Seq[Expression], c2r: ColumnarToRowExec) = {
+      val in = c2r.child.output.map(_.exprId)
+      val ords = out.map {
+        case a: Attribute => in.indexOf(a.exprId)
+        case Alias(a: Attribute, _) => in.indexOf(a.exprId)
+        case _ => -1
+      }
+      if (ords.contains(-1)) None else Some((c2r.child, ords.toArray))
+    }
+    val plan = df.queryExecution.executedPlan match {
+      case WholeStageCodegenExec(p) => p
+      case p => p
+    }
+    plan match {
+      case ProjectExec(out, c2r: ColumnarToRowExec) => ordinals(out, c2r)
+      case c2r: ColumnarToRowExec => ordinals(c2r.output, c2r)
+      case _ => None
+    }
+  }
+
+  /** One map task's packing of edges into per-target blobs (see
+    * [[blobRdd]]): `edge` takes one (key, payload, value) from either
+    * source, `out` holds the finished blobs, `finish` flushes the rest. */
+  private final class EdgePacker(
+      n: Int, nParts: Int, valMode: Int, wtot: Array[Double], sym: Boolean,
+      outWeights: Boolean, names: Array[String]) {
+    private val chunk = chunkFor(n, nParts)
+    // per-target buffers allocated on FIRST use: a locality-friendly input
+    // (e.g. the banded generator, whose dst range tracks its src range)
+    // touches 1-2 targets per map task, not all nParts
+    private val keyBuf = new Array[Array[Int]](nParts)
+    private val payBuf = new Array[Array[Int]](nParts)
+    private val valFBuf = if (valMode == ValF) new Array[Array[Float]](nParts) else null
+    private val valDBuf = if (valMode == ValD) new Array[Array[Double]](nParts) else null
+    private val cnt = new Array[Int](nParts)
+    private val wSum = if (outWeights) new Array[Array[Double]](nParts) else null
+    val out = new java.util.ArrayDeque[(Int, Array[Byte])]
+
+    /** A null id, or an id outside [0, n), fails the build. */
+    def badEdge(key: Any, pay: Any): Nothing = throw new IllegalArgumentException(
+      s"edge (${names(0)} = $key, ${names(1)} = $pay) has a null id or one outside [0, $n)")
+
+    def edge(key: Long, payload: Long, v: Double): Unit = {
+      if (key < 0 || key >= n || payload < 0 || payload >= n) badEdge(key, payload)
+      val k = key.toInt
+      val pay = payload.toInt
+      if (sym) {
+        if (k != pay) {
+          put(k, pay, 0.0)
+          put(pay, k, 0.0)
+        }
+      } else if (wtot != null) {
+        val wt = wtot(pay)
+        if (wt > 0) put(k, pay, v / wt)
+      } else if (outWeights) {
+        addW(pay, v)
+        if (!v.isNaN && !v.isInfinite) put(k, pay, v)
+      } else put(k, pay, v)
+    }
+
+    private def emit(p: Int): Unit = {
+      out.add((p, packBlob(cnt(p), keyBuf(p), payBuf(p),
+        if (valFBuf == null) null else valFBuf(p),
+        if (valDBuf == null) null else valDBuf(p), valMode)))
+      cnt(p) = 0
+    }
+    private def put(k: Int, pay: Int, v: Double): Unit = {
+      val p = k / chunk
+      if (keyBuf(p) == null) {
+        keyBuf(p) = new Array[Int](FlushEdges)
+        payBuf(p) = new Array[Int](FlushEdges)
+        if (valFBuf != null) valFBuf(p) = new Array[Float](FlushEdges)
+        if (valDBuf != null) valDBuf(p) = new Array[Double](FlushEdges)
+      }
+      val c = cnt(p)
+      keyBuf(p)(c) = k
+      payBuf(p)(c) = pay
+      if (valFBuf != null) valFBuf(p)(c) = v.toFloat
+      else if (valDBuf != null) valDBuf(p)(c) = v
+      cnt(p) = c + 1
+      if (c + 1 == FlushEdges) emit(p)
+    }
+    private def addW(pay: Int, v: Double): Unit = {
+      val p = pay / chunk
+      val lo = p * chunk
+      if (wSum(p) == null) wSum(p) = new Array[Double](math.min(chunk, n - lo))
+      wSum(p)(pay - lo) += v
+    }
+    // one blob per touched payload range: its non-zero partial sums (a
+    // zero partial adds nothing to the total; NaN != 0 is shipped)
+    private def emitW(p: Int): Unit = {
+      val sums = wSum(p)
+      val ids = new Array[Int](sums.length)
+      val vs = new Array[Double](sums.length)
+      var m = 0
+      var i = 0
+      while (i < sums.length) {
+        if (sums(i) != 0.0) { ids(m) = p * chunk + i; vs(m) = sums(i); m += 1 }
+        i += 1
+      }
+      if (m > 0) out.add((p, packOutW(m, ids, vs)))
+    }
+    def finish(): Unit = {
+      var p = 0
+      while (p < nParts) {
+        if (cnt(p) > 0) emit(p)
+        if (wSum != null && wSum(p) != null) emitW(p)
+        p += 1
+      }
+    }
+  }
+
+  /** The packer's blobs over one map task's input: `read` hands each source
+    * element (a row, or a whole columnar batch, finished before the source
+    * is asked for the next one, which may reuse it) to the packer. */
+  private def packed[T](src: Iterator[T], packer: EdgePacker)(read: T => Unit)
+      : Iterator[(Int, Array[Byte])] = new Iterator[(Int, Array[Byte])] {
+    private var flushed = false
+    private def pump(): Unit = {
+      while (packer.out.isEmpty && src.hasNext) read(src.next())
+      if (packer.out.isEmpty && !flushed) { packer.finish(); flushed = true }
+    }
+    def hasNext: Boolean = { pump(); !packer.out.isEmpty }
+    def next(): (Int, Array[Byte]) = { pump(); packer.out.poll() }
+  }
+
+  /** Map side: drain (key, payload[, value]) edges into per-target packed
+    * blobs, streamed (a target's buffer flushes at FlushEdges — peak task
+    * transient is nParts * ~2 MB, independent of partition size).
+    *
+    * The edges are read straight from the scan's `ColumnarBatch`es when
+    * [[columnarSource]] matches `df`'s plan (e.g. a parquet table projected
+    * to its columns), else as `queryExecution.toRdd` rows; both feed the
+    * same per-edge routine, and a null `value` reads as 0.0 on both. An
+    * edge with a null id, or an id outside [0, n), fails the build with an
+    * IllegalArgumentException that names it.
     *
     * @param df      pre-projected (key LONG, payload LONG[, value DOUBLE])
     * @param norm    optional normalization: value := value / norm(payload),
@@ -170,98 +320,48 @@ object RangedCsr {
       outWeights: Boolean = false): RDD[(Int, Array[Byte])] = {
     require(!outWeights || (valMode != ValNone && norm == null && !sym),
       "out-weights are summed over raw edge values only")
-    val chunk = chunkFor(n, nParts)
-    df.queryExecution.toRdd.mapPartitions { rows =>
-      // per-target buffers allocated on FIRST use: a locality-friendly input
-      // (e.g. the banded generator, whose dst range tracks its src range)
-      // touches 1-2 targets per map task, not all nParts
-      val keyBuf = new Array[Array[Int]](nParts)
-      val payBuf = new Array[Array[Int]](nParts)
-      val valFBuf = if (valMode == ValF) new Array[Array[Float]](nParts) else null
-      val valDBuf = if (valMode == ValD) new Array[Array[Double]](nParts) else null
-      val cnt = new Array[Int](nParts)
-      val wtot = if (norm == null) null else norm.value
-      val wSum = if (outWeights) new Array[Array[Double]](nParts) else null
-      new Iterator[(Int, Array[Byte])] {
-        private val out = new java.util.ArrayDeque[(Int, Array[Byte])]
-        private var flushed = false
-        private def emit(p: Int): Unit = {
-          out.add((p, packBlob(cnt(p), keyBuf(p), payBuf(p),
-            if (valFBuf == null) null else valFBuf(p),
-            if (valDBuf == null) null else valDBuf(p), valMode)))
-          cnt(p) = 0
-        }
-        private def put(k: Long, pay: Long, v: Double): Unit = {
-          val p = (k / chunk).toInt
-          if (keyBuf(p) == null) {
-            keyBuf(p) = new Array[Int](FlushEdges)
-            payBuf(p) = new Array[Int](FlushEdges)
-            if (valFBuf != null) valFBuf(p) = new Array[Float](FlushEdges)
-            if (valDBuf != null) valDBuf(p) = new Array[Double](FlushEdges)
-          }
-          val c = cnt(p)
-          keyBuf(p)(c) = k.toInt
-          payBuf(p)(c) = pay.toInt
-          if (valFBuf != null) valFBuf(p)(c) = v.toFloat
-          else if (valDBuf != null) valDBuf(p)(c) = v
-          cnt(p) = c + 1
-          if (c + 1 == FlushEdges) emit(p)
-        }
-        private def addW(pay: Long, v: Double): Unit = {
-          val p = (pay / chunk).toInt
-          val lo = p.toLong * chunk
-          if (wSum(p) == null) wSum(p) = new Array[Double](math.min(chunk, n - lo).toInt)
-          wSum(p)((pay - lo).toInt) += v
-        }
-        // one blob per touched payload range: its non-zero partial sums (a
-        // zero partial adds nothing to the total; NaN != 0 is shipped)
-        private def emitW(p: Int): Unit = {
-          val sums = wSum(p)
-          val ids = new Array[Int](sums.length)
-          val vs = new Array[Double](sums.length)
-          var m = 0
-          var i = 0
-          while (i < sums.length) {
-            if (sums(i) != 0.0) { ids(m) = p * chunk + i; vs(m) = sums(i); m += 1 }
-            i += 1
-          }
-          if (m > 0) out.add((p, packOutW(m, ids, vs)))
-        }
-        private def pump(): Unit = {
-          while (out.isEmpty && rows.hasNext) {
-            val r = rows.next()
-            val k = r.getLong(0)
-            val pay = r.getLong(1)
-            if (sym) {
-              if (k != pay) {
-                put(k, pay, 0.0)
-                put(pay, k, 0.0)
-              }
-            } else if (wtot != null) {
-              val wt = wtot(pay.toInt)
-              if (wt > 0) put(k, pay, r.getDouble(2) / wt)
-            } else if (outWeights) {
-              val v = r.getDouble(2)
-              addW(pay, v)
-              if (!v.isNaN && !v.isInfinite) put(k, pay, v)
-            } else {
-              put(k, pay, if (valMode == ValNone) 0.0 else r.getDouble(2))
+    val names = df.columns
+    val hasVal = valMode != ValNone
+    def packer() =
+      new EdgePacker(n, nParts, valMode, if (norm == null) null else norm.value, sym,
+        outWeights, names)
+    val blobs = columnarSource(df) match {
+      case Some((scan, ords)) =>
+        val (ko, po, vo) = (ords(0), ords(1), if (hasVal) ords(2) else -1)
+        scan.executeColumnar().mapPartitions { batches =>
+          val p = packer()
+          packed(batches, p) { batch =>
+            val keys = batch.column(ko)
+            val pays = batch.column(po)
+            val vals = if (hasVal) batch.column(vo) else null
+            val idNulls = keys.hasNull || pays.hasNull
+            val valNulls = hasVal && vals.hasNull
+            val m = batch.numRows
+            var i = 0
+            while (i < m) {
+              // a null's data slot is never read: the reader reuses vectors
+              if (idNulls && (keys.isNullAt(i) || pays.isNullAt(i)))
+                p.badEdge(if (keys.isNullAt(i)) null else keys.getLong(i),
+                  if (pays.isNullAt(i)) null else pays.getLong(i))
+              p.edge(keys.getLong(i), pays.getLong(i),
+                if (!hasVal || (valNulls && vals.isNullAt(i))) 0.0 else vals.getDouble(i))
+              i += 1
             }
           }
-          if (out.isEmpty && !flushed && !rows.hasNext) {
-            var p = 0
-            while (p < nParts) {
-              if (cnt(p) > 0) emit(p)
-              if (wSum != null && wSum(p) != null) emitW(p)
-              p += 1
-            }
-            flushed = true
+        }
+      case None =>
+        df.queryExecution.toRdd.mapPartitions { rows =>
+          val p = packer()
+          packed(rows, p) { r =>
+            if (r.isNullAt(0) || r.isNullAt(1))
+              p.badEdge(if (r.isNullAt(0)) null else r.getLong(0),
+                if (r.isNullAt(1)) null else r.getLong(1))
+            // an UnsafeRow reads a null value as 0.0
+            p.edge(r.getLong(0), r.getLong(1), if (hasVal) r.getDouble(2) else 0.0)
           }
         }
-        def hasNext: Boolean = { pump(); !out.isEmpty }
-        def next(): (Int, Array[Byte]) = { pump(); out.poll() }
-      }
-    }.partitionBy(new IdPartitioner(nParts))
+    }
+    blobs.partitionBy(new IdPartitioner(nParts))
   }
 
   /** Drain a reduce partition's blobs (kept as packed byte[]s — the same

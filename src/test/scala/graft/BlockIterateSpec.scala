@@ -1,18 +1,27 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.algo.{ConnectedComponents, ConnectedComponentsArray, LabelPropagation,
   LabelPropagationArray, PageRank, PageRankArray, SpmvLayouts}
 import graft.exec.{GatherStrategy, IterConfig, Iterate}
+import graft.graph.RangedCsr
 import graft.sources.Synth
 
 /** The broadcast-array tiers on the shared block driver (BlockIterate):
   *   - f32 and f64 PageRank agree and stop together; f32 warns on a
   *     tolerance it cannot resolve;
   *   - the PageRank build reads its edge table once, and non-finite
-  *     weights make their source dangling instead of leaking its mass;
+  *     weights make their source dangling instead of leaking its mass, in
+  *     the ShuffleJoin tier too;
+  *   - a null id, or one outside [0, n), fails the build on row-backed and
+  *     columnar inputs;
+  *   - the columnar build source gives bit-identical results to the row
+  *     source on the same table;
+  *   - every iteration is one job over the cached blocks;
   *   - a snapshot written by the array tier reads back as the returned state;
   *   - PageRank, CC and LP array tiers are row-identical to their DataFrame
   *     tiers on shapes that stress the range contract and the builds;
@@ -82,12 +91,51 @@ class BlockIterateSpec extends SparkSuite {
     // (w = NaN) and 1 (w = +inf) are dangling; 0's finite edge carries 0.
     val edges = Seq((0L, 1L, Double.NaN), (0L, 3L, 1.0), (1L, 2L, Double.PositiveInfinity),
       (2L, 3L, 1.0), (3L, 2L, 1.0)).toDF("src", "dst", "w")
-    for (f32 <- Seq(false, true)) {
-      val x = scores(PageRankArray.run(spark, edges, 4, damping = 0.5, floatPrecision = f32,
-        cfg = IterConfig(tol = 0.0, maxIter = 8)).state).map(_._2)
-      assert(x.length == 4 && x.forall(v => !v.isNaN && !v.isInfinite), s"f32=$f32: ${x.toSeq}")
-      assert(math.abs(x.sum - 1.0) <= 1e-9, s"f32=$f32: ${x.toSeq}")
-      assert(x(0) == x(1) && x(2) == x(3), s"f32=$f32: ${x.toSeq}")
+    val cfg = IterConfig(tol = 0.0, maxIter = 8)
+    val runs = Seq(
+      "f64" -> PageRankArray.run(spark, edges, 4, damping = 0.5, cfg = cfg),
+      "f32" -> PageRankArray.run(spark, edges, 4, damping = 0.5, cfg = cfg,
+        floatPrecision = true),
+      "ShuffleJoin" -> PageRank.run(spark, edges, 4, damping = 0.5, cfg = cfg,
+        strategy = GatherStrategy.ShuffleJoin))
+    val xs = runs.map { case (name, r) => name -> scores(r.state).map(_._2) }
+    for ((name, x) <- xs) {
+      assert(x.length == 4 && x.forall(v => !v.isNaN && !v.isInfinite), s"$name: ${x.toSeq}")
+      assert(math.abs(x.sum - 1.0) <= 1e-9, s"$name: ${x.toSeq}")
+      assert(x(0) == x(1) && x(2) == x(3), s"$name: ${x.toSeq}")
+    }
+    xs.head._2.zip(xs.last._2).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-12, s"f64 ${xs.head._2.toSeq} vs ShuffleJoin ${xs.last._2.toSeq}")
+    }
+  }
+
+  test("a null id or an id outside [0, n) fails the build, on rows and on batches") {
+    val n = 5L
+    val good = Seq((Option(0L), Option(1L), 1.0), (Option(1L), Option(2L), 1.0))
+    val bad = Seq(
+      "null src" -> ((None, Some(3L), 1.0), "src = null"),
+      "null dst" -> ((Some(3L), None, 1.0), "dst = null"),
+      "dst = n" -> ((Some(3L), Some(n), 1.0), s"dst = $n"))
+    for ((what, (edge, shown)) <- bad; columnar <- Seq(false, true)) {
+      val rows = (good :+ edge).toDF("src", "dst", "w")
+      def check(edges: DataFrame): Unit = {
+        assert(RangedCsr.columnarSource(BlockIterateSpec.weighted(edges)).isDefined == columnar)
+        val builds = Seq[(String, () => Any)](
+          "PageRankArray" -> (() => PageRankArray.run(spark, edges, n)),
+          "PageRankArray f32" -> (() => PageRankArray.run(spark, edges, n, floatPrecision = true)),
+          "ConnectedComponentsArray" -> (() => ConnectedComponentsArray.run(spark, edges, n)),
+          "LabelPropagationArray" -> (() => LabelPropagationArray.run(spark, edges, n)))
+        for ((tier, build) <- builds) {
+          val e = intercept[Exception](build())
+          val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .collectFirst { case x: IllegalArgumentException => x }
+          val where = s"$what, $tier, columnar = $columnar"
+          assert(iae.isDefined, s"$where: $e")
+          assert(iae.get.getMessage.startsWith("edge (") && iae.get.getMessage.contains(shown),
+            s"$where: ${iae.get.getMessage}")
+        }
+      }
+      if (columnar) BlockIterateSpec.viaParquet(spark, rows)(check) else check(rows)
     }
   }
 
@@ -129,6 +177,67 @@ class BlockIterateSpec extends SparkSuite {
     }
   }
 
+  test("the columnar build source == the row source, bit for bit, on parquet inputs") {
+    for ((name, n, p, rows) <- BlockIterateSpec.shapes(spark)) withPartitions(spark, p) {
+      BlockIterateSpec.viaParquet(spark, rows) { columnar =>
+        // a filter the plan match rejects: the same rows, read as rows
+        val rowWise = columnar.filter(col("src") >= 0)
+        assert(RangedCsr.columnarSource(BlockIterateSpec.weighted(columnar)).isDefined, name)
+        assert(RangedCsr.columnarSource(BlockIterateSpec.symmetric(columnar)).isDefined, name)
+        assert(RangedCsr.columnarSource(BlockIterateSpec.weighted(rowWise)).isEmpty, name)
+        assert(RangedCsr.columnarSource(BlockIterateSpec.symmetric(rowWise)).isEmpty, name)
+        val cfg = IterConfig(tol = 0.0, maxIter = 6)
+        for (f32 <- Seq(false, true)) {
+          def pr(e: DataFrame) = scores(PageRankArray.run(spark, e, n, cfg = cfg,
+            floatPrecision = f32).state).toSeq
+          assert(pr(columnar) == pr(rowWise), s"PageRank f32=$f32: $name")
+        }
+        assert(labels(ConnectedComponentsArray.run(spark, columnar, n).labels) ==
+          labels(ConnectedComponentsArray.run(spark, rowWise, n).labels), s"CC: $name")
+        assert(labels(LabelPropagationArray.run(spark, columnar, n, maxIter = 5).labels) ==
+          labels(LabelPropagationArray.run(spark, rowWise, n, maxIter = 5).labels), s"LP: $name")
+      }
+    }
+  }
+
+  test("each array-tier iteration is one job over the cached blocks") {
+    val sc = spark.sparkContext
+    val group = "graft-block-iterate-jobs"
+    // per job of the group: its final RDD and every RDD its stages compute
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Set[Int])]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          val result = e.stageInfos.maxBy(_.stageId)
+          jobs.add((e.jobId, result.rddInfos.head.id,
+            e.stageInfos.flatMap(_.rddInfos.map(_.id)).toSet))
+        }
+    }
+    val edges = Synth.blocks(spark, 400, 40)
+    val runs = Seq[(String, () => Int)](
+      "PageRank" -> (() => PageRankArray.run(spark, edges, 400,
+        cfg = IterConfig(tol = 0.0, maxIter = 5)).metrics.length),
+      "PageRank f32" -> (() => PageRankArray.run(spark, edges, 400, floatPrecision = true,
+        cfg = IterConfig(tol = 0.0, maxIter = 5)).metrics.length),
+      "CC" -> (() => ConnectedComponentsArray.run(spark, edges, 400).metrics.length),
+      "LP" -> (() => LabelPropagationArray.run(spark, edges, 400, maxIter = 4).metrics.length))
+    sc.addSparkListener(l)
+    try for ((name, run) <- runs) {
+      jobs.clear()
+      sc.setJobGroup(group, name)
+      val iters = try run() finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      val seen = jobs.toArray(Array.empty[(Int, Int, Set[Int])]).sortBy(_._1).toSeq
+      assert(iters > 1 && seen.length == iters + 1,
+        s"$name: ${seen.length} jobs for the build and $iters iterations")
+      // the first job builds and caches the blocks; every iteration job
+      // computes exactly those blocks again: no RDD made after the build
+      val blocks = seen.head._2
+      assert(seen.tail.forall(_._2 == blocks), s"$name: ${seen.map(_._2)}")
+      assert(seen.tail.map(_._3).distinct.length == 1, s"$name: ${seen.map(_._3)}")
+    } finally sc.removeSparkListener(l)
+  }
+
   test("array tiers release their blocks without the locally-checkpointed WARN") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
@@ -150,6 +259,23 @@ object BlockIterateSpec {
     spark.conf.set("spark.sql.shuffle.partitions", p.toString)
     try f finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
+
+  /** `f` over `rows` written to, and read back from, a parquet table in a
+    * temp dir that is removed afterwards. */
+  def viaParquet[T](spark: SparkSession, rows: DataFrame)(f: DataFrame => T): T = {
+    val dir = Files.createTempDirectory("graft-parquet")
+    try {
+      rows.write.parquet(dir.resolve("t").toString)
+      f(spark.read.parquet(dir.resolve("t").toString))
+    } finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+  }
+
+  /** The projections the PageRank and CC/LP array tiers hand their builds. */
+  def weighted(edges: DataFrame): DataFrame =
+    edges.select(col("dst").cast("long"), col("src").cast("long"), col("w").cast("double"))
+  def symmetric(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
 
   /** (name, n, partitions, edges): trailing empty blocks (partitions > V),
     * V not divisible by the partition count, all-dangling (zero weights),
