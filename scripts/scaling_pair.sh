@@ -16,7 +16,7 @@ EXC=${EXC:-6}   # cores per executor
 PARTS=${PARTS:-24}
 MAXLOAD=${MAXLOAD:-3.0}
 OUT=${OUT:-/tmp/scaling_runs.jsonl}
-EXTRA=${EXTRA:-}   # extra Scaling args, e.g. --broadcast
+EXTRA=${EXTRA:-}   # extra Scaling args
 # executor heap: at L>=192 the cached edge table outgrows 14g's storage
 # fraction on the single-executor N leg and the resulting spill slows ONLY
 # that level (a confound that would flatter the ratio) — size it so neither

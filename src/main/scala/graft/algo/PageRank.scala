@@ -5,8 +5,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.exec.{Gather, GatherStrategy, IterConfig, Iterate, LoopResult}
 
-/** PageRank as iterated gather-scatter over a persisted, pre-normalized,
-  * src-partitioned contribution table.
+/** PageRank as iterated gather-scatter, in two tiers picked by `strategy`
+  * exactly as [[LabelPropagation.run]] picks its tiers:
+  *   - `GatherStrategy.resolve` gives `BroadcastState` (`Auto` at
+  *     V <= `maxBroadcastVertices`, 4M, or an explicit `BroadcastState`):
+  *     [[PageRankArray]], flat CSR blocks with a broadcast primitive-array
+  *     state, resume included;
+  *   - it gives `ShuffleJoin` (explicit, or `Auto` above the bound): the
+  *     DataFrame body below, a persisted, pre-normalized, src-block-
+  *     partitioned contribution table — the 10^12-vertex design.
   *
   * One iteration IS the reference's SpMV (its kernel is "the gather-scatter
   * kernel of one PageRank iteration", SURVEY.md TL;DR) in the transposed
@@ -14,15 +21,20 @@ import graft.exec.{Gather, GatherStrategy, IterConfig, Iterate, LoopResult}
   * dst. The reference stops at a single application; the north rule requires
   * full damped, dangling-aware power iteration to 1e-6 convergence.
   *
-  * Scale design (per SURVEY.md §4.2):
+  * Scale design of the ShuffleJoin tier (per SURVEY.md §4.2):
   *   - edges are normalized ONCE (p = w / Σ_out w, or 1/outdeg unweighted) and
-  *     persisted hash-partitioned by src: iterations never move edges, only
-  *     the O(V) state (shuffle strategy) or nothing (broadcast strategy);
+  *     persisted partitioned by src block: iterations never move edges, only
+  *     the O(V) state and the partial-aggregated contributions;
   *   - dangling mass is recovered from mass conservation (1 - Σ contributions)
   *     — no per-iteration dangling join;
   *   - contribution aggregation partial-aggregates map-side before the O(V)
   *     final shuffle;
   *   - lineage checkpointed, state persisted/unpersisted per generation.
+  *
+  * `resumeFrom` = (an (id, x) state, e.g. from [[graft.exec.Iterate.resume]],
+  * and its iteration number) continues a run on either tier; both write the
+  * same [[graft.exec.Iterate.snapshot]] format, so a snapshot of one tier
+  * resumes on the other.
   *
   * Scores sum to 1.0 (probability form):
   *   x'[v] = (1-d)/n + d * (Σ_{u->v} p(u,v)·x[u] + danglingMass/n)
@@ -42,39 +54,19 @@ object PageRank {
       cfg: IterConfig = IterConfig(),
       weighted: Boolean = true,
       strategy: GatherStrategy = GatherStrategy.Auto(),
-      resumeFrom: Option[(DataFrame, Int)] = None,
-      bucketed: Boolean = false): Result = {
-    val resolved = GatherStrategy.resolve(strategy, nVertices)
-    // r06 (guide §1.2 "the distributed algorithm first"): Auto in the
-    // broadcast regime routes to the flat-CSR broadcast-array kernel —
-    // same formula, same damping/dangling semantics, same convergence
-    // norms, ~10-30x the per-iteration throughput of the DataFrame
-    // broadcast-join plan (r05 bench: 0.38 s/iter DF vs 0.03-0.09 s/iter
-    // array at these shapes). Guards: an EXPLICIT BroadcastState request
-    // keeps the DataFrame plan (tests and lanes that exist to measure that
-    // plan), resume and bucketed builds stay on the DataFrame path, and
-    // Auto's own maxBroadcastVertices bound keeps the kernel inside its
-    // V-fits-in-memory contract.
-    strategy match {
-      case GatherStrategy.Auto(_)
-          if resolved == GatherStrategy.BroadcastState &&
-            resumeFrom.isEmpty && !bucketed =>
-        return PageRankArray.run(spark, edges, nVertices, damping, cfg, weighted)
-      case _ => ()
-    }
-    val stratName = resolved.toString
+      resumeFrom: Option[(DataFrame, Int)] = None): Result = {
+    // before any conf.set: the array tier leaves the session conf alone
+    if (GatherStrategy.resolve(strategy, nVertices) == GatherStrategy.BroadcastState)
+      return PageRankArray.run(spark, edges, nVertices, damping, cfg, weighted,
+        resumeFrom = resumeFrom)
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
     // One-time "CSR build" (reference C1): normalize edge weights, append a
     // zero-weight self-contribution per vertex (so the per-iteration gather
     // covers EVERY vertex and no completion join is needed), and pin the
-    // physical partitioning explicitly:
-    //   - BroadcastState: partition by dst -> the per-iteration groupBy(dst)
-    //     is PARTITION-LOCAL; with the state broadcast, an iteration
-    //     shuffles NOTHING (this is the reference's K6 broadcast-gather).
-    //   - ShuffleJoin: partition by src -> only the O(V) state moves for the
-    //     join; the O(E) contribution shuffle to dst remains (inherent when
-    //     the state is too large to broadcast).
+    // physical partitioning explicitly: by src block (below), so only the
+    // O(V) state moves for the join; the O(E) contribution shuffle to dst
+    // remains (inherent when the state is too large to broadcast).
     // Explicit repartition(n, col), NOT a bare groupBy/join partitioning:
     // AQE coalesces those exchanges, the cached relation loses its
     // partitioning guarantee, and every iteration re-shuffles all edges
@@ -104,55 +96,22 @@ object PageRank {
         ((if (weighted) col("w") else lit(1.0)) / col("wtot")).as("p"))
     val zeros = spark.range(nVertices)
       .select(col("id").as("src"), col("id").as("dst"), lit(0.0).as("p"))
-    val partKeyName = resolved match {
-      case GatherStrategy.BroadcastState => "dst"
-      case _                             => "src"
-    }
-    // Two physical homes for the one-time CSR build:
-    //   - bucketed=false: columnar cache (InMemoryRelation). Fastest to
-    //     build; per-iteration scans pay columnar decompression, which is
-    //     allocation-heavy and contends at high thread counts.
-    //   - bucketed=true: a BUCKETED parquet table. The per-iteration scan is
-    //     the vectorized parquet reader (Spark's cheapest scan) served from
-    //     the OS page cache, and the bucket metadata preserves the
-    //     HashPartitioning guarantee, so the gather aggregation still needs
-    //     no shuffle. This is also the shape a real cluster wants: a
-    //     bucketed edge table on distributed storage that iterations scan
-    //     in place.
-    val bucketTable = s"graft_norm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    // r06, ShuffleJoin cache only (guide §2.3): pin the partitioning on a
-    // COARSENED src block (_blk = src div B, ~64 blocks/partition) instead
-    // of hash(src). Joining on (_blk, src) is semantically identical (blk
-    // is a function of src on both sides) and Catalyst still sees the
-    // cached partitioning (HashPartitioning(_blk) ⊆ clustering {_blk,src}),
-    // but rows with NEARBY ids now share partitions, so on id-local graphs
-    // the post-join partial aggregation collapses to ~V/P groups before
-    // the exchange — the per-iteration shuffle dropped 347 MB -> ~30 MB at
-    // 2^20x16 (Gather.gather blockKey scaladoc). Hash of many small blocks,
-    // not ranges: no sampling pass, and hot id regions spread across
+    // r06 (guide §2.3): pin the partitioning on a COARSENED src block
+    // (_blk = src div B, ~64 blocks/partition) instead of hash(src). Joining
+    // on (_blk, src) is semantically identical (blk is a function of src on
+    // both sides) and Catalyst still sees the cached partitioning
+    // (HashPartitioning(_blk) ⊆ clustering {_blk,src}), but rows with
+    // NEARBY ids now share partitions, so on id-local graphs the post-join
+    // partial aggregation collapses to ~V/P groups before the exchange —
+    // the per-iteration shuffle dropped 347 MB -> ~30 MB at 2^20x16
+    // (Gather.gather blockKey scaladoc). Hash of many small blocks, not
+    // ranges: no sampling pass, and hot id regions spread across
     // partitions at block granularity.
     val blkSize = math.max(1L, nVertices / (nParts.toLong * 64))
-    val blockKey: Option[(String, Long)] = resolved match {
-      case GatherStrategy.ShuffleJoin if !bucketed => Some(("_blk", blkSize))
-      case _ => None
-    }
-    val norm =
-      if (bucketed) {
-        normBase.union(zeros).write.mode("overwrite")
-          .bucketBy(nParts, partKeyName)
-          .format("parquet").saveAsTable(bucketTable)
-        spark.table(bucketTable)
-      } else blockKey match {
-        case Some((blkCol, b)) =>
-          normBase.union(zeros)
-            .withColumn(blkCol, expr(s"src div $b"))
-            .repartition(nParts, col(blkCol))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        case None =>
-          normBase.union(zeros)
-            .repartition(nParts, col(partKeyName))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    val norm = normBase.union(zeros)
+      .withColumn("_blk", expr(s"src div $blkSize"))
+      .repartition(nParts, col("_blk"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = norm.count() - nVertices // real edges only, for throughput
 
     // Dangling vertex set (no out-edges), computed once. Their mass is
@@ -184,8 +143,8 @@ object PageRank {
     // _blk has ~64x more distinct values than partitions.
     val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
     val coPartPrev = spark.conf.get(coPartKey, "true")
-    if (blockKey.isDefined) spark.conf.set(coPartKey, "false")
-    val loop: LoopResult = try Iterate.loop(init, cfg, nEdges, stratName, startIter) {
+    spark.conf.set(coPartKey, "false")
+    val loop: LoopResult = try Iterate.loop(init, cfg, nEdges, "ShuffleJoin", startIter) {
       (state, _) =>
         // zero self-contributions guarantee every vertex appears: the gather
         // output IS the dense state, no completion join. The same diagonal
@@ -195,7 +154,8 @@ object PageRank {
         // old-vs-new dist join.
         val completed = Gather
           .gather(norm, state, keyCol = "dst", lookupCol = "src", pCol = "p",
-            resolved, withOldState = true, blockKey = blockKey)
+            GatherStrategy.ShuffleJoin, withOldState = true,
+            blockKey = Some(("_blk", blkSize)))
           .select(col("dst").as("id"), col("x").as("g"), col("x_old"))
         if (nDangling == 0) {
           completed.select(col("id"),
@@ -215,8 +175,7 @@ object PageRank {
     } finally spark.conf.set(coPartKey, coPartPrev)
     dangling.unpersist()
     outW.unpersist()
-    if (bucketed) spark.sql(s"DROP TABLE IF EXISTS $bucketTable")
-    else norm.unpersist()
-    Result(loop.state, loop.metrics, resolved)
+    norm.unpersist()
+    Result(loop.state, loop.metrics, GatherStrategy.ShuffleJoin)
   }
 }

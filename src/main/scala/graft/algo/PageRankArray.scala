@@ -60,13 +60,17 @@ import graft.graph.RangedCsr
   *
   * Scope: the BROADCAST REGIME ONLY — V must fit in executor+driver memory
   * (~24 B/vertex per executor: state, contributions and inverse out-
-  * weights; fine to ~10^8 locally). Beyond that, the DataFrame
-  * ShuffleJoin path in [[PageRank]] is the 10^12-vertex design; this is the
-  * small-V accelerator, selected by [[graft.exec.GatherStrategy.Auto]]
-  * (4M-vertex switch) or explicitly. Measured crossover context (r02): DF
-  * broadcast rebuilds the hashed relation per iteration (N→4N efficiency
-  * 0.28 but 4.45 s/iter at 2^21) vs ShuffleJoin (0.84 efficiency, 16.9
-  * s/iter).
+  * weights; fine to ~10^8 locally). [[PageRank.run]] runs this tier
+  * whenever its strategy resolves to `BroadcastState` (`Auto` at V <= 4M,
+  * or explicitly), resumed runs included; beyond that, its DataFrame
+  * ShuffleJoin tier is the 10^12-vertex design.
+  *
+  * `resumeFrom` = (state, iteration) continues a run: the (id, x) rows —
+  * e.g. a [[graft.exec.Iterate.snapshot]] of either PageRank tier — are
+  * collected into the driver's O(V) start state, which must hold every id
+  * in [0, n) exactly once with a non-null, non-NaN x (anything else fails,
+  * naming the first offending id), and iterations count on from
+  * `iteration`.
   */
 object PageRankArray {
 
@@ -80,13 +84,19 @@ object PageRankArray {
       damping: Double = 0.85,
       cfg: IterConfig = IterConfig(),
       weighted: Boolean = true,
-      floatPrecision: Boolean = false): PageRank.Result = {
+      floatPrecision: Boolean = false,
+      resumeFrom: Option[(DataFrame, Int)] = None): PageRank.Result = {
     require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
     val n = nVertices.toInt
     val tolFloor = f32TolFloor(cfg.norm, nVertices)
     if (floatPrecision && cfg.tol > 0 && cfg.tol < tolFloor)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(s"f32 PageRank cannot resolve " +
         s"${cfg.norm} tol ${cfg.tol} (floor $tolFloor): its stop depends on rounding noise")
+    // the start state, before the build so a bad resume state fails first;
+    // an f32 run rounds it to float, as the F32 codec's driver state holds
+    // only values that came from floats
+    val init = resumeFrom.fold(Array.fill(n)(1.0 / nVertices))(r => denseState(r._1, n))
+    if (floatPrecision) for (u <- init.indices) init(u) = init(u).toFloat
 
     // one-time CSR build (in-neighbor orientation; reference C1+C2) in ONE
     // scan of the edge table: the ranged-CSR shuffle (graft.graph.RangedCsr:
@@ -116,9 +126,10 @@ object PageRankArray {
 
     val invWBc = spark.sparkContext.broadcast(invW)
 
-    def iterate[E <: AnyRef](codec: StateCodec[Array[Double], E], init: Double,
-        strategy: String)(rows: (Double, Double, Boolean) => Kernel[E]) =
-      BlockIterate.run(spark, blocks, codec, Array.fill(n)(init), cfg, strategy, "x") { x =>
+    def iterate[E <: AnyRef](codec: StateCodec[Array[Double], E], strategy: String)(
+        rows: (Double, Double, Boolean) => Kernel[E]) =
+      BlockIterate.run(spark, blocks, codec, init, cfg, strategy, "x",
+          startIter = resumeFrom.fold(0)(_._2)) { x =>
         var dm = 0.0
         var di = 0
         while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
@@ -126,11 +137,31 @@ object PageRankArray {
       }
     val (state, metrics) = try {
       if (floatPrecision)
-        iterate(StateCodec.F32, (1.0 / nVertices).toFloat, "BroadcastArrayF32")(
-          rowsF32(_, _, _, invWBc))
-      else iterate(StateCodec.F64, 1.0 / nVertices, "BroadcastArray")(rowsF64(_, _, _, invWBc))
+        iterate(StateCodec.F32, "BroadcastArrayF32")(rowsF32(_, _, _, invWBc))
+      else iterate(StateCodec.F64, "BroadcastArray")(rowsF64(_, _, _, invWBc))
     } finally invWBc.destroy()
     PageRank.Result(state, metrics, graft.exec.GatherStrategy.BroadcastState)
+  }
+
+  /** A resume state's (id, x) rows as the dense array x[id], streamed to
+    * the driver one partition at a time. The state comes from disk, so an
+    * id that is null, outside [0, n), repeated or missing, or an x that is
+    * null or NaN, fails with an IllegalArgumentException naming the first
+    * such id — a missing id would otherwise silently start at 0. */
+  private def denseState(state: DataFrame, n: Int): Array[Double] = {
+    val x = Array.fill(n)(Double.NaN) // NaN = not read yet: no read x is NaN
+    state.select(col("id").cast("long"), col("x").cast("double")).toLocalIterator()
+      .forEachRemaining { r =>
+        require(!r.isNullAt(0), "resume state: null id")
+        val id = r.getLong(0)
+        require(id >= 0 && id < n, s"resume state: id $id outside [0, $n)")
+        require(x(id.toInt).isNaN, s"resume state: id $id appears more than once")
+        require(!r.isNullAt(1) && !r.getDouble(1).isNaN, s"resume state: id $id has a null or NaN x")
+        x(id.toInt) = r.getDouble(1)
+      }
+    val missing = x.indexWhere(_.isNaN)
+    require(missing < 0, s"resume state: id $missing is missing")
+    x
   }
 
   /** The smallest convergence tolerance an f32 state resolves for `norm`:

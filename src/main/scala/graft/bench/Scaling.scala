@@ -19,8 +19,10 @@ import graft.exec.{GatherStrategy, IterConfig}
   */
 object Scaling {
 
+  /** `kernel` "array" runs [[graft.algo.PageRankArray]] (f32 with
+    * SPARK_GRAFT_FLOAT=1), "shuffle" the DataFrame ShuffleJoin tier. */
   def run(cores: Int, n: Long, l: Int, iters: Int,
-      strategy: GatherStrategy): (Double, Double, Double, Seq[Double]) = {
+      kernel: String): (Double, Double, Double, Seq[Double]) = {
     // SPARK_GRAFT_MASTER overrides (e.g. "local-cluster[4,8,8192]": separate
     // executor JVMs — the truest N-vs-4N-executor analog on one box). Ship
     // the app jar via SPARK_GRAFT_JARS (sbt package output) in that mode.
@@ -66,7 +68,6 @@ object Scaling {
       // discards its cold run the same way,
       // `/root/reference/include/abstractGraph.hpp:52-56`)
       val warm = 3
-      val kernel = sys.env.getOrElse("SPARK_GRAFT_KERNEL", "array")
       // SPARK_GRAFT_CKPT: lineage-truncation cadence for the loop. The
       // localCheckpoint materialization is part of every iteration's fixed
       // cost; spacing it out (e.g. 2-3) trades a slightly larger task
@@ -90,8 +91,7 @@ object Scaling {
             floatPrecision = sys.env.get("SPARK_GRAFT_FLOAT").contains("1"))
         else PageRank.run(spark, Synth.band(spark, n, l), n,
           cfg = cfg,
-          strategy = strategy,
-          bucketed = kernel == "bucketed")
+          strategy = GatherStrategy.ShuffleJoin)
       val steady = r.metrics.drop(warm)
       steady.foreach(m => println(
         f"[scaling] cores=$cores iter=${m.iteration} secs=${m.seconds}%.3f"))
@@ -157,9 +157,9 @@ object Scaling {
     val n = if (args.length > 0) args(0).toLong else (1L << 17)
     val l = if (args.length > 1) args(1).toInt else 16
     val iters = if (args.length > 2) args(2).toInt else 10
-    val strat: GatherStrategy =
-      if (args.contains("--broadcast")) GatherStrategy.BroadcastState
-      else GatherStrategy.ShuffleJoin
+    val kernel = sys.env.getOrElse("SPARK_GRAFT_KERNEL", "array")
+    require(kernel == "array" || kernel == "shuffle",
+      s"SPARK_GRAFT_KERNEL must be array or shuffle, got '$kernel'")
     // --cores C: measure ONE parallelism level in THIS JVM and exit (clean
     // heap/JIT per measurement; a prior session's GC debt otherwise skews
     // the second run). An outer script runs the two JVMs and combines.
@@ -170,7 +170,7 @@ object Scaling {
       val t0 = System.nanoTime()
       val sampler = new CpuSampler(t0)
       sampler.start()
-      val (secs, eps, minIter, walls) = run(c, n, l, iters, strat)
+      val (secs, eps, minIter, walls) = run(c, n, l, iters, kernel)
       val tReturn = (System.nanoTime() - t0) / 1e9
       sampler.halt()
       val load1 = loadAvg()
@@ -185,11 +185,11 @@ object Scaling {
           f"[$t%.1f,$busy%.2f,$ld%.2f]"
         }.mkString("[", ",", "]")
       }
-      println(s"""{"cores":$c,"n":$n,"l":$l,"iters":$iters,"strategy":"$strat","seconds":$secs,"edges_per_sec":$eps,"min_iter_secs":$minIter,"load_before":$load0,"load_after":$load1,"t_return":$tReturn,"walls":$wallsJson,"cpu_samples":$samplesJson}""")
+      println(s"""{"cores":$c,"n":$n,"l":$l,"iters":$iters,"kernel":"$kernel","seconds":$secs,"edges_per_sec":$eps,"min_iter_secs":$minIter,"load_before":$load0,"load_after":$load1,"t_return":$tReturn,"walls":$wallsJson,"cpu_samples":$samplesJson}""")
       return
     }
     val results = Seq(8, 32).map { c =>
-      val (secs, eps, _, _) = run(c, n, l, iters, strat)
+      val (secs, eps, _, _) = run(c, n, l, iters, kernel)
       (c, secs, eps)
     }
     val t8 = results.find(_._1 == 8).get._2
@@ -198,6 +198,6 @@ object Scaling {
     val runs = results.map { case (c, s, e) =>
       s"""{"cores":$c,"seconds":$s,"edges_per_sec":$e}"""
     }.mkString("[", ",", "]")
-    println(s"""{"n":$n,"l":$l,"iters":$iters,"strategy":"$strat","runs":$runs,"scaling_efficiency":$eff}""")
+    println(s"""{"n":$n,"l":$l,"iters":$iters,"kernel":"$kernel","runs":$runs,"scaling_efficiency":$eff}""")
   }
 }

@@ -15,7 +15,7 @@ import graft.exec.{GatherStrategy, IterConfig}
   *           [--tol 1e-6] [--max-iter 100] [--snapshot-dir DIR] [--out DIR]
   *           [--metrics-out FILE.jsonl] [--metrics-csv FILE.csv]
   *   scaling --n <V> --l <L> [--iters 10]         # sweep sizes at fixed cores
-  *   compare --n <V> --l <L>                       # shuffle vs broadcast plans
+  *   compare --n <V> --l <L>                       # ShuffleJoin vs array tier
   *
   * Graph algorithms print convergence/throughput metrics per iteration
   * (edges/sec — BASELINE.json metric) and optionally write results.
@@ -176,8 +176,10 @@ object Main {
     }
   }
 
-  /** Physical-strategy shoot-out on one input (reference E3,
-    * `src/main.cpp:163-202`): shuffle-join vs broadcast-state gather. */
+  /** PageRank tier shoot-out on one input (reference E3,
+    * `src/main.cpp:163-202`): the DataFrame ShuffleJoin tier vs the
+    * broadcast-array tier ([[graft.algo.PageRankArray]], which an explicit
+    * `BroadcastState` runs). */
   def compare(spark: SparkSession, args: Array[String]): Unit = {
     val n = arg(args, "n").map(_.toLong).getOrElse(1L << 16)
     val l = arg(args, "l").map(_.toInt).getOrElse(16)
@@ -186,7 +188,8 @@ object Main {
       val r = PageRank.run(spark, Synth.band(spark, n, l), n,
         cfg = IterConfig(tol = 0.0, maxIter = iters), strategy = st)
       val secs = r.metrics.map(_.seconds).sum
-      println(f"compare strategy=$st n=$n nnz=${n * l} secs=$secs%8.2f " +
+      println(f"compare tier=${if (st == GatherStrategy.ShuffleJoin) "dataframe" else "array"} " +
+        f"n=$n nnz=${n * l} secs=$secs%8.2f " +
         f"edges_per_sec=${r.metrics.map(_.edges).sum / secs}%.3e")
     }
   }

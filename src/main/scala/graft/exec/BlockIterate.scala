@@ -256,7 +256,9 @@ object BlockIterate {
 
   /** Iterate from `init` (which the driver may reuse as a buffer) and
     * release the blocks. Returns the final state as (id, valueCol) rows and
-    * the per-iteration metrics. */
+    * the per-iteration metrics. `startIter` is the number of iterations
+    * `init` already ran (a resumed run), as in [[Iterate.loop]]: metrics
+    * and snapshots count on from it, and the loop stops at `cfg.maxIter`. */
   def run[S <: AnyRef, E <: AnyRef](
       spark: SparkSession,
       blocks: Blocks,
@@ -265,7 +267,8 @@ object BlockIterate {
       cfg: IterConfig,
       strategy: String,
       valueCol: String,
-      afterScatter: (S, Double) => Unit = (_: S, _: Double) => ())(
+      afterScatter: (S, Double) => Unit = (_: S, _: Double) => (),
+      startIter: Int = 0)(
       kernel: S => Kernel[E]): (DataFrame, Seq[IterationMetrics]) = {
     val sc = spark.sparkContext
     val n = blocks.n
@@ -273,7 +276,7 @@ object BlockIterate {
     val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
     var x = init
     var next = codec.alloc(n)
-    var iter = 0
+    var iter = startIter
     var delta = Double.MaxValue
     try {
       while (iter < cfg.maxIter && delta >= cfg.tol) {

@@ -23,22 +23,28 @@ object GatherStrategy {
     * state is too large to broadcast (10^9+ vertices: a broadcast would OOM
     * the driver). */
   case object ShuffleJoin extends GatherStrategy
-  /** Force-broadcast the state to every executor: with the edges
-    * pre-partitioned on the AGGREGATION key, an entire iteration runs
-    * shuffle-free (the reference's K6 broadcast-gather kernel). */
+  /** The state fits in driver and executor memory. PageRank
+    * ([[graft.algo.PageRank.run]]) and LP ([[graft.algo.LabelPropagation.run]])
+    * then run their broadcast-array tier: flat CSR blocks built once, the
+    * state broadcast as a primitive array, one zero-shuffle job per
+    * iteration (the reference's K6 broadcast-gather kernel). Only the
+    * one-shot SpMV still runs [[Gather.gather]]'s DataFrame broadcast join,
+    * with the state force-broadcast to every executor. */
   case object BroadcastState extends GatherStrategy
-  /** Size-based choice per run: broadcast while the state ships cheaply
-    * (~16 B/vertex/iteration to every executor), shuffle beyond.
+  /** Size-based choice per run: `BroadcastState` while the state ships
+    * cheaply (~16 B/vertex/iteration to every executor), `ShuffleJoin`
+    * beyond. PageRank and LP resolve their tier through [[resolve]]: the
+    * array tier at V <= `maxBroadcastVertices`, the DataFrame ShuffleJoin
+    * tier above it. Connected components does not take a strategy yet: it
+    * always runs its DataFrame two-phase tier.
     *
     * The 4M-vertex default pins the MEASURED r02 trade-off point on this
-    * class of box: the broadcast plan rebuilds a driver-side hashed
-    * relation every iteration — a serial term no executor count dilutes
-    * (N→4N efficiency 0.28, but 4.45 s/iter absolute at 2^21 vertices) —
-    * while ShuffleJoin scales (0.84 efficiency) at 16.9 s/iter. Broadcast
-    * wins below ~4M vertices on wall-clock; beyond that the serial rebuild
-    * dominates and ShuffleJoin (or the flat-CSR PageRankArray kernel, whose
-    * per-iteration serial term is two O(V) memcpys, not a hashed-relation
-    * build) takes over. */
+    * class of box: the DataFrame broadcast plan rebuilt a driver-side
+    * hashed relation every iteration — a serial term no executor count
+    * dilutes (N→4N efficiency 0.28, but 4.45 s/iter absolute at 2^21
+    * vertices) — while ShuffleJoin scales (0.84 efficiency) at 16.9 s/iter.
+    * The array tier's per-iteration serial term is two O(V) memcpys, not a
+    * hashed-relation build, so the bound is conservative for it. */
   final case class Auto(maxBroadcastVertices: Long = 4L * 1000 * 1000)
       extends GatherStrategy
 

@@ -1,10 +1,11 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.IterationMetrics
 
 /** Iteration driver: convergence loop with lineage control and resumable
@@ -209,6 +210,9 @@ object Iterate {
     LoopResult(state, metrics.toSeq)
   }
 
+  /** Reads and writes the snapshot manifest. */
+  private val manifestJson = new ObjectMapper()
+
   /** Durable snapshot: state parquet written to a temp dir then the manifest
     * moved into place atomically (temp + ATOMIC_MOVE) — a crashed writer can
     * never leave a manifest pointing at a half-written state
@@ -216,27 +220,36 @@ object Iterate {
   def snapshot(dir: String, state: DataFrame, iteration: Int, delta: Double): Unit = {
     val statePath = s"$dir/state_$iteration"
     state.write.mode("overwrite").parquet(statePath)
-    val manifest =
-      s"""{"iteration":$iteration,"delta":$delta,"state_path":"$statePath"}"""
+    val manifest = manifestJson.createObjectNode()
+      .put("iteration", iteration).put("delta", delta).put("state_path", statePath)
     val tmp = Paths.get(s"$dir/.manifest.tmp")
     Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, manifestJson.writeValueAsBytes(manifest))
     Files.move(tmp, Paths.get(s"$dir/manifest.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Resume point, if a snapshot exists: (state, nextIteration, lastDelta). */
+  /** Resume point, if a snapshot exists: (state, nextIteration, lastDelta).
+    * A manifest that is not JSON, lacks a field or has one of the wrong
+    * type, or names a state that cannot be read (e.g. a missing directory),
+    * fails with an IllegalArgumentException naming the manifest file. */
   def resume(spark: SparkSession, dir: String): Option[(DataFrame, Int, Double)] = {
     val mf = Paths.get(s"$dir/manifest.json")
     if (!Files.exists(mf)) None
     else {
-      val json = new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
-      def field(name: String): String =
-        json.split(s""""$name":""")(1).split("[,}]")(0).trim.stripPrefix("\"").stripSuffix("\"")
-      val iter = field("iteration").toInt
-      val delta = field("delta").toDouble
-      val path = field("state_path")
-      Some((spark.read.parquet(path), iter, delta))
+      def bad(why: String, cause: Throwable = null): Nothing =
+        throw new IllegalArgumentException(s"snapshot manifest $mf: $why", cause)
+      val json =
+        try manifestJson.readTree(mf.toFile)
+        catch { case e: JsonProcessingException => bad(s"not valid JSON (${e.getOriginalMessage})", e) }
+      def field(name: String, kind: String)(ok: JsonNode => Boolean): JsonNode =
+        Option(json.get(name)).filter(ok).getOrElse(bad(s"field $name missing or not $kind"))
+      val iter = field("iteration", "an int")(v => v.isIntegralNumber && v.canConvertToInt).intValue
+      val delta = field("delta", "a number")(_.isNumber).doubleValue
+      val path = field("state_path", "a string")(_.isTextual).textValue
+      val state = try spark.read.parquet(path)
+        catch { case e: AnalysisException => bad(s"state_path $path: ${e.getMessage}", e) }
+      Some((state, iter, delta))
     }
   }
 }

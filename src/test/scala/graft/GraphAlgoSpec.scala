@@ -141,7 +141,8 @@ class GraphAlgoSpec extends SparkSuite {
 
   test("broadcast-array PageRank kernel == DataFrame PageRank (same trajectory)") {
     val n = 300; val edges = Synth.blocks(spark, n, 50) // includes dangling
-    val df = PageRank.run(spark, edges, n, cfg = IterConfig(tol = 0.0, maxIter = 7))
+    val df = PageRank.run(spark, edges, n, cfg = IterConfig(tol = 0.0, maxIter = 7),
+      strategy = GatherStrategy.ShuffleJoin)
       .state.orderBy("id").as[(Long, Double)].collect()
     val arr = graft.algo.PageRankArray.run(spark, edges, n,
       cfg = IterConfig(tol = 0.0, maxIter = 7))

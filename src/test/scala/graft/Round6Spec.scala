@@ -14,8 +14,8 @@ import graft.sources.Synth
   *     r05 semantics on graphs with isolated/duplicate/dangling structure;
   *   - CC local phase-2 fast path: identical labels with the threshold on
   *     and off;
-  *   - block-co-partitioned PageRank gather: identical scores with and
-  *     without the _blk join key.
+  *   - block-co-partitioned ShuffleJoin PageRank gather: identical scores
+  *     to the broadcast path (an explicit BroadcastState, the array tier).
   */
 class Round6Spec extends SparkSuite {
   import spark.implicits._
