@@ -3,9 +3,10 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.exec.{IterConfig, Iterate, TaskMetricsCollector}
+import graft.exec.{IterConfig, Iterate}
 import graft.graph.AdjacencyBuilder
 import graft.model.IterationMetrics
+import graft.obs.Obs
 
 /** Connected components, two-phase (undirected semantics — the reference's
   * symmetric .mtx expansion, `/root/reference/lib/MMIO/mmio_cpp.h:40-48`, is
@@ -58,60 +59,35 @@ object ConnectedComponents {
 
     // ---- phase 1: range partition + per-partition union-find ----
     val sc = spark.sparkContext
-    val collector = TaskMetricsCollector.attach(sc)
-    val snap0 = collector.snapshot()
     val t0 = System.nanoTime()
     val edgeCount = sc.longAccumulator("graft.cc.edges")
-    val mapping = edges.select(col("src"), col("dst"))
-      .repartitionByRange(nParts, col("src"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        // primitive open-addressing parent map: 16 B/slot, <= 23 B/vertex at
-        // the 0.7 load ceiling (vs ~60-80 B/entry for a boxed j.u.HashMap) —
-        // the per-partition memory bound of the contraction pass, the phase
-        // that must fit executor memory at the 100 TB design point.
-        val parent = new graft.util.LongLongMap(1 << 16)
-        def find(a: Long): Long = {
-          var r = a
-          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-          var c = a
-          while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
-          r
-        }
-        var nE = 0L
-        it.foreach { case (s, d) =>
-          if (!parent.contains(s)) parent.put(s, s)
-          if (!parent.contains(d)) parent.put(d, d)
-          val rs = find(s); val rd = find(d)
-          // union-by-min: the surviving root is the smaller id, so find(v)
-          // is exactly the min id of v's partition-local component
-          if (rs < rd) parent.put(rd, rs)
-          else if (rd < rs) parent.put(rs, rd)
-          nE += 1
-        }
-        edgeCount.add(nE)
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        // find() inside foreach only path-compresses (puts to EXISTING keys:
-        // no insert, no growth), so the key-array iteration stays valid
-        parent.foreach { (v, _) => out += ((v, find(v))) }
-        out.iterator
-      }.toDF("id", "root")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    mapping.count() // materialize phase 1
-    // per-vertex: min root + every root this vertex was seen under
-    val g = mapping.groupBy("id")
-      .agg(min("root").as("root"), collect_set("root").as("rs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    g.count()
+    val ((mapping, g), p1) = Obs.span(spark, "cc:phase1", track = true) {
+      val mapping = edges.select(col("src"), col("dst"))
+        .repartitionByRange(nParts, col("src"))
+        .as[(Long, Long)]
+        .mapPartitions { it =>
+          var nE = 0L
+          // 64k initial slots; the map grows to the partition's vertex count
+          val out = unionFind(it.map { e => nE += 1; e }, 1 << 16)
+          edgeCount.add(nE)
+          out.iterator
+        }.toDF("id", "root")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      mapping.count() // materialize phase 1
+      // per-vertex: min root + every root this vertex was seen under
+      val g = mapping.groupBy("id")
+        .agg(min("root").as("root"), collect_set("root").as("rs"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      g.count()
+      (mapping, g)
+    }
     val phase1Secs = (System.nanoTime() - t0) / 1e9
     val nEdges = edgeCount.value.longValue()
-    collector.stabilize()
-    val d0 = collector.snapshot() - snap0
-    TaskMetricsCollector.detach(sc, collector)
+    Obs.drain(sc)
     val phase1Metric = IterationMetrics(0, nEdges, phase1Secs,
       if (phase1Secs > 0) nEdges / phase1Secs else 0.0, Double.NaN,
-      "local-contract", shuffleReadBytes = d0.shuffleRead,
-      shuffleWriteBytes = d0.shuffleWrite, taskSkew = d0.skew)
+      "local-contract", shuffleReadBytes = p1.shuffleRead,
+      shuffleWriteBytes = p1.shuffleWrite, taskSkew = p1.skew)
 
     // ---- phase 2: CC over the contracted root graph ----
     // star edges minRoot(v) -> each other root of v (empty when one
@@ -139,29 +115,11 @@ object ConnectedComponents {
     val (rootLabelsDf, phase2Metrics) =
       if (nStar <= localMax) {
         val t2 = System.nanoTime()
-        import spark.implicits._
-        val pairs = contracted.as[(Long, Long)].collect()
-        val parent = new graft.util.LongLongMap(1 << 10)
-        def find(a: Long): Long = {
-          var r = a
-          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-          var c = a
-          while (c != r) { val nx = parent.getOrDefault(c, c); parent.put(c, r); c = nx }
-          r
-        }
-        pairs.foreach { case (s, d) =>
-          if (!parent.contains(s)) parent.put(s, s)
-          if (!parent.contains(d)) parent.put(d, d)
-          val rs2 = find(s); val rd = find(d)
-          if (rs2 < rd) parent.put(rd, rs2)
-          else if (rd < rs2) parent.put(rs2, rd)
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        parent.foreach { (v, _) => out += ((v, find(v))) }
+        val out = unionFind(contracted.as[(Long, Long)].collect().iterator, 1 << 10)
         val secs2 = (System.nanoTime() - t2) / 1e9
         // roots untouched by any star edge label themselves (left join +
         // coalesce below) — only merged roots need rows here
-        (spark.createDataset(out.toSeq).toDF("root", "x"),
+        (spark.createDataset(out).toDF("root", "x"),
           Seq(IterationMetrics(1, nStar, secs2,
             if (secs2 > 0) nStar / secs2 else 0.0, 0.0, "local-phase2",
             shuffleReadBytes = 0L, shuffleWriteBytes = 0L)))
@@ -182,6 +140,36 @@ object ConnectedComponents {
     // `labels` plan (same ownership rule as the loop's checkpointed state —
     // the caller's unpersist/clearCache releases it after the final action)
     Result(labels, phase1Metric +: phase2Metrics)
+  }
+
+  /** Union-by-min, path-compressed union-find over the edge `pairs` (O(alpha)
+    * per edge): every vertex seen -> the min id of its component, so the
+    * surviving root of a union is always the smaller id. The parent map is
+    * primitive open addressing (16 B/slot, <= 23 B/vertex at its 0.7 load
+    * ceiling vs ~60-80 B/entry boxed) — the memory bound of the phase-1
+    * contraction, which must fit executor memory at the 100 TB design
+    * point — sized from `capacity` slots. */
+  private def unionFind(pairs: Iterator[(Long, Long)], capacity: Int): Seq[(Long, Long)] = {
+    val parent = new graft.util.LongLongMap(capacity)
+    def find(a: Long): Long = {
+      var r = a
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = a
+      while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
+      r
+    }
+    pairs.foreach { case (s, d) =>
+      if (!parent.contains(s)) parent.put(s, s)
+      if (!parent.contains(d)) parent.put(d, d)
+      val rs = find(s); val rd = find(d)
+      if (rs < rd) parent.put(rd, rs)
+      else if (rd < rs) parent.put(rs, rd)
+    }
+    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+    // find() inside foreach only path-compresses (puts to EXISTING keys: no
+    // insert, no growth), so the key-array iteration stays valid
+    parent.foreach { (v, _) => out += ((v, find(v))) }
+    out.toSeq
   }
 
   /** Min-label propagation WITH Shiloach-Vishkin-style pointer jumping over
@@ -234,7 +222,7 @@ object ConnectedComponents {
     // a self-join evaluates its input subtree on BOTH sides: persist each
     // stage inside the round or the propagate join runs 4x per round.
     var stale: Seq[DataFrame] = Nil
-    val loop = Iterate.loop(init, ccCfg, nLinks, "min-prop+shortcut") {
+    val loop = Iterate.loop(init, ccCfg, nLinks, "min-prop+shortcut", algo = "cc") {
       (state, _) =>
         stale.foreach(_.unpersist()); stale = Nil
         // min label over {v} ∪ neighbors, gathered at src in ONE aggregate;

@@ -46,7 +46,7 @@ object ConnectedComponentsArray {
       maxIter: Int = 100): ConnectedComponents.Result = {
     // value-less symmetric CSR: CC gathers ids only (4 B/edge colInd + rowPtr)
     val (labels, metrics) = BlockIterate.labels(spark, edges, nVertices, maxIter,
-      "BroadcastArrayMin", afterScatter = compress)(minRows)
+      "BroadcastArrayMin", "cc", afterScatter = compress)(minRows)
     ConnectedComponents.Result(labels, metrics)
   }
 

@@ -120,7 +120,7 @@ object LabelPropagation {
     val coPartPrev = spark.conf.get(coPartKey, "true")
     spark.conf.set(coPartKey, "false")
     val loop =
-      try Iterate.loop(init, cfg, nLinks, "sync-lp") { (state, _) =>
+      try Iterate.loop(init, cfg, nLinks, "sync-lp", algo = "lp") { (state, _) =>
         // ONE join + ONE aggregate per round (VERDICT r04 #5 rework): the
         // typed LabelMode aggregate partial-aggregates per-vertex label
         // histograms map-side, so the single shuffle carries serialized

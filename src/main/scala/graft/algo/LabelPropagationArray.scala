@@ -48,7 +48,7 @@ object LabelPropagationArray {
       nVertices: Long,
       maxIter: Int = 20): LabelPropagation.Result = {
     val (labels, metrics) = BlockIterate.labels(spark, edges, nVertices, maxIter,
-      "BroadcastArrayMode")(modeRows)
+      "BroadcastArrayMode", "lp")(modeRows)
     LabelPropagation.Result(labels, metrics)
   }
 

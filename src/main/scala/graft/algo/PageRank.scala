@@ -144,7 +144,7 @@ object PageRank {
     val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
     val coPartPrev = spark.conf.get(coPartKey, "true")
     spark.conf.set(coPartKey, "false")
-    val loop: LoopResult = try Iterate.loop(init, cfg, nEdges, "ShuffleJoin", startIter) {
+    val loop: LoopResult = try Iterate.loop(init, cfg, nEdges, "ShuffleJoin", startIter, "pagerank") {
       (state, _) =>
         // zero self-contributions guarantee every vertex appears: the gather
         // output IS the dense state, no completion join. The same diagonal

@@ -129,7 +129,7 @@ object PageRankArray {
     def iterate[E <: AnyRef](codec: StateCodec[Array[Double], E], strategy: String)(
         rows: (Double, Double, Boolean) => Kernel[E]) =
       BlockIterate.run(spark, blocks, codec, init, cfg, strategy, "x",
-          startIter = resumeFrom.fold(0)(_._2)) { x =>
+          startIter = resumeFrom.fold(0)(_._2), algo = "pagerank") { x =>
         var dm = 0.0
         var di = 0
         while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }

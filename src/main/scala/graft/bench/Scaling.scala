@@ -16,6 +16,9 @@ import graft.exec.{GatherStrategy, IterConfig}
   *   {"n":..,"l":..,"iters":..,"runs":[{"cores":8,"edges_per_sec":..},...],
   *    "scaling_efficiency":..}
   * where efficiency = (T_8 / T_32) / 4.
+  *
+  * Profiling: SPARK_GRAFT_CONF="spark.graft.obs.path=/tmp/obs.jsonl"
+  * appends one JSON record per iteration span ([[graft.obs.Obs]]).
   */
 object Scaling {
 

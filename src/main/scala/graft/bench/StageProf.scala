@@ -1,33 +1,9 @@
 package graft.bench
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Per-stage wall/occupancy profile for the scaling diagnosis: prints one line per
-  * completed stage — submit→complete wall, summed task time, task count, max
-  * task — so the N-vs-4N serial term can be attributed to a concrete stage
-  * (state exchange, gather+partial agg, final agg/checkpoint) instead of
-  * guessed. Enable with SPARK_GRAFT_STAGEPROF=1 (graft.bench.Scaling).
-  *
-  * wall − Σtask/slots ≈ scheduling + skew + barrier cost for that stage;
-  * a stage whose wall stays constant from N to 4N while Σtask scales down
-  * is the serial term.
-  */
-final class StageProf extends SparkListener {
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-    val si = sc.stageInfo
-    val wall = for {
-      s <- si.submissionTime; c <- si.completionTime
-    } yield c - s
-    val taskMs = si.taskMetrics.executorRunTime
-    println(f"[stageprof] stage=${si.stageId}%4d tasks=${si.numTasks}%3d " +
-      f"wall=${wall.getOrElse(-1L)}%6d ms taskSum=${taskMs}%7d ms " +
-      f"name=${si.name.takeWhile(_ != '(').trim}")
-  }
-}
-
+/** The stage profiler of the bench mains is now the [[graft.obs.Obs]] sink:
+  * with `spark.graft.obs.path` set, every span is one JSON line there. */
 object StageProf {
-  def attachIfEnabled(sc: SparkContext): Unit =
-    if (sys.env.get("SPARK_GRAFT_STAGEPROF").contains("1"))
-      sc.addSparkListener(new StageProf)
+  def attachIfEnabled(sc: SparkContext): Unit = graft.obs.Obs.attachIfEnabled(sc)
 }

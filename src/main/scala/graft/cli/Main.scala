@@ -6,6 +6,7 @@ import graft.sources.{Mtx, Synth}
 import graft.graph.AdjacencyBuilder
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, SpMV, TriangleCount}
 import graft.exec.{GatherStrategy, IterConfig}
+import graft.obs.Obs
 
 /** spark-submit entry point mirroring the reference CLI
   * (`/root/reference/src/main.cpp:43-86`: `single` / `scaling` / `compare`).
@@ -40,7 +41,6 @@ object Main {
       b.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
     else b).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.bench.StageLog.attach(s)
     s
   }
 
@@ -111,13 +111,12 @@ object Main {
     }
     metricsOut.foreach { path =>
       val lines = metrics.map { m =>
-        val d = if (m.delta.isNaN) "null" else m.delta.toString
-        val sk = if (m.taskSkew.isNaN) "null" else m.taskSkew.toString
-        s"""{"algo":"$name","iteration":${m.iteration},"edges":${m.edges},""" +
-          s""""seconds":${m.seconds},"edges_per_sec":${m.edgesPerSec},""" +
-          s""""shuffle_read_bytes":${m.shuffleReadBytes},""" +
-          s""""shuffle_write_bytes":${m.shuffleWriteBytes},"task_skew":$sk,""" +
-          s""""delta":$d,"strategy":"${m.strategy}"}"""
+        val o = Obs.json.createObjectNode().put("algo", name).put("iteration", m.iteration)
+          .put("edges", m.edges).put("seconds", m.seconds).put("edges_per_sec", m.edgesPerSec)
+          .put("shuffle_read_bytes", m.shuffleReadBytes)
+          .put("shuffle_write_bytes", m.shuffleWriteBytes)
+        Obs.putNum(o, "task_skew", m.taskSkew)
+        Obs.json.writeValueAsString(Obs.putNum(o, "delta", m.delta).put("strategy", m.strategy))
       }
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         lines.mkString("", "\n", "\n").getBytes("UTF-8"))

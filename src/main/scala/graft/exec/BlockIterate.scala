@@ -9,6 +9,7 @@ import scala.reflect.ClassTag
 
 import graft.graph.{CsrBlock, RangedCsr}
 import graft.model.IterationMetrics
+import graft.obs.Obs
 
 /** A primitive state codec: the driver holds the state as `S`
   * (Array[Double] or Array[Long]); executors read it, and write their
@@ -242,7 +243,7 @@ object BlockIterate {
     * ([[graft.graph.RangedCsr.buildSymmetric]]); a round that changes no
     * label ends the loop (the "changed" norm, as in the DataFrame tiers). */
   def labels(spark: SparkSession, edges: DataFrame, nVertices: Long,
-      maxIter: Int, strategy: String,
+      maxIter: Int, strategy: String, algo: String,
       afterScatter: (Array[Long], Double) => Unit = (_: Array[Long], _: Double) => ())(
       kernel: Kernel[Array[Long]]): (DataFrame, Seq[IterationMetrics]) = {
     require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
@@ -251,14 +252,16 @@ object BlockIterate {
     run(spark, materialize(RangedCsr.buildSymmetric(edges, n, nParts), n),
       StateCodec.I64, Array.tabulate(n)(_.toLong),
       IterConfig(tol = 0.5, maxIter = maxIter, norm = "changed"),
-      strategy, "label", afterScatter)(_ => kernel)
+      strategy, "label", afterScatter, algo = algo)(_ => kernel)
   }
 
   /** Iterate from `init` (which the driver may reuse as a buffer) and
     * release the blocks. Returns the final state as (id, valueCol) rows and
     * the per-iteration metrics. `startIter` is the number of iterations
     * `init` already ran (a resumed run), as in [[Iterate.loop]]: metrics
-    * and snapshots count on from it, and the loop stops at `cfg.maxIter`. */
+    * and snapshots count on from it, and the loop stops at `cfg.maxIter`.
+    * Each iteration runs as the span `<algo>:iter:<n>` ([[graft.obs.Obs]]),
+    * which only sets a local property unless the obs sink is on. */
   def run[S <: AnyRef, E <: AnyRef](
       spark: SparkSession,
       blocks: Blocks,
@@ -268,7 +271,8 @@ object BlockIterate {
       strategy: String,
       valueCol: String,
       afterScatter: (S, Double) => Unit = (_: S, _: Double) => (),
-      startIter: Int = 0)(
+      startIter: Int = 0,
+      algo: String)(
       kernel: S => Kernel[E]): (DataFrame, Seq[IterationMetrics]) = {
     val sc = spark.sparkContext
     val n = blocks.n
@@ -280,31 +284,33 @@ object BlockIterate {
     var delta = Double.MaxValue
     try {
       while (iter < cfg.maxIter && delta >= cfg.tol) {
-        val t0 = System.nanoTime()
-        val k = kernel(x)
-        val bc = sc.broadcast(codec.pack(x))
-        val slices = perBlock(blocks.rdd) { b =>
-          val (out, partial) = k(b, StateCache.get(bc, codec))
-          (b.base, codec.packSlice(out), partial)
-        }
-        bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-        val into = next
-        val covered = java.util.stream.IntStream.range(0, slices.length).parallel()
-          .mapToLong(i => codec.scatter(slices(i)._2, into, slices(i)._1).toLong).sum()
-        require(covered == n, s"blocks covered $covered of $n vertex ids")
-        delta = 0.0
-        slices.foreach(s => delta = if (sum) delta + s._3 else math.max(delta, s._3))
-        afterScatter(next, delta)
-        val tmp = x; x = next; next = tmp
-        val secs = (System.nanoTime() - t0) / 1e9
-        metrics += IterationMetrics(iter + 1, blocks.nEdges, secs,
-          if (secs > 0) blocks.nEdges / secs else 0.0, delta, strategy)
-        iter += 1
-        cfg.snapshotDir.foreach { dir =>
-          if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol) {
-            val snap = sc.broadcast(codec.pack(x))
-            try Iterate.snapshot(dir, codec.toDf(spark, snap, n, "x"), iter, delta)
-            finally snap.destroy()
+        Obs.span(spark, s"$algo:iter:${iter + 1}") {
+          val t0 = System.nanoTime()
+          val k = kernel(x)
+          val bc = sc.broadcast(codec.pack(x))
+          val slices = perBlock(blocks.rdd) { b =>
+            val (out, partial) = k(b, StateCache.get(bc, codec))
+            (b.base, codec.packSlice(out), partial)
+          }
+          bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
+          val into = next
+          val covered = java.util.stream.IntStream.range(0, slices.length).parallel()
+            .mapToLong(i => codec.scatter(slices(i)._2, into, slices(i)._1).toLong).sum()
+          require(covered == n, s"blocks covered $covered of $n vertex ids")
+          delta = 0.0
+          slices.foreach(s => delta = if (sum) delta + s._3 else math.max(delta, s._3))
+          afterScatter(next, delta)
+          val tmp = x; x = next; next = tmp
+          val secs = (System.nanoTime() - t0) / 1e9
+          metrics += IterationMetrics(iter + 1, blocks.nEdges, secs,
+            if (secs > 0) blocks.nEdges / secs else 0.0, delta, strategy)
+          iter += 1
+          cfg.snapshotDir.foreach { dir =>
+            if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol) {
+              val snap = sc.broadcast(codec.pack(x))
+              try Iterate.snapshot(dir, codec.toDf(spark, snap, n, "x"), iter, delta)
+              finally snap.destroy()
+            }
           }
         }
       }

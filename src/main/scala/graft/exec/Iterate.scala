@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import com.fasterxml.jackson.core.JsonProcessingException
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import graft.model.IterationMetrics
+import graft.obs.{Obs, Span}
 
 /** Iteration driver: convergence loop with lineage control and resumable
   * snapshots.
@@ -84,15 +85,21 @@ object Iterate {
     * (id, x, x_old): the delta is a join-free scan of x against x_old over
     * the materialized state (see [[IterConfig]]).
     *
+    * Each iteration runs as the tracked span `<algo>:iter:<n>`
+    * ([[graft.obs.Obs]]): its metrics' shuffle bytes and task skew come
+    * from that span's jobs alone, read once the bus is drained at loop end.
+    *
     * @param edgesPerIter edge count processed per iteration (for throughput)
     * @param startIter    first iteration number (used by resume)
+    * @param algo         span name prefix: `pagerank`, `cc` or `lp`
     */
   def loop(
       init: DataFrame,
       cfg: IterConfig,
       edgesPerIter: Long,
       strategyName: String = "",
-      startIter: Int = 0)(step: (DataFrame, Int) => DataFrame): LoopResult = {
+      startIter: Int = 0,
+      algo: String)(step: (DataFrame, Int) => DataFrame): LoopResult = {
     // Each state generation is cut at a localCheckpoint boundary: a fresh
     // LogicalRDD leaf with new attribute ids. This both bounds plan growth
     // AND prevents "conflicting references" when old and new generations
@@ -113,13 +120,12 @@ object Iterate {
     // round-trips, which AQE adds to. Default still keep: the delta is
     // within box noise and a real cluster wants AQE for skew/coalescing.
     val sess = init.sparkSession
-    val aqeOff = sess.conf.get("spark.graft.loop.aqe", "keep") == "off"
-    if (!aqeOff) loopBody(init, cfg, edgesPerIter, strategyName, startIter)(step)
+    def body = loopBody(init, cfg, edgesPerIter, strategyName, startIter, algo)(step)
+    if (sess.conf.get("spark.graft.loop.aqe", "keep") != "off") body
     else {
       val aqeBefore = sess.conf.get("spark.sql.adaptive.enabled", "true")
       sess.conf.set("spark.sql.adaptive.enabled", "false")
-      try loopBody(init, cfg, edgesPerIter, strategyName, startIter)(step)
-      finally sess.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+      try body finally sess.conf.set("spark.sql.adaptive.enabled", aqeBefore)
     }
   }
 
@@ -128,90 +134,83 @@ object Iterate {
       cfg: IterConfig,
       edgesPerIter: Long,
       strategyName: String,
-      startIter: Int)(step: (DataFrame, Int) => DataFrame): LoopResult = {
+      startIter: Int,
+      algo: String)(step: (DataFrame, Int) => DataFrame): LoopResult = {
     var state = init.localCheckpoint(true)
     var mat = state // the materialized generation (owns the cache blocks)
-    val sc = init.sparkSession.sparkContext
-    val collector = TaskMetricsCollector.attach(sc)
-    var snap = collector.snapshot()
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
+    val metrics = scala.collection.mutable.ArrayBuffer.empty[(IterationMetrics, Span)]
     var iter = startIter
     var delta = Double.MaxValue
     while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      collector.resetMax()
-      val steppedRaw = step(state, iter)
-      // FUSED convergence (VERDICT r04 #1): the step's (id, x, x_old)
-      // carries the old state THROUGH the materialization (one extra cached
-      // column), and the delta is a join-free scan-agg of the materialized
-      // result — no old-vs-new shuffle join, no object boundary (see the
-      // IterConfig scaladoc for the retired accumulator design). tol <= 0
-      // (fixed-iteration mode) just strips x_old before caching.
-      require(steppedRaw.columns.contains("x_old"),
-        s"iteration step must emit (id, x, x_old), got ${steppedRaw.columns.mkString(", ")}")
-      val keepOld = cfg.tol > 0.0
-      val stepped =
-        if (keepOld) steppedRaw else steppedRaw.select(col("id"), col("x"))
-      // localCheckpoint (not persist) every k iterations: persist alone
-      // truncates recompute but NOT the logical plan, which otherwise grows
-      // linearly and blows up the planner/AQE by iteration ~100.
-      // r06 (VERDICT r05 #1c, the serial term): in fused-convergence mode
-      // the checkpoint is LAZY — the scanDelta action below materializes
-      // the cache AND performs the marked local checkpoint in its own job,
-      // so a checkpoint-boundary iteration is ONE job, not two (eager
-      // checkpoint + delta scan). Fixed mode keeps the eager checkpoint (it
-      // has no delta action).
-      val boundary = (iter + 1) % cfg.checkpointEvery == 0
-      val next =
-        if (boundary) stepped.localCheckpoint(!keepOld)
-        else stepped.persist(StorageLevel.MEMORY_AND_DISK)
-      // fixed-iteration mode (tol <= 0) never stops on delta: skip the
-      // convergence action — one fewer job per iteration.
-      delta =
-        if (!keepOld) { // localCheckpoint(true) already materialized
-          if (!boundary) next.count()
-          Double.MaxValue
-        } else {
-          // The scan-agg delta ITSELF materializes the persist-branch cache:
-          // InMemoryRelation builds its full-row cached batches on the first
-          // scan regardless of the projection on top, so a count() first
-          // would pay a second O(V) job per non-checkpoint iteration for
-          // nothing (measured serial term at CKPT=3: the count+scan pair
-          // was 2 jobs where 1 does both). At a checkpoint boundary the
-          // same scan also performs the lazy local checkpoint.
-          scanDelta(next, cfg.norm)
+      // the snapshot write belongs to its iteration's span too
+      metrics += Obs.span(init.sparkSession, s"$algo:iter:${iter + 1}", track = true) {
+        val t0 = System.nanoTime()
+        val steppedRaw = step(state, iter)
+        // FUSED convergence (VERDICT r04 #1): the step's (id, x, x_old)
+        // carries the old state THROUGH the materialization (one extra cached
+        // column), and the delta is a join-free scan-agg of the materialized
+        // result — no old-vs-new shuffle join, no object boundary (see the
+        // IterConfig scaladoc for the retired accumulator design). tol <= 0
+        // (fixed-iteration mode) just strips x_old before caching.
+        require(steppedRaw.columns.contains("x_old"),
+          s"iteration step must emit (id, x, x_old), got ${steppedRaw.columns.mkString(", ")}")
+        val keepOld = cfg.tol > 0.0
+        val stepped =
+          if (keepOld) steppedRaw else steppedRaw.select(col("id"), col("x"))
+        // localCheckpoint (not persist) every k iterations: persist alone
+        // truncates recompute but NOT the logical plan, which otherwise grows
+        // linearly and blows up the planner/AQE by iteration ~100.
+        // r06 (VERDICT r05 #1c, the serial term): in fused-convergence mode
+        // the checkpoint is LAZY — the scanDelta action below materializes
+        // the cache AND performs the marked local checkpoint in its own job,
+        // so a checkpoint-boundary iteration is ONE job, not two (eager
+        // checkpoint + delta scan). Fixed mode keeps the eager checkpoint (it
+        // has no delta action).
+        val boundary = (iter + 1) % cfg.checkpointEvery == 0
+        val next =
+          if (boundary) stepped.localCheckpoint(!keepOld)
+          else stepped.persist(StorageLevel.MEMORY_AND_DISK)
+        // fixed-iteration mode (tol <= 0) never stops on delta: skip the
+        // convergence action — one fewer job per iteration.
+        delta =
+          if (!keepOld) { // localCheckpoint(true) already materialized
+            if (!boundary) next.count()
+            Double.MaxValue
+          } else {
+            // The scan-agg delta ITSELF materializes the persist-branch cache:
+            // InMemoryRelation builds its full-row cached batches on the first
+            // scan regardless of the projection on top, so a count() first
+            // would pay a second O(V) job per non-checkpoint iteration for
+            // nothing (measured serial term at CKPT=3: the count+scan pair
+            // was 2 jobs where 1 does both). At a checkpoint boundary the
+            // same scan also performs the lazy local checkpoint.
+            scanDelta(next, cfg.norm)
+          }
+        val secs = (System.nanoTime() - t0) / 1e9
+        val m = IterationMetrics(iter + 1, edgesPerIter, secs,
+          if (secs > 0) edgesPerIter / secs else 0.0,
+          if (cfg.tol <= 0.0) Double.NaN else delta, // NaN = not measured
+          strategyName)
+        mat.unpersist()
+        mat = next
+        // steps, snapshots, and the result see the (id, x) shape; the
+        // projection is a plan-only prune over the cached relation (x_old is
+        // never scanned again), partitioning preserved.
+        state = if (keepOld) next.select("id", "x") else next
+        iter += 1
+        cfg.snapshotDir.foreach { dir =>
+          if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol)
+            snapshot(dir, state, iter, delta)
         }
-      val secs = (System.nanoTime() - t0) / 1e9
-      // shuffle/skew deltas for this iteration's window (async listener:
-      // values are exact once the bus drains; see TaskMetricsCollector)
-      val cur = collector.snapshot()
-      val d = cur - snap
-      snap = cur
-      metrics += IterationMetrics(iter + 1, edgesPerIter, secs,
-        if (secs > 0) edgesPerIter / secs else 0.0,
-        if (cfg.tol <= 0.0) Double.NaN else delta, // NaN = not measured
-        strategyName,
-        shuffleReadBytes = d.shuffleRead, shuffleWriteBytes = d.shuffleWrite,
-        taskSkew = d.skew)
-      mat.unpersist()
-      mat = next
-      // steps, snapshots, and the result see the (id, x) shape; the
-      // projection is a plan-only prune over the cached relation (x_old is
-      // never scanned again), partitioning preserved.
-      state = if (keepOld) next.select("id", "x") else next
-      iter += 1
-      cfg.snapshotDir.foreach { dir =>
-        if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol)
-          snapshot(dir, state, iter, delta)
+        m
       }
     }
-    collector.stabilize()
-    TaskMetricsCollector.detach(sc, collector)
-    LoopResult(state, metrics.toSeq)
+    Obs.drain(init.sparkSession.sparkContext)
+    LoopResult(state, metrics.toSeq.map { case (m, s) =>
+      m.copy(shuffleReadBytes = s.shuffleRead, shuffleWriteBytes = s.shuffleWrite,
+        taskSkew = s.skew)
+    })
   }
-
-  /** Reads and writes the snapshot manifest. */
-  private val manifestJson = new ObjectMapper()
 
   /** Durable snapshot: state parquet written to a temp dir then the manifest
     * moved into place atomically (temp + ATOMIC_MOVE) — a crashed writer can
@@ -220,11 +219,11 @@ object Iterate {
   def snapshot(dir: String, state: DataFrame, iteration: Int, delta: Double): Unit = {
     val statePath = s"$dir/state_$iteration"
     state.write.mode("overwrite").parquet(statePath)
-    val manifest = manifestJson.createObjectNode()
+    val manifest = Obs.json.createObjectNode()
       .put("iteration", iteration).put("delta", delta).put("state_path", statePath)
     val tmp = Paths.get(s"$dir/.manifest.tmp")
     Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, manifestJson.writeValueAsBytes(manifest))
+    Files.write(tmp, Obs.json.writeValueAsBytes(manifest))
     Files.move(tmp, Paths.get(s"$dir/manifest.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
@@ -240,7 +239,7 @@ object Iterate {
       def bad(why: String, cause: Throwable = null): Nothing =
         throw new IllegalArgumentException(s"snapshot manifest $mf: $why", cause)
       val json =
-        try manifestJson.readTree(mf.toFile)
+        try Obs.json.readTree(mf.toFile)
         catch { case e: JsonProcessingException => bad(s"not valid JSON (${e.getOriginalMessage})", e) }
       def field(name: String, kind: String)(ok: JsonNode => Boolean): JsonNode =
         Option(json.get(name)).filter(ok).getOrElse(bad(s"field $name missing or not $kind"))

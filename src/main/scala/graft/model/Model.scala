@@ -48,9 +48,11 @@ final case class VertexId(url: String, id: Long)
 
 /** Per-iteration execution metrics (north rule: throughput, shuffle-bytes,
   * and skew emitted per iteration). `shuffleReadBytes`/`shuffleWriteBytes`
-  * are the task-level totals inside the iteration window; `taskSkew` is
-  * max-task-time / mean-task-time (1.0 = perfectly balanced; a hot key or
-  * straggler shows as >> 1). -1 / NaN = not collected. */
+  * are the task-level totals of the iteration's span — the jobs that ran
+  * under its `graft.span` ([[graft.obs.Obs]]), never a concurrent job's;
+  * `taskSkew` is max-task-time / mean-task-time over those tasks (1.0 =
+  * perfectly balanced; a hot key or straggler shows as >> 1). -1 / NaN =
+  * not collected (the array tiers record neither). */
 final case class IterationMetrics(
     iteration: Int,
     edges: Long,

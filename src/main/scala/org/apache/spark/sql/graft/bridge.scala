@@ -41,4 +41,12 @@ object bridge {
     * private[spark]. */
   def releaseRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Wait until every listener has seen every event posted so far
+    * (SparkContext.listenerBus is private[spark]). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Post an event to every listener, behind the events already queued. */
+  def postEvent(sc: org.apache.spark.SparkContext,
+      e: org.apache.spark.scheduler.SparkListenerEvent): Unit = sc.listenerBus.post(e)
 }

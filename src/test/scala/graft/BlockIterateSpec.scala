@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import graft.SparkSuite.withTempDir
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -142,8 +142,8 @@ class BlockIterateSpec extends SparkSuite {
   test("PageRankArray snapshot read back by Iterate.resume equals the returned state") {
     val n = 300L
     val edges = Synth.blocks(spark, n, 50)
-    for (f32 <- Seq(false, true)) {
-      val dir = Files.createTempDirectory("graft-array-snap").toString
+    for (f32 <- Seq(false, true)) withTempDir("graft-array-snap") { tmp =>
+      val dir = tmp.toString
       val r = PageRankArray.run(spark, edges, n, floatPrecision = f32,
         cfg = IterConfig(tol = 0.0, maxIter = 4, snapshotDir = Some(dir), snapshotEvery = 2))
       val Some((snap, iter, _)) = Iterate.resume(spark, dir)
@@ -226,7 +226,7 @@ class BlockIterateSpec extends SparkSuite {
       jobs.clear()
       sc.setJobGroup(group, name)
       val iters = try run() finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBus.drain(sc)
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
       val seen = jobs.toArray(Array.empty[(Int, Int, Set[Int])]).sortBy(_._1).toSeq
       assert(iters > 1 && seen.length == iters + 1,
         s"$name: ${seen.length} jobs for the build and $iters iterations")
@@ -262,14 +262,11 @@ object BlockIterateSpec {
 
   /** `f` over `rows` written to, and read back from, a parquet table in a
     * temp dir that is removed afterwards. */
-  def viaParquet[T](spark: SparkSession, rows: DataFrame)(f: DataFrame => T): T = {
-    val dir = Files.createTempDirectory("graft-parquet")
-    try {
+  def viaParquet[T](spark: SparkSession, rows: DataFrame)(f: DataFrame => T): T =
+    withTempDir("graft-parquet") { dir =>
       rows.write.parquet(dir.resolve("t").toString)
       f(spark.read.parquet(dir.resolve("t").toString))
-    } finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
-  }
+    }
 
   /** The projections the PageRank and CC/LP array tiers hand their builds. */
   def weighted(edges: DataFrame): DataFrame =

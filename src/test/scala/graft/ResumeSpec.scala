@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import graft.sources.Synth
 import graft.algo.{PageRank, PageRankArray}
 import graft.exec.{GatherStrategy, IterConfig, Iterate}
+import graft.SparkSuite.withTempDir
 
 /** Checkpoint/resume (north rule: "resumable from checkpoint with
   * per-partition lineage + metrics"; SURVEY.md §5.2 resume ≡ uninterrupted),
@@ -28,8 +29,8 @@ class ResumeSpec extends SparkSuite {
         strategy = GatherStrategy.ShuffleJoin, resumeFrom = from)),
       "array tier, f32" -> ((cfg, from) => PageRankArray.run(spark, edges, n, cfg = cfg,
         floatPrecision = true, resumeFrom = from)))
-    for ((tier, run) <- tiers) {
-      val dir = Files.createTempDirectory("graft-resume").toString
+    for ((tier, run) <- tiers) withTempDir("graft-resume") { tmp =>
+      val dir = tmp.toString
 
       // uninterrupted: 8 fixed iterations
       val full = scores(run(IterConfig(tol = 0.0, maxIter = 8), None).state)
@@ -51,43 +52,48 @@ class ResumeSpec extends SparkSuite {
   }
 
   test("snapshot manifest is written atomically and parses back") {
-    val dir = Files.createTempDirectory("graft-manifest").toString
-    val st = Seq((0L, 0.5), (1L, 0.5)).toDF("id", "x")
-    Iterate.snapshot(dir, st, iteration = 7, delta = 0.123)
-    val Some((loaded, iter, delta)) = Iterate.resume(spark, dir)
-    assert(iter == 7 && math.abs(delta - 0.123) < 1e-12)
-    assert(loaded.as[(Long, Double)].collect().toSet == Set((0L, 0.5), (1L, 0.5)))
+    withTempDir("graft-manifest") { tmp =>
+      val dir = tmp.toString
+      val st = Seq((0L, 0.5), (1L, 0.5)).toDF("id", "x")
+      Iterate.snapshot(dir, st, iteration = 7, delta = 0.123)
+      val Some((loaded, iter, delta)) = Iterate.resume(spark, dir)
+      assert(iter == 7 && math.abs(delta - 0.123) < 1e-12)
+      assert(loaded.as[(Long, Double)].collect().toSet == Set((0L, 0.5), (1L, 0.5)))
+    }
   }
 
   test("resume on an empty dir returns None") {
-    val dir = Files.createTempDirectory("graft-empty").toString
-    assert(Iterate.resume(spark, dir).isEmpty)
+    withTempDir("graft-empty") { dir =>
+      assert(Iterate.resume(spark, dir.toString).isEmpty)
+    }
   }
 
   test("a truncated, non-JSON or mistyped manifest, or a missing state dir, is rejected by name") {
-    val dir = Files.createTempDirectory("graft-bad-manifest").toString
-    Iterate.snapshot(dir, Seq((0L, 1.0)).toDF("id", "x"), iteration = 3, delta = 0.1)
-    val mf = Paths.get(dir, "manifest.json")
-    val state = s"$dir/state_3"
-    def rejected(manifest: String): String = {
-      Files.write(mf, manifest.getBytes(StandardCharsets.UTF_8))
-      val e = intercept[IllegalArgumentException](Iterate.resume(spark, dir))
-      assert(e.getMessage.contains(mf.toString), e.getMessage)
-      e.getMessage
+    withTempDir("graft-bad-manifest") { tmp =>
+      val dir = tmp.toString
+      Iterate.snapshot(dir, Seq((0L, 1.0)).toDF("id", "x"), iteration = 3, delta = 0.1)
+      val mf = Paths.get(dir, "manifest.json")
+      val state = s"$dir/state_3"
+      def rejected(manifest: String): String = {
+        Files.write(mf, manifest.getBytes(StandardCharsets.UTF_8))
+        val e = intercept[IllegalArgumentException](Iterate.resume(spark, dir))
+        assert(e.getMessage.contains(mf.toString), e.getMessage)
+        e.getMessage
+      }
+      rejected("""{"iteration":3,"delta":0.1,"sta""")
+      rejected("garbage")
+      rejected("")
+      assert(rejected(s"""{"delta":0.1,"state_path":"$state"}""").contains("iteration"))
+      assert(rejected(s"""{"iteration":"3","delta":0.1,"state_path":"$state"}""")
+        .contains("iteration"))
+      assert(rejected(s"""{"iteration":3,"delta":0.1,"state_path":7}""").contains("state_path"))
+      assert(rejected(s"""{"iteration":3,"delta":0.1,"state_path":"$dir/state_9"}""")
+        .contains(s"$dir/state_9"))
+      // the same manifest with the real state dir still loads
+      Files.write(mf, s"""{"iteration":3,"delta":0.1,"state_path":"$state"}"""
+        .getBytes(StandardCharsets.UTF_8))
+      assert(Iterate.resume(spark, dir).map(_._2).contains(3))
     }
-    rejected("""{"iteration":3,"delta":0.1,"sta""")
-    rejected("garbage")
-    rejected("")
-    assert(rejected(s"""{"delta":0.1,"state_path":"$state"}""").contains("iteration"))
-    assert(rejected(s"""{"iteration":"3","delta":0.1,"state_path":"$state"}""")
-      .contains("iteration"))
-    assert(rejected(s"""{"iteration":3,"delta":0.1,"state_path":7}""").contains("state_path"))
-    assert(rejected(s"""{"iteration":3,"delta":0.1,"state_path":"$dir/state_9"}""")
-      .contains(s"$dir/state_9"))
-    // the same manifest with the real state dir still loads
-    Files.write(mf, s"""{"iteration":3,"delta":0.1,"state_path":"$state"}"""
-      .getBytes(StandardCharsets.UTF_8))
-    assert(Iterate.resume(spark, dir).map(_._2).contains(3))
   }
 
   test("the array tier rejects a resume state with a missing, repeated or out-of-range id") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.BoundedTopK
 import graft.operators.{Ann, Dedup}
 import graft.sources.{Mtx, Synth}
+import graft.SparkSuite.withTempDir
 
 /** Round-3 hardening: bounded top-k plan shape + exactness, the minhash
   * fixture recall margin made loud, CLI `single` automated, GraphX triangle
@@ -90,20 +91,22 @@ class Round3Spec extends SparkSuite {
   }
 
   test("Main single: pagerank over a parquet edge table, --metrics-csv + --out") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_single").toString
-    Synth.band(spark, 64, 4).write.mode("overwrite").parquet(s"$dir/edges")
-    graft.cli.Main.single(spark, Array(
-      "--input", s"$dir/edges", "--algo", "pagerank",
-      "--tol", "0", "--max-iter", "4",
-      "--metrics-csv", s"$dir/metrics.csv", "--out", s"$dir/out"))
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(s"$dir/metrics.csv"))
-    assert(lines.get(0).startsWith("algo,iteration,edges,seconds,edges_per_sec"))
-    assert(lines.size == 5, s"expected header + 4 iterations, got ${lines.size}")
-    assert(lines.get(1).startsWith("pagerank,1,"))
-    val out = spark.read.parquet(s"$dir/out")
-    assert(out.count() == 64)
-    assert(math.abs(out.agg(sum("x")).head.getDouble(0) - 1.0) < 1e-9)
+    withTempDir("graft_single") { tmp =>
+      val dir = tmp.toString
+      Synth.band(spark, 64, 4).write.mode("overwrite").parquet(s"$dir/edges")
+      graft.cli.Main.single(spark, Array(
+        "--input", s"$dir/edges", "--algo", "pagerank",
+        "--tol", "0", "--max-iter", "4",
+        "--metrics-csv", s"$dir/metrics.csv", "--out", s"$dir/out"))
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s"$dir/metrics.csv"))
+      assert(lines.get(0).startsWith("algo,iteration,edges,seconds,edges_per_sec"))
+      assert(lines.size == 5, s"expected header + 4 iterations, got ${lines.size}")
+      assert(lines.get(1).startsWith("pagerank,1,"))
+      val out = spark.read.parquet(s"$dir/out")
+      assert(out.count() == 64)
+      assert(math.abs(out.agg(sum("x")).head.getDouble(0) - 1.0) < 1e-9)
+    }
   }
 
   test("triangle count matches GraphX (vendor oracle, K13)") {
@@ -130,18 +133,19 @@ class Round3Spec extends SparkSuite {
   }
 
   test("Mtx.read: file:// scheme via Hadoop FS; directories rejected") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mtx")
-    val f = dir.resolve("t.mtx")
-    java.nio.file.Files.write(f,
-      ("%%MatrixMarket matrix coordinate real general\n" +
-        "% comment\n3 3 3\n1 2 0.5\n2 3 1.5\n3 1 2.5\n").getBytes("UTF-8"))
-    val (h, edges) = Mtx.read(spark, "file://" + f.toString)
-    assert(h.rows == 3 && h.nnz == 3)
-    val rows = edges.orderBy("src").as[(Long, Long, Double)].collect().toSeq
-    assert(rows == Seq((0L, 1L, 0.5), (1L, 2L, 1.5), (2L, 0L, 2.5)))
-    val ex = intercept[IllegalArgumentException] {
-      Mtx.read(spark, dir.toString)
+    withTempDir("graft_mtx") { dir =>
+      val f = dir.resolve("t.mtx")
+      java.nio.file.Files.write(f,
+        ("%%MatrixMarket matrix coordinate real general\n" +
+          "% comment\n3 3 3\n1 2 0.5\n2 3 1.5\n3 1 2.5\n").getBytes("UTF-8"))
+      val (h, edges) = Mtx.read(spark, "file://" + f.toString)
+      assert(h.rows == 3 && h.nnz == 3)
+      val rows = edges.orderBy("src").as[(Long, Long, Double)].collect().toSeq
+      assert(rows == Seq((0L, 1L, 0.5), (1L, 2L, 1.5), (2L, 0L, 2.5)))
+      val ex = intercept[IllegalArgumentException] {
+        Mtx.read(spark, dir.toString)
+      }
+      assert(ex.getMessage.contains("directory"))
     }
-    assert(ex.getMessage.contains("directory"))
   }
 }

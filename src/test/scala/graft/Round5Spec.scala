@@ -22,8 +22,8 @@ class Round5Spec extends SparkSuite {
 
   // ---------- #1: one job per convergence-mode iteration ----------
 
-  /** Jobs submitted during `f`, counted via listener and polled to quiet
-    * (events are async — the TaskMetricsCollector.stabilize pattern). */
+  /** Jobs submitted during `f`, counted via listener once the bus has
+    * delivered every event `f` posted. */
   private def countJobs(f: => Unit): Int = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new SparkListener {
@@ -32,11 +32,7 @@ class Round5Spec extends SparkSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       f
-      var prev = -1
-      var waited = 0
-      while (waited < 2000 && n.get() != prev) {
-        prev = n.get(); Thread.sleep(50); waited += 50
-      }
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext)
       n.get()
     } finally spark.sparkContext.removeSparkListener(l)
   }

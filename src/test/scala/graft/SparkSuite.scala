@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,4 +25,14 @@ object TestSpark {
 
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+}
+
+object SparkSuite {
+  /** `f` over a fresh temp dir named `prefix...`, removed with everything
+    * in it afterwards, whether `f` returns or throws. */
+  def withTempDir[T](prefix: String)(f: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir)
+    finally Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+  }
 }
