@@ -44,7 +44,6 @@ run_level() { # $1 = executors, $2 = label cores
   # it spill/shuffle lands on the slow shared disk (measured: a 4x6 run at
   # 403M edges crawled at ~5 busy cores for 20+ min).
   SPARK_GRAFT_KERNEL=${KERNEL:-shuffle} SPARK_GRAFT_PARTS=$PARTS \
-  SPARK_GRAFT_CKPT=${CKPT:-1} \
   SPARK_GRAFT_CONF="${CONF:-}" \
   SPARK_SCALA_VERSION=2.13 \
   SPARK_LOCAL_DIRS=/dev/shm/graft-spark \

@@ -210,14 +210,13 @@ object ConnectedComponents {
           .hint("shuffle_hash"), Seq("x"))
         .select(col("id"), col("x2").as("x"), col("x_old"))
 
-    // Convergence = "no label changed", computed as an EXACT changed-row
-    // count fused into the round's own materialization job (the step emits
-    // x_old; see Iterate/IterConfig). This replaced the r04 "msum"
-    // sum-comparison, whose sum(labels) wrapped at V·maxLabel > 2^63 and
-    // lost exactness in double above 2^53 — silent wrong-convergence at the
-    // 10^12-vertex design point (VERDICT r04 #4). "changed" compares longs
-    // row-wise: exact at any V and any label magnitude.
-    val ccCfg = if (cfg.tol > 0) cfg.copy(norm = "changed") else cfg
+    // Convergence = "no label changed", whatever norm the caller named: an
+    // exact changed-row count fused into the round's own materialization
+    // job (the step emits x_old; see Iterate/IterConfig). A sum of labels
+    // would wrap at V·maxLabel > 2^63 and lose exactness in double above
+    // 2^53 (VERDICT r04 #4); "changed" compares longs row-wise: exact at
+    // any V and any label magnitude.
+    val ccCfg = cfg.copy(norm = "changed")
 
     // a self-join evaluates its input subtree on BOTH sides: persist each
     // stage inside the round or the propagate join runs 4x per round.

@@ -25,11 +25,13 @@ import graft.exec.{Gather, GatherStrategy, IterConfig, Iterate, LoopResult}
   *   - edges are normalized ONCE (p = w / Σ_out w, or 1/outdeg unweighted) and
   *     persisted partitioned by src block: iterations never move edges, only
   *     the O(V) state and the partial-aggregated contributions;
-  *   - dangling mass is recovered from mass conservation (1 - Σ contributions)
-  *     — no per-iteration dangling join;
+  *   - the dangling set (vertices with no live out-weight) is computed once
+  *     and persisted; each iteration joins the state against it and sums
+  *     the dangling mass as a 1-row aggregate, broadcast into the same
+  *     iteration plan (skipped when no vertex dangles);
   *   - contribution aggregation partial-aggregates map-side before the O(V)
   *     final shuffle;
-  *   - lineage checkpointed, state persisted/unpersisted per generation.
+  *   - each state generation is checkpointed by [[graft.exec.Iterate]].
   *
   * `resumeFrom` = (an (id, x) state, e.g. from [[graft.exec.Iterate.resume]],
   * and its iteration number) continues a run on either tier; both write the
@@ -59,6 +61,7 @@ object PageRank {
     if (GatherStrategy.resolve(strategy, nVertices) == GatherStrategy.BroadcastState)
       return PageRankArray.run(spark, edges, nVertices, damping, cfg, weighted,
         resumeFrom = resumeFrom)
+    cfg.requireNorm("PageRank", "linf", "l1")
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
     // One-time "CSR build" (reference C1): normalize edge weights, append a

@@ -87,6 +87,7 @@ object PageRankArray {
       floatPrecision: Boolean = false,
       resumeFrom: Option[(DataFrame, Int)] = None): PageRank.Result = {
     require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
+    cfg.requireNorm("PageRank", "linf", "l1")
     val n = nVertices.toInt
     val tolFloor = f32TolFloor(cfg.norm, nVertices)
     if (floatPrecision && cfg.tol > 0 && cfg.tol < tolFloor)
@@ -122,18 +123,17 @@ object PageRankArray {
       if (w(u) > 0 && w(u) < Double.PositiveInfinity) 1.0 / w(u) else 0.0
     }
     val danglingIds = Array.range(0, n).filter(u => invW(u) == 0.0)
-    val l1 = cfg.norm == "l1" // scale-free convergence (see IterConfig)
 
     val invWBc = spark.sparkContext.broadcast(invW)
 
     def iterate[E <: AnyRef](codec: StateCodec[Array[Double], E], strategy: String)(
-        rows: (Double, Double, Boolean) => Kernel[E]) =
+        rows: (Double, Double, IterConfig) => Kernel[E]) =
       BlockIterate.run(spark, blocks, codec, init, cfg, strategy, "x",
           startIter = resumeFrom.fold(0)(_._2), algo = "pagerank") { x =>
         var dm = 0.0
         var di = 0
         while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
-        rows((1.0 - damping) / nVertices + damping * dm / nVertices, damping, l1)
+        rows((1.0 - damping) / nVertices + damping * dm / nVertices, damping, cfg)
       }
     val (state, metrics) = try {
       if (floatPrecision)
@@ -172,10 +172,10 @@ object PageRankArray {
     if (norm == "l1") Math.ulp(1.0f) else Math.ulp((1.0 / math.max(1L, nVertices)).toFloat)
 
   /** Row kernel: x'[v] = base + d * Σ w(u,v)·c[u] over v's in-edges, with
-    * the per-block L1 (sum) or L∞ (max) delta against x[v]. The
+    * the block's |x'[v] - x[v]| terms folded by `cfg`'s norm. The
     * contributions c[u] = x[u] / W[u] (0 for a dangling u) are derived once
     * per executor per iteration from the cached state. */
-  private def rowsF64(base: Double, d: Double, l1: Boolean,
+  private def rowsF64(base: Double, d: Double, cfg: IterConfig,
       invW: Broadcast[Array[Double]]): Kernel[Array[Double]] =
     (b, xs) => {
       val c = StateCache.derive(xs) { x =>
@@ -194,8 +194,7 @@ object PageRankArray {
         while (i < end) { s += b.colVal(i) * c(b.colInd(i)); i += 1 }
         val nv = base + d * s
         out(r) = nv
-        val dd = math.abs(nv - xs(b.base + r))
-        if (l1) pd += dd else if (dd > pd) pd = dd
+        pd = cfg.fold(pd, math.abs(nv - xs(b.base + r)))
         r += 1
       }
       (out, pd)
@@ -203,7 +202,7 @@ object PageRankArray {
 
   /** [[rowsF64]] in float arithmetic (c[u] rounded once from the double
     * product); the delta is accumulated in double. */
-  private def rowsF32(base: Double, d: Double, l1: Boolean,
+  private def rowsF32(base: Double, d: Double, cfg: IterConfig,
       invW: Broadcast[Array[Double]]): Kernel[Array[Float]] = {
     val bf = base.toFloat
     val df = d.toFloat
@@ -224,8 +223,7 @@ object PageRankArray {
         while (i < end) { s += b.colValF(i) * c(b.colInd(i)); i += 1 }
         val nv = bf + df * s
         out(r) = nv
-        val dd = math.abs((nv - xs(b.base + r)).toDouble)
-        if (l1) pd += dd else if (dd > pd) pd = dd
+        pd = cfg.fold(pd, math.abs((nv - xs(b.base + r)).toDouble))
         r += 1
       }
       (out, pd)

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.graph.AdjacencyBuilder
 
 /** Exact triangle counting by degree-ordered edge orientation + wedge close
   * (the standard distributed algorithm; exact counts per the north rule).
@@ -21,10 +22,7 @@ object TriangleCount {
 
   /** Oriented edge list (lo -> hi by (degree, id) order). */
   def orient(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val und = AdjacencyBuilder.symmetrize(edges)
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
       .withColumnRenamed("src", "id")
     // und with both degrees; keep each undirected edge once, oriented.
@@ -43,32 +41,29 @@ object TriangleCount {
       .select(col("e.a").as("src"), col("e.b").as("dst"))
   }
 
+  /** Every triangle once, as (a, b, c) over the oriented edges `o`: the
+    * wedges a->b->c closed by the edge a->c. */
+  private def triangles(o: DataFrame): DataFrame = {
+    val e1 = o.select(col("src").as("a"), col("dst").as("b"))
+    val e2 = o.select(col("src").as("b2"), col("dst").as("c"))
+    e1.join(e2.hint("shuffle_hash"), col("b") === col("b2"))
+      .select(col("a"), col("b"), col("c"))
+      .join(o.select(col("src").as("a"), col("dst").as("c"))
+        .hint("shuffle_hash"), Seq("a", "c"), "left_semi")
+  }
+
   /** Total triangle count. */
   def countTriangles(spark: SparkSession, edges: DataFrame): Long = {
     val o = orient(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val e1 = o.select(col("src").as("a"), col("dst").as("b"))
-      val e2 = o.select(col("src").as("b2"), col("dst").as("c"))
-      val wedges = e1.join(e2.hint("shuffle_hash"), col("b") === col("b2"))
-        .select(col("a"), col("b"), col("c"))
-      wedges
-        .join(o.select(col("src").as("a"), col("dst").as("c"))
-          .hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-        .count()
-    } finally { o.unpersist(); () }
+    try triangles(o).count()
+    finally { o.unpersist(); () }
   }
 
   /** Per-vertex triangle participation counts (each triangle credits its
     * three corners once). */
   def perVertex(spark: SparkSession, edges: DataFrame): DataFrame = {
     val o = orient(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val e1 = o.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = o.select(col("src").as("b2"), col("dst").as("c"))
-    val tris = e1.join(e2.hint("shuffle_hash"), col("b") === col("b2"))
-      .select(col("a"), col("b"), col("c"))
-      .join(o.select(col("src").as("a"), col("dst").as("c"))
-        .hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-    val out = tris
+    val out = triangles(o)
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("triangles"))
       // materialize at a checkpoint boundary BEFORE dropping the oriented

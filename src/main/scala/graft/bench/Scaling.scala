@@ -71,22 +71,11 @@ object Scaling {
       // discards its cold run the same way,
       // `/root/reference/include/abstractGraph.hpp:52-56`)
       val warm = 3
-      // SPARK_GRAFT_CKPT: lineage-truncation cadence for the loop. The
-      // localCheckpoint materialization is part of every iteration's fixed
-      // cost; spacing it out (e.g. 2-3) trades a slightly larger task
-      // binary on the off iterations for one less storage write per step.
-      val ckpt = sys.env.getOrElse("SPARK_GRAFT_CKPT", "1").toInt
-      // SPARK_GRAFT_TOL: >0 runs CONVERGENCE mode — the north-rule metric
-      // is per-iteration throughput of "PageRank to 1e-6 convergence", and
-      // since r05 a convergence-mode iteration costs fixed mode's
-      // materialization job plus ONE job-floor-priced scan-agg delta over
-      // the cached state (join-free; see Iterate). Default 1e-300 with
-      // norm=l1: the delta is computed and checked every iteration but
-      // never stops the loop early, so both cluster sizes run the
-      // IDENTICAL iteration count.
+      // SPARK_GRAFT_TOL: the l1 stop tolerance. The default 1e-300 never
+      // stops the loop early, so both cluster sizes run the IDENTICAL
+      // iteration count; every iteration measures its delta either way.
       val tol = sys.env.getOrElse("SPARK_GRAFT_TOL", "1e-300").toDouble
-      val cfg = IterConfig(tol = tol, maxIter = iters + warm,
-        checkpointEvery = ckpt, norm = "l1")
+      val cfg = IterConfig(tol = tol, maxIter = iters + warm, norm = "l1")
       val r =
         if (kernel == "array")
           graft.algo.PageRankArray.run(spark, Synth.band(spark, n, l), n,

@@ -187,12 +187,12 @@ private[graft] object StateCache {
   *      broadcast is then released;
   *   4. the driver scatters the slices into `next` in parallel (disjoint id
   *      runs, so plain assignment is race-free), checks that they covered
-  *      all n ids, and folds the partial deltas in block order — a sum for
-  *      the "l1" and "changed" norms, a max for "linf";
+  *      all n ids, and folds the partial deltas in block order with
+  *      [[IterConfig.fold]], as each kernel folds its rows;
   *   5. `afterScatter` may rewrite `next` in place (CC's pointer
-  *      compression); metrics are recorded and `cfg.snapshotDir` is honored
-  *      as in [[Iterate]].
-  * The loop runs while iter < cfg.maxIter and delta >= cfg.tol. Driver work
+  *      compression); metrics are recorded and the snapshot written when
+  *      due.
+  * The loop and snapshots follow [[IterConfig]]'s stop rule. Driver work
   * per iteration is two O(V) copies plus an O(V/P)-parallel scatter;
   * everything O(E) and every reduction is executor-side.
   *
@@ -204,7 +204,7 @@ private[graft] object StateCache {
 object BlockIterate {
 
   /** One block + the executor's state -> the block's next-state slice and
-    * its partial convergence delta. */
+    * its partial convergence delta: its rows' terms folded by the norm. */
   type Kernel[E] = (CsrBlock, E) => (E, Double)
 
   /** Persisted, lineage-cut range blocks of an n-vertex graph: `nEdges`
@@ -276,14 +276,13 @@ object BlockIterate {
       kernel: S => Kernel[E]): (DataFrame, Seq[IterationMetrics]) = {
     val sc = spark.sparkContext
     val n = blocks.n
-    val sum = cfg.norm != "linf"
     val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
     var x = init
     var next = codec.alloc(n)
     var iter = startIter
     var delta = Double.MaxValue
     try {
-      while (iter < cfg.maxIter && delta >= cfg.tol) {
+      while (cfg.continues(iter, delta)) {
         Obs.span(spark, s"$algo:iter:${iter + 1}") {
           val t0 = System.nanoTime()
           val k = kernel(x)
@@ -297,20 +296,17 @@ object BlockIterate {
           val covered = java.util.stream.IntStream.range(0, slices.length).parallel()
             .mapToLong(i => codec.scatter(slices(i)._2, into, slices(i)._1).toLong).sum()
           require(covered == n, s"blocks covered $covered of $n vertex ids")
-          delta = 0.0
-          slices.foreach(s => delta = if (sum) delta + s._3 else math.max(delta, s._3))
+          delta = slices.foldLeft(0.0)((d, s) => cfg.fold(d, s._3))
           afterScatter(next, delta)
           val tmp = x; x = next; next = tmp
           val secs = (System.nanoTime() - t0) / 1e9
           metrics += IterationMetrics(iter + 1, blocks.nEdges, secs,
             if (secs > 0) blocks.nEdges / secs else 0.0, delta, strategy)
           iter += 1
-          cfg.snapshotDir.foreach { dir =>
-            if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol) {
-              val snap = sc.broadcast(codec.pack(x))
-              try Iterate.snapshot(dir, codec.toDf(spark, snap, n, "x"), iter, delta)
-              finally snap.destroy()
-            }
+          cfg.snapshotAt(iter, delta).foreach { dir =>
+            val snap = sc.broadcast(codec.pack(x))
+            try Iterate.snapshot(dir, codec.toDf(spark, snap, n, "x"), iter, delta)
+            finally snap.destroy()
           }
         }
       }

@@ -1,89 +1,97 @@
 package graft.exec
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.JsonNode
 import graft.model.IterationMetrics
 import graft.obs.{Obs, Span}
 
-/** Iteration driver: convergence loop with lineage control and resumable
-  * snapshots.
+/** Iteration settings and the one stop rule of both tiers, [[Iterate.loop]]
+  * and [[BlockIterate.run]].
   *
-  * The reference re-invokes its kernel in a driver loop
-  * (`/root/reference/include/abstractGraph.hpp:119-129`); in Spark an
-  * unmanaged iterative plan grows its lineage without bound and stalls the
-  * planner by iteration ~50 (SURVEY.md §7.5.3). This driver:
-  *   - persists each state generation, unpersists the previous,
-  *   - truncates lineage with `localCheckpoint` every `checkpointEvery`
-  *     iterations,
-  *   - optionally writes a durable snapshot (parquet state + atomically
-  *     renamed JSON manifest) so ANY run is resumable mid-iteration
-  *     (north rule), and
-  *   - records per-iteration throughput metrics (edges/sec, delta).
-  */
-/** @param norm convergence norm: "linf" (max per-vertex delta), "l1"
-  *   (sum of deltas), or "changed" (exact count of rows whose x changed —
-  *   the norm for label states: exact at ANY scale, unlike the retired
-  *   "msum" sum-comparison form, whose `sum(x)` over Long labels wraps at
-  *   V·maxLabel > 2^63 and loses exactness in double above 2^53 — a silent
-  *   wrong-convergence hazard on the 10^12-vertex design path).
-  *   HOW the delta is computed depends on the step's output shape: a step
-  *   that emits (id, x, x_old) gets the FUSED path — x_old rides through
-  *   the iteration's materialization (one extra 8 B column in the cached
-  *   state), and the delta is then a JOIN-FREE O(V) scan-aggregate over the
-  *   just-materialized in-memory state: partial agg per partition + a 1-row
-  *   final — a job-floor-priced action, vs r04's `dist` which re-shuffled
-  *   and hash-joined old-vs-new state every iteration (VERDICT r04 #1: the
-  *   measured serial term limiting N->4N scaling). Every step must emit
-  *   x_old.
-  *   (First fused design used a task-side accumulator inside a typed map to
-  *   make the iteration literally one job; RETIRED after N->4N legs showed
-  *   the object-serde boundary erases the aggregate's hash partitioning —
-  *   the next iteration's state join re-shuffles — and the extra AQE stage
-  *   multiplies exposure to this host's scheduler freezes. The scan-agg
-  *   pays one job-floor (~40 ms) instead and keeps the plan columnar
-  *   end-to-end.)
-  *   For PageRank the state is a probability vector whose
-  *   entries scale as 1/V, so an ABSOLUTE linf tolerance of 1e-6 is
-  *   trivially satisfied at V >= 10^6 after one step and meaningless at
-  *   10^12 pages; the L1 delta (total-variation distance) is scale-free —
-  *   use norm="l1" for convergence-mode PageRank at any size. */
+  * Each iteration measures a delta between the new state x and the old
+  * one, by `norm`:
+  *   - "linf": max |x - x_old|;
+  *   - "l1": Σ |x - x_old|;
+  *   - "changed": Σ [x != x_old], the number of vertices whose x changed,
+  *     exact for Long label states at any magnitude.
+  * A PageRank state is a probability vector whose entries scale as 1/V, so
+  * an absolute linf tolerance is met after one step at large V; the l1
+  * delta (total-variation distance) is scale-free. Any other norm is
+  * rejected here, and a tier rejects a norm it cannot compute
+  * ([[requireNorm]]).
+  *
+  * The loop runs while fewer than `maxIter` iterations ran and the last
+  * delta has not converged (is not below `tol`); at tol <= 0 it runs
+  * exactly `maxIter` iterations, still recording each delta. With
+  * `snapshotDir` set, every `snapshotEvery`-th iteration and the converged
+  * one write a resumable snapshot ([[Iterate.snapshot]]). */
 final case class IterConfig(
     tol: Double = 1e-6,
     maxIter: Int = 100,
-    checkpointEvery: Int = 1,
     snapshotDir: Option[String] = None,
     snapshotEvery: Int = 5,
-    norm: String = "linf")
+    norm: String = "linf") {
+  requireNorm("IterConfig", "linf", "l1", "changed")
+
+  /** l1 and changed sum their per-vertex terms; linf takes their max. */
+  private val sums = norm != "linf"
+
+  /** Fails, naming the accepted norms, unless `norm` is one of them. */
+  def requireNorm(who: String, accepted: String*): Unit =
+    require(accepted.contains(norm),
+      s"$who: norm \"$norm\" is not one of ${accepted.mkString(", ")}")
+
+  /** A delta below a positive `tol`; a NaN delta never converges. */
+  private def converged(delta: Double): Boolean = tol > 0 && delta < tol
+
+  /** Whether another iteration runs after `iter` iterations ending in `delta`. */
+  def continues(iter: Int, delta: Double): Boolean = iter < maxIter && !converged(delta)
+
+  /** The snapshot dir, when iteration number `iter` ending in `delta` writes one. */
+  def snapshotAt(iter: Int, delta: Double): Option[String] =
+    snapshotDir.filter(_ => iter % snapshotEvery == 0 || converged(delta))
+
+  /** `acc` folded with one more per-vertex or per-block term. */
+  def fold(acc: Double, term: Double): Double =
+    if (sums) acc + term else if (term > acc) term else acc
+
+  /** The delta as one aggregate over a state's `x` and `x_old` columns. */
+  def deltaAgg: Column = norm match {
+    case "linf"    => max(abs(col("x") - col("x_old")))
+    case "l1"      => sum(abs(col("x") - col("x_old")))
+    case "changed" => sum((col("x") =!= col("x_old")).cast("long"))
+  }
+}
 
 final case class LoopResult(state: DataFrame, metrics: Seq[IterationMetrics])
 
+/** The DataFrame-tier iteration driver. The reference re-invokes its kernel
+  * in a driver loop (`/root/reference/include/abstractGraph.hpp:119-129`);
+  * in Spark an unmanaged iterative plan grows its lineage without bound and
+  * stalls the planner by iteration ~50 (SURVEY.md §7.5.3). Each iteration
+  * here runs one path: the step emits (id, x, x_old), the result is marked
+  * for a lazy `localCheckpoint` (a fresh plan leaf per generation, so plans
+  * never grow and old and new generations never share attribute ids), and
+  * one scan-aggregate of the marked state computes the delta
+  * ([[IterConfig.deltaAgg]]). That scan is the iteration's one job: it
+  * materializes the cache and performs the checkpoint as it reads it. The
+  * previous generation is then released, and the snapshot, if due, written.
+  */
 object Iterate {
 
-  /** Join-free convergence delta over a MATERIALIZED (id, x, x_old) state:
-    * an O(V) scan of the in-memory relation, partial-aggregated per
-    * partition, 1-row final — no shuffle of data, no old-vs-new join, no
-    * object serde. For Long label states use norm="changed": the comparison
-    * is exact at any magnitude, whereas an l1/linf |x - x_old| on labels
-    * would round through double above 2^53 (the retired msum hazard). */
-  private def scanDelta(materialized: DataFrame, norm: String): Double = {
-    val d = abs(col("x") - col("x_old"))
-    val agg = norm match {
-      case "l1"      => sum(d)
-      case "changed" => sum((col("x") =!= col("x_old")).cast("long"))
-      case _         => max(d)
-    }
-    val row = materialized.agg(agg.cast("double").as("d")).head()
+  /** The `cfg.norm` delta of a state marked for a lazy checkpoint: an O(V)
+    * scan, partial-aggregated per partition with a 1-row final, that also
+    * materializes the state. An empty state has delta 0. */
+  private def scanDelta(state: DataFrame, cfg: IterConfig): Double = {
+    val row = state.agg(cfg.deltaAgg.cast("double")).head()
     if (row.isNullAt(0)) 0.0 else row.getDouble(0)
   }
 
-  /** Run `step` from `init` until the `cfg.norm` delta drops below
-    * `cfg.tol` or `cfg.maxIter` iterations ran. `step` must emit
-    * (id, x, x_old): the delta is a join-free scan of x against x_old over
-    * the materialized state (see [[IterConfig]]).
+  /** Run `step` from `init` while `cfg` continues ([[IterConfig]]). `step`
+    * must emit (id, x, x_old); it and the result see (id, x).
     *
     * Each iteration runs as the tracked span `<algo>:iter:<n>`
     * ([[graft.obs.Obs]]): its metrics' shuffle bytes and task skew come
@@ -100,11 +108,6 @@ object Iterate {
       strategyName: String = "",
       startIter: Int = 0,
       algo: String)(step: (DataFrame, Int) => DataFrame): LoopResult = {
-    // Each state generation is cut at a localCheckpoint boundary: a fresh
-    // LogicalRDD leaf with new attribute ids. This both bounds plan growth
-    // AND prevents "conflicting references" when old and new generations
-    // (which would otherwise share the same upstream plan, e.g. the vertex
-    // universe) meet in the convergence join.
     // spark.graft.loop.aqe=off disables AQE for the loop (restored after).
     // MEASURED BOTH WAYS, so this is a knob, not a default-for-everyone:
     // in-JVM local[k] the iteration plan is static (pinned repartition,
@@ -141,67 +144,24 @@ object Iterate {
     val metrics = scala.collection.mutable.ArrayBuffer.empty[(IterationMetrics, Span)]
     var iter = startIter
     var delta = Double.MaxValue
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
+    while (cfg.continues(iter, delta)) {
       // the snapshot write belongs to its iteration's span too
       metrics += Obs.span(init.sparkSession, s"$algo:iter:${iter + 1}", track = true) {
         val t0 = System.nanoTime()
-        val steppedRaw = step(state, iter)
-        // FUSED convergence (VERDICT r04 #1): the step's (id, x, x_old)
-        // carries the old state THROUGH the materialization (one extra cached
-        // column), and the delta is a join-free scan-agg of the materialized
-        // result — no old-vs-new shuffle join, no object boundary (see the
-        // IterConfig scaladoc for the retired accumulator design). tol <= 0
-        // (fixed-iteration mode) just strips x_old before caching.
-        require(steppedRaw.columns.contains("x_old"),
-          s"iteration step must emit (id, x, x_old), got ${steppedRaw.columns.mkString(", ")}")
-        val keepOld = cfg.tol > 0.0
-        val stepped =
-          if (keepOld) steppedRaw else steppedRaw.select(col("id"), col("x"))
-        // localCheckpoint (not persist) every k iterations: persist alone
-        // truncates recompute but NOT the logical plan, which otherwise grows
-        // linearly and blows up the planner/AQE by iteration ~100.
-        // r06 (VERDICT r05 #1c, the serial term): in fused-convergence mode
-        // the checkpoint is LAZY — the scanDelta action below materializes
-        // the cache AND performs the marked local checkpoint in its own job,
-        // so a checkpoint-boundary iteration is ONE job, not two (eager
-        // checkpoint + delta scan). Fixed mode keeps the eager checkpoint (it
-        // has no delta action).
-        val boundary = (iter + 1) % cfg.checkpointEvery == 0
-        val next =
-          if (boundary) stepped.localCheckpoint(!keepOld)
-          else stepped.persist(StorageLevel.MEMORY_AND_DISK)
-        // fixed-iteration mode (tol <= 0) never stops on delta: skip the
-        // convergence action — one fewer job per iteration.
-        delta =
-          if (!keepOld) { // localCheckpoint(true) already materialized
-            if (!boundary) next.count()
-            Double.MaxValue
-          } else {
-            // The scan-agg delta ITSELF materializes the persist-branch cache:
-            // InMemoryRelation builds its full-row cached batches on the first
-            // scan regardless of the projection on top, so a count() first
-            // would pay a second O(V) job per non-checkpoint iteration for
-            // nothing (measured serial term at CKPT=3: the count+scan pair
-            // was 2 jobs where 1 does both). At a checkpoint boundary the
-            // same scan also performs the lazy local checkpoint.
-            scanDelta(next, cfg.norm)
-          }
+        val stepped = step(state, iter)
+        require(stepped.columns.contains("x_old"),
+          s"iteration step must emit (id, x, x_old), got ${stepped.columns.mkString(", ")}")
+        val next = stepped.localCheckpoint(false)
+        delta = scanDelta(next, cfg)
         val secs = (System.nanoTime() - t0) / 1e9
         val m = IterationMetrics(iter + 1, edgesPerIter, secs,
-          if (secs > 0) edgesPerIter / secs else 0.0,
-          if (cfg.tol <= 0.0) Double.NaN else delta, // NaN = not measured
-          strategyName)
+          if (secs > 0) edgesPerIter / secs else 0.0, delta, strategyName)
         mat.unpersist()
         mat = next
-        // steps, snapshots, and the result see the (id, x) shape; the
-        // projection is a plan-only prune over the cached relation (x_old is
-        // never scanned again), partitioning preserved.
-        state = if (keepOld) next.select("id", "x") else next
+        // a plan-only prune over the cached state: x_old is never read again
+        state = next.select("id", "x")
         iter += 1
-        cfg.snapshotDir.foreach { dir =>
-          if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol)
-            snapshot(dir, state, iter, delta)
-        }
+        cfg.snapshotAt(iter, delta).foreach(snapshot(_, state, iter, delta))
         m
       }
     }

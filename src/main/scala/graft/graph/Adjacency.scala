@@ -14,12 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object AdjacencyBuilder {
 
-  /** Sum duplicate (src,dst) edges — the reference's CSR kernel accumulates
-    * duplicates with `+=` (`/root/reference/include/graphCSR.hpp:91`); we make
-    * that explicit and canonical. */
-  def coalesceDuplicates(edges: DataFrame): DataFrame =
-    edges.groupBy("src", "dst").agg(sum("w").as("w"))
-
   /** Transpose (reference C2, `/root/reference/include/graphCOO.hpp:141-150`):
     * swap orientation so gather-by-in-neighbors becomes gather-by-src. */
   def transpose(edges: DataFrame): DataFrame =
@@ -33,12 +27,6 @@ object AdjacencyBuilder {
       .agg(sort_array(collect_list(struct(col("dst"), col("w")))).as("nbrs"))
       .select(col("src"), col("nbrs.dst").as("dsts"), col("nbrs.w").as("ws"))
 
-  /** In-adjacency (gather orientation for PageRank). */
-  def inAdjacency(edges: DataFrame): DataFrame =
-    outAdjacency(transpose(edges))
-      .withColumnRenamed("src", "dst")
-      .withColumnRenamed("dsts", "srcs")
-
   /** Undirected, deduplicated link set: both orientations, no self-loops.
     * Mirrors the reference's symmetric .mtx expansion
     * (`/root/reference/lib/MMIO/mmio_cpp.h:40-48`). */
@@ -47,11 +35,6 @@ object AdjacencyBuilder {
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-
-  /** Out-degree per vertex. */
-  def outDegrees(edges: DataFrame): DataFrame =
-    edges.groupBy("src").agg(count(lit(1)).as("degree"))
-      .withColumnRenamed("src", "id")
 
   /** Degree-skew statistics (reference A5/A6: max row degree at
     * `/root/reference/include/graphCSR.hpp:464-467`, avg at

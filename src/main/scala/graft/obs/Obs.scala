@@ -21,14 +21,34 @@ import org.apache.spark.sql.graft.bridge
 final class Span private[obs] (val id: Long, val name: String, val sink: Option[String]) {
   var wallNs, taskMsSum, taskMsMax, cpuNs, shuffleRead, shuffleWrite, spill = 0L
   var jobs, stages, tasks = 0
+  /** Stage id -> (task ms sum, task ms max, task count) of its tasks here. */
+  private val stageTasks = mutable.HashMap.empty[Int, Array[Long]]
   /** The caller's `spark.jobGroup.id` (null when none was set). */
   var group: String = _
   /** SQL execution id -> its last physical plan (DataFrame-tier spans). */
   private[obs] val plans = mutable.LinkedHashMap.empty[Long, SparkPlanInfo]
 
-  /** max-task / mean-task time: 1.0 balanced, >> 1 a hot key or straggler. */
-  def skew: Double =
-    if (tasks == 0 || taskMsSum == 0) Double.NaN else taskMsMax * tasks.toDouble / taskMsSum
+  /** Count one finished task of one of the span's stages. */
+  private[obs] def add(e: SparkListenerTaskEnd): Unit = {
+    val ms = e.taskInfo.duration
+    tasks += 1; taskMsSum += ms; taskMsMax = math.max(taskMsMax, ms)
+    val st = stageTasks.getOrElseUpdate(e.stageId, new Array[Long](3))
+    st(0) += ms; st(1) = math.max(st(1), ms); st(2) += 1
+    Option(e.taskMetrics).foreach { m =>
+      cpuNs += m.executorCpuTime
+      shuffleRead += m.shuffleReadMetrics.totalBytesRead
+      shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+      spill += m.diskBytesSpilled
+    }
+  }
+
+  /** The largest max-task / mean-task time of any one stage: 1.0 balanced,
+    * >> 1 a hot key or straggler. Per stage, so stages of unequal cost do
+    * not read as skew. NaN when no stage's tasks took time. */
+  def skew: Double = {
+    val perStage = stageTasks.values.collect { case Array(sum, max, n) if sum > 0 => max * n.toDouble / sum }
+    if (perStage.isEmpty) Double.NaN else perStage.max
+  }
 
   /** Exchange count and join node names over the span's SQL executions
     * (cached subplans and reused exchanges are not run again: not walked). */
@@ -68,12 +88,12 @@ private final case class SpanEnd(span: Span) extends SparkListenerEvent {
 }
 
 /** The one listener: attributes jobs, stages and tasks to the open span
-  * whose id their job carried; everything else it ignores. Runs on its
-  * bus thread only, so the per-span counters need no locking. */
+  * whose id their job carried, and SQL executions to the open span whose
+  * job tag they started under; everything else it ignores. Runs on its bus
+  * thread only, so the per-span counters need no locking. */
 private final class ObsListener extends SparkListener {
   val open = new ConcurrentHashMap[Long, Span]
   private val stageSpans = mutable.HashMap.empty[Int, Span]
-  private val sqlPlans = mutable.HashMap.empty[Long, SparkPlanInfo]
   private val sqlSpans = mutable.HashMap.empty[Long, Span]
 
   private def spanOf(p: java.util.Properties): Option[Span] =
@@ -82,34 +102,23 @@ private final class ObsListener extends SparkListener {
   override def onJobStart(e: SparkListenerJobStart): Unit = spanOf(e.properties).foreach { s =>
     s.jobs += 1
     if (s.group == null) s.group = e.properties.getProperty("spark.jobGroup.id")
-    // only a sink record reads the plans: a tracked-only span keeps none
-    val sqlId = Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong)
-    if (s.sink.isDefined) sqlId.foreach { x =>
-      sqlSpans(x) = s
-      sqlPlans.get(x).foreach(s.plans(x) = _)
-    }
   }
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
     spanOf(e.properties).foreach { s => s.stages += 1; stageSpans(e.stageInfo.stageId) = s }
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
     stageSpans.remove(e.stageInfo.stageId)
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = stageSpans.get(e.stageId).foreach { s =>
-    val ms = e.taskInfo.duration
-    s.tasks += 1; s.taskMsSum += ms; s.taskMsMax = math.max(s.taskMsMax, ms)
-    Option(e.taskMetrics).foreach { m =>
-      s.cpuNs += m.executorCpuTime
-      s.shuffleRead += m.shuffleReadMetrics.totalBytesRead
-      s.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-      s.spill += m.diskBytesSpilled
-    }
-  }
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = stageSpans.get(e.stageId).foreach(_.add(e))
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-    case x: SparkListenerSQLExecutionStart => sqlPlans(x.executionId) = x.sparkPlanInfo
+    // an execution may run no job of its own: a lazy checkpoint's plan
+    // runs inside the next action's job
+    case x: SparkListenerSQLExecutionStart =>
+      x.jobTags.iterator.filter(_.startsWith(Obs.TagPrefix))
+        .flatMap(_.stripPrefix(Obs.TagPrefix).toLongOption).flatMap(id => Option(open.get(id)))
+        .maxByOption(_.id)
+        .foreach { s => sqlSpans(x.executionId) = s; s.plans(x.executionId) = x.sparkPlanInfo }
     case x: SparkListenerSQLAdaptiveExecutionUpdate =>
-      sqlPlans(x.executionId) = x.sparkPlanInfo
       sqlSpans.get(x.executionId).foreach(_.plans(x.executionId) = x.sparkPlanInfo)
-    case x: SparkListenerSQLExecutionEnd =>
-      sqlPlans.remove(x.executionId); sqlSpans.remove(x.executionId)
+    case x: SparkListenerSQLExecutionEnd => sqlSpans.remove(x.executionId)
     case SpanEnd(s) =>
       open.remove(s.id)
       s.sink.foreach(p => Files.write(Paths.get(p), (s.record + "\n").getBytes(UTF_8),
@@ -126,10 +135,13 @@ private final class ObsListener extends SparkListener {
   * listener per SparkContext attributes each job's stages and tasks to its
   * span — a concurrent job of another thread never lands in it. With
   * `spark.graft.obs.path` set, every span is appended to that file as one
-  * JSON line ([[Span.record]]). */
+  * JSON line ([[Span.record]]), and its body also runs under the job tag
+  * `graft.span.<id>`, which attributes the SQL executions it starts. */
 object Obs {
   val SpanKey = "graft.span"
   val SpanIdKey = "graft.span.id"
+  /** A sink span's job tag, `graft.span.<id>`: SQL executions carry it. */
+  val TagPrefix = "graft.span."
   val SinkConf = "spark.graft.obs.path"
 
   /** The JSON writer of the obs records, snapshot manifests and CLI metrics. */
@@ -166,9 +178,13 @@ object Obs {
     val prev = (sc.getLocalProperty(SpanKey), sc.getLocalProperty(SpanIdKey))
     sc.setLocalProperty(SpanKey, name)
     sc.setLocalProperty(SpanIdKey, s.id.toString)
+    // only a sink record reads the plans: a tracked-only span keeps none
+    val tag = s.sink.map(_ => TagPrefix + s.id)
+    tag.foreach(sc.addJobTag)
     val t0 = System.nanoTime()
     try (body, s) finally {
       s.wallNs = System.nanoTime() - t0
+      tag.foreach(sc.removeJobTag)
       sc.setLocalProperty(SpanKey, prev._1)
       sc.setLocalProperty(SpanIdKey, prev._2)
       if (l.isDefined) bridge.postEvent(sc, SpanEnd(s))

@@ -66,29 +66,6 @@ object Dedup {
         col("keep_id"), (col("doc_id") =!= col("keep_id")).as("is_duplicate"))
   }
 
-  /** MinHash signatures: k permutations approximated by k seeded xxhash64
-    * functions; signature[i] = min over shingles of xxhash64(base_hash, i).
-    *
-    * Physical shape: explode shingles -> ONE base hash per shingle ->
-    * k codegen'd min-aggregates with map-side combine. (A nested
-    * higher-order-function formulation re-evaluates the shingle array k
-    * times per row — measured 14x slower — and HOFs are interpreted, not
-    * codegen'd; the explode+hash-aggregate form is also the shape that
-    * scales: shuffle carries k longs per doc, nothing else.) */
-  def minhashSignatures(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 64, shingleWidth: Int = 3): DataFrame = {
-    val base = spreadForScan(docs).select(col(idCol).as("doc_id"),
-        explode(shinglesCol(col(textCol), shingleWidth)).as("shingle"))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
-    val mins = (0 until k).map(i => min(xxhash64(col("h"), lit(i))).as(s"_m$i"))
-    val sig = array((0 until k).map(i => col(s"_m$i")): _*)
-    val agg = base.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), sig.as("signature"))
-    // keep docs with no shingles (empty text): null signature
-    docs.select(col(idCol).as("doc_id")).join(agg, Seq("doc_id"), "left")
-  }
-
   /** LSH band buckets: the signature split into `bands` bands of k/bands rows
     * each, one bucket row per (band, band-hash). Docs sharing any bucket are
     * candidate pairs — the standard banding scheme; bucket join replaces the
@@ -137,18 +114,19 @@ object Dedup {
     require(threshold > 0, "threshold must be > 0 (zero-overlap pairs drop out)")
     // ONE tokenize+shingle+hash pass over the corpus, persisted: the
     // signatures, the per-doc set sizes, AND the verify-step inverted index
-    // all derive from this (doc_id, hashed-shingle) relation. The previous
-    // shape recomputed the full text pipeline three times (once inside
-    // minhashSignatures, once for sizes, once for the index) — at web scale
+    // all derive from this (doc_id, hashed-shingle) relation — at web scale
     // tokenization IS the scan-dominant cost, so it runs exactly once.
     // shinglesCol is array_distinct'd, so rows are (doc, shingle)-unique.
     val ex = spreadForScan(docs).select(col(idCol).as("doc_id"),
         explode(shinglesCol(col(textCol), shingleWidth)).as("shingle"))
       .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
       .persist()
-    // signature agg (same formulation as minhashSignatures: k seeded
-    // re-hashes of the base hash, k codegen'd min-aggregates); persisted
-    // because the LSH bucket relation self-joins.
+    // MinHash signatures: k permutations approximated by k seeded
+    // re-hashes of the base hash, signature[i] = min over the doc's
+    // shingles, as k codegen'd min-aggregates with map-side combine (a
+    // higher-order-function form re-evaluates the shingle array k times per
+    // row — measured 14x slower). Docs with no shingles keep a null
+    // signature. Persisted because the LSH bucket relation self-joins.
     val mins = (0 until k).map(i => min(xxhash64(col("sh"), lit(i))).as(s"_m$i"))
     val sigArr = array((0 until k).map(i => col(s"_m$i")): _*)
     val sigs = docs.select(col(idCol).as("doc_id"))

@@ -38,45 +38,25 @@ class Round5Spec extends SparkSuite {
   }
 
   test("r04 #1: a convergence-mode ShuffleJoin iteration is 2 jobs, join-free delta") {
-    // Same run at two iteration counts; tol tiny so delta never stops the
-    // loop. The difference isolates the per-iteration job count — setup
-    // (normalize, dangling, init) and teardown jobs cancel out exactly.
-    // r06 tightened this from 2 jobs to ONE: the checkpoint is LAZY in
-    // fused-convergence mode, so the scan-agg delta both materializes the
-    // cache/checkpoint AND computes the delta in a single job (no
+    // Same run at two iteration counts; the difference isolates the
+    // per-iteration job count — setup (normalize, dangling, init) and
+    // teardown jobs cancel out exactly. r06 tightened this from 2 jobs to
+    // ONE: the checkpoint is lazy, so the scan-agg delta both materializes
+    // the cache/checkpoint AND computes the delta in a single job (no
     // old-vs-new shuffle join either — r04's dist() was a third job AND a
-    // join; the retired one-job accumulator fusion broke the state's hash
-    // partitioning, see Iterate's IterConfig scaladoc).
-    def jobs(iters: Int): Int = countJobs {
-      PageRank.run(spark, Synth.band(spark, 256, 4), 256,
-        cfg = IterConfig(tol = 1e-300, maxIter = iters, norm = "l1"),
-        strategy = GatherStrategy.ShuffleJoin)
+    // join). tol = 0 runs the same one path; 1e-300 never stops the loop.
+    for (tol <- Seq(1e-300, 0.0)) {
+      def jobs(iters: Int): Int = countJobs {
+        PageRank.run(spark, Synth.band(spark, 256, 4), 256,
+          cfg = IterConfig(tol = tol, maxIter = iters, norm = "l1"),
+          strategy = GatherStrategy.ShuffleJoin)
+      }
+      val j3 = jobs(3)
+      val j6 = jobs(6)
+      assert(j6 - j3 === 3,
+        s"each tol=$tol iteration must cost exactly ONE job " +
+          s"(the scan delta materializes cache + lazy checkpoint): got ${j6 - j3} jobs per 3 iters ($j3 -> $j6)")
     }
-    val j3 = jobs(3)
-    val j6 = jobs(6)
-    assert(j6 - j3 === 3,
-      s"each convergence-mode iteration must cost exactly ONE job " +
-        s"(the scan delta materializes cache + lazy checkpoint): got ${j6 - j3} jobs per 3 iters ($j3 -> $j6)")
-  }
-
-  test("r04 #1: CKPT=3 convergence iterations cost 3 jobs per 3 iterations") {
-    // Non-checkpoint iterations persist lazily; the scan-agg delta is the
-    // ONE action that both materializes the cache and computes the delta
-    // (InMemoryRelation builds full-row batches on first scan, whatever the
-    // projection). r06: the checkpoint-boundary iteration is lazy too
-    // (localCheckpoint(eager=false) — the delta scan performs the marked
-    // checkpoint inside its own job), so 3 iterations = 1 + 1 + 1 = 3 jobs.
-    def jobs(iters: Int): Int = countJobs {
-      PageRank.run(spark, Synth.band(spark, 256, 4), 256,
-        cfg = IterConfig(tol = 1e-300, maxIter = iters, norm = "l1",
-          checkpointEvery = 3),
-        strategy = GatherStrategy.ShuffleJoin)
-    }
-    val j3 = jobs(3)
-    val j6 = jobs(6)
-    assert(j6 - j3 === 3,
-      s"CKPT=3 must cost 3 jobs per 3 iterations (scan delta doubles as " +
-        s"the persist/checkpoint materializer): got ${j6 - j3} ($j3 -> $j6)")
   }
 
   test("r04 #1: fused-l1 delta stops the loop and computes the same states") {
