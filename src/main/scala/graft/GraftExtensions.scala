@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.bridge
 import graft.functions.BoundedTopK
 
 /** SparkSessionExtensions entry point: makes graft's custom Catalyst
@@ -45,23 +46,25 @@ object GraftExtensions {
       BoundedTopK(args(0), args(1), k)
     })
 
-  /** SQL `label_mode(label, is_self)` — the one-pass LP mode aggregate
-    * (struct(x = neighbor mode, x_old = own label); see
-    * [[graft.functions.LabelMode]]). */
+  /** SQL `label_mode(label, is_self)`: struct(x = neighbor mode, x_old =
+    * own label), over Spark's built-in `mode` and `max` (see
+    * [[graft.functions.LabelMode]]); the returned expression's aggregates
+    * are resolved by the analyzer like any other. */
   val labelModeFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("label_mode"),
-    new ExpressionInfo(classOf[graft.functions.LabelMode].getName, "label_mode"),
+    new ExpressionInfo(graft.functions.LabelMode.getClass.getName, "label_mode"),
     (args: Seq[Expression]) => {
       require(args.length == 2,
         s"label_mode(label, is_self) takes 2 arguments, got ${args.length}")
-      graft.functions.LabelMode(args(0), args(1))
+      bridge.eagerExpression(graft.functions.LabelMode.labelMode(
+        bridge.column(args(0)), bridge.column(args(1))))
     })
 
   /** Register graft's SQL functions on an existing session (new sessions
     * should prefer the spark.sql.extensions config). */
   def register(spark: SparkSession): Unit = {
     Seq(boundedTopKFunction, labelModeFunction).foreach { case (id, info, builder) =>
-      org.apache.spark.sql.graft.bridge.registerFunction(spark, id, info, builder)
+      bridge.registerFunction(spark, id, info, builder)
     }
   }
 }

@@ -131,9 +131,10 @@ object SparkEntry {
   /** Unrolled LP SQL over the hub-skewed generator (lp_skew_salted oracle):
     * identical round semantics to sqlLabelProp — symmetrized deduplicated
     * links, no self-loops, (count desc, label asc) argmax — over
-    * Synth.skew's edge set. The Spark side runs the SALTED two-phase
-    * aggregation; the oracle is single-phase, so a salting bug that
-    * miscounts any histogram diverges here. */
+    * Synth.skew's edge set. The Spark side counts per (vertex, label) and
+    * takes a max per vertex over the hub's many label groups; the oracle
+    * counts per vertex in one step, so a bug that miscounts any hub's
+    * labels diverges here. */
   private def sqlLabelPropSkew(n: Long, iters: Int): String = {
     val sb = new StringBuilder
     sb.append(s"""WITH ${sqlSkew(n)},
@@ -351,21 +352,12 @@ object SparkEntry {
       LabelPropagationArray.run(s, Synth.blocks(s, CC_N, CC_B), CC_N, maxIter = 5)
         .labels.orderBy("id")),
 
-    // --- LP on the hub-skewed generator with SALTED two-phase rounds
-    // (r06, VERDICT r05 #3): spark.graft.lp.salts=8 splits every vertex's
-    // neighbor-label histogram across (src, salt) partial buffers before
-    // the per-src merge — the hub-OOM guard — and must be label-identical
-    // to the unrolled single-phase SQL oracle. ---
-    "lp_skew_salted" -> ((s, _) => {
-      val prev = s.conf.getOption("spark.graft.lp.salts")
-      s.conf.set("spark.graft.lp.salts", "8")
-      try LabelPropagation.run(s, Synth.skew(s, SKEW_N), SKEW_N, maxIter = 3,
-        strategy = GatherStrategy.ShuffleJoin).labels.orderBy("id")
-      finally prev match {
-        case Some(v) => s.conf.set("spark.graft.lp.salts", v)
-        case None => s.conf.unset("spark.graft.lp.salts")
-      }
-    }),
+    // --- LP on the hub-skewed generator: the DataFrame rounds count per
+    // (vertex, label), so no group holds a hub's whole neighbor-label
+    // histogram; must be label-identical to the unrolled SQL oracle ---
+    "lp_skew_salted" -> ((s, _) =>
+      LabelPropagation.run(s, Synth.skew(s, SKEW_N), SKEW_N, maxIter = 3,
+        strategy = GatherStrategy.ShuffleJoin).labels.orderBy("id")),
 
     // --- north rule: triangle counting ---
     "triangles_band" -> ((s, _) => {

@@ -21,8 +21,11 @@ import graft.exec.{GatherStrategy, IterConfig, Iterate}
   * [[LabelPropagationArray]] — one zero-shuffle gather job per round over
   * flat CSR blocks, label-identical to the DataFrame rounds. `ShuffleJoin`,
   * explicit or from `Auto` above the bound, runs the DataFrame rounds below
-  * (one shuffle join + one typed `label_mode` aggregate per round), the
-  * 10^12-vertex design.
+  * (one shuffle join, then a count per (vertex, label) and a max per vertex
+  * on Spark's built-in aggregates), the 10^12-vertex design.
+  *
+  * Every id must lie in [0, nVertices): a null id or one outside fails
+  * with an IllegalArgumentException naming it, on both tiers.
   */
 object LabelPropagation {
 
@@ -59,16 +62,14 @@ object LabelPropagation {
     // an aggregate's output partitioning is its child's.
     val bothDirs = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
+      // keeps rows with a null id, so the links job below can reject them
+      .filter(coalesce(col("src") =!= col("dst"), lit(true)))
       .withColumn("self", lit(false))
     // _blk co-partitioning (r06, the PageRank Change-4 move — see
-    // Gather.gather blockKey scaladoc): pin the cache on a coarsened id
-    // block of the JOIN key so that on id-local graphs the groupBy(src)
-    // partial aggregation collapses before the exchange (hash(dst) alone
-    // scatters each vertex's 2-3 neighbor rows across unrelated
-    // partitions, so the "partial" histograms multiplied instead of
-    // merging). Join on (_blk, dst) is identical (blk is a function of
-    // dst on both sides).
+    // Gather.gather blockKey scaladoc): the cache is pinned on a coarsened
+    // id block of the JOIN key and only the state side shuffles to it.
+    // Join on (_blk, dst) is identical (blk is a function of dst on both
+    // sides).
     val blkSize = math.max(1L, nVertices / (nParts.toLong * 64))
     val links = bothDirs
       .union(selfLoops)
@@ -79,7 +80,22 @@ object LabelPropagation {
       // stays partition-local over the pinned exchange
       .dropDuplicates("src", "dst", "_blk")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nLinks = links.count() - nVertices // plumbing rows aren't edges
+    // ONE job counts the links and checks the ids: both directions are in,
+    // so every edge endpoint is some row's src, and the null count, min and
+    // max of src cover them all. Ids in [0, n) also make every label >= 0,
+    // which the round's -label encoding needs.
+    val stats = links.agg(count(lit(1)), count("src"), min("src"), max("src")).head()
+    val badId =
+      if (stats.getLong(1) < stats.getLong(0)) Some("null")
+      else Seq(stats.get(2), stats.get(3)).collectFirst {
+        case id: Long if id < 0 || id >= nVertices => id.toString
+      }
+    badId.foreach { id =>
+      links.unpersist()
+      throw new IllegalArgumentException(
+        s"an edge has a null id or one outside [0, $nVertices): $id")
+    }
+    val nLinks = stats.getLong(0) - nVertices // plumbing rows aren't edges
 
     // labels as LONG end to end (no double-typed join keys — the CC r03
     // finding applies here identically)
@@ -87,33 +103,6 @@ object LabelPropagation {
     val init = vertices.select(col("id"), col("id").as("x"))
     val cfg = IterConfig(tol = 0.5, maxIter = maxIter, norm = "changed")
 
-    // LabelMode is a TypedImperativeAggregate -> ObjectHashAggregateExec,
-    // which falls back to SORT-based aggregation once a task's hash map
-    // holds `fallbackThreshold` groups (default 128 — sized for few-group
-    // aggregates like bounded_top_k, not a per-vertex groupBy). Raise it so
-    // the per-task group count (~V/P on the partial side) stays on the hash
-    // path; clamp at 2^17 groups x ~100s of B/histogram ≈ low hundreds of
-    // MB — beyond that (V/P >> 10^5) letting Spark spill to the sort path
-    // IS the safe behavior at the 10^12 design point, not a bug.
-    val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val fbPrev = spark.conf.get(fbKey, "128")
-    spark.conf.set(fbKey,
-      math.min(1L << 17, math.max(128L, 4L * nVertices / nParts)).toString)
-    // Hub-safe salted rounds (r06, VERDICT r05 "What's wrong #2"): the
-    // one-phase LabelMode histogram is O(distinct neighbor labels) in a
-    // SINGLE group's buffer — ~16 B x in-degree for a hub in early rounds
-    // (1.6 GB at deg 10^8), an executor OOM the sort-fallback cannot help
-    // (it bounds group COUNT, not one group's size). With
-    // spark.graft.lp.salts = k > 1, phase 1 aggregates partial histograms
-    // on (src, salt = pmod(hash(dst), k)) — any hub's buffer is split into
-    // k bounded pieces — and phase 2 merges the <= k serialized partials
-    // per src and takes the identical (count desc, label asc) argmax.
-    // Deterministic salt from the NEIGHBOR id (never rand(): guide §2.5's
-    // retry-duplication hazard); the plumbing self row rides whatever salt
-    // its dst hashes to — the own-label flag survives both merges.
-    // Default 1 (single-phase): the second exchange is pure overhead when
-    // no vertex's neighbor-label diversity threatens executor memory.
-    val salts = spark.conf.get("spark.graft.lp.salts", "1").toInt
     // subset-key co-partitioning for the per-round join (the PageRank
     // Change-4 conf scope: _blk ⊂ {_blk, dst} is deliberate)
     val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
@@ -121,33 +110,29 @@ object LabelPropagation {
     spark.conf.set(coPartKey, "false")
     val loop =
       try Iterate.loop(init, cfg, nLinks, "sync-lp", algo = "lp") { (state, _) =>
-        // ONE join + ONE aggregate per round (VERDICT r04 #5 rework): the
-        // typed LabelMode aggregate partial-aggregates per-vertex label
-        // histograms map-side, so the single shuffle carries serialized
-        // (label, count) maps — not the exploded (src, label, cnt) relation
-        // the old groupBy(src, label) + groupBy(src) double shuffle moved.
         // SHJ hint: links are cached pinned on _blk; hash-build the O(V)
         // state side instead of sort-merging (re-sorting) the O(E) links.
         val joined = links
           .join(state.withColumnRenamed("id", "dst")
             .withColumn("_blk", expr(s"dst div $blkSize"))
             .hint("shuffle_hash"), Seq("_blk", "dst"))
-        val agged =
-          if (salts <= 1)
-            joined.groupBy("src")
-              .agg(graft.functions.LabelMode.labelMode(col("x"), col("self")).as("m"))
-          else
-            joined
-              .groupBy(col("src"), pmod(hash(col("dst")), lit(salts)).as("_salt"))
-              .agg(graft.functions.LabelMode.labelHist(col("x"), col("self")).as("h"))
-              .groupBy("src")
-              .agg(graft.functions.LabelMode.labelModeMerge(col("h")).as("m"))
-        agged.select(col("src").as("id"), col("m.x").as("x"),
-          col("m.x_old").as("x_old"))
-      } finally {
-        spark.conf.set(fbKey, fbPrev)
-        spark.conf.set(coPartKey, coPartPrev)
-      }
+        // The argmax-count semiring on built-in aggregates, both partition-
+        // local over ONE exchange on src: a count of neighbor rows per
+        // (vertex, label), with the own label from the self row; then per
+        // vertex the max of struct(count, -label), i.e. count desc, label
+        // asc. Every buffer is fixed-width and one per (vertex, label), so
+        // no group holds a hub's whole histogram and both steps can spill.
+        joined.repartition(nParts, col("src"))
+          .groupBy("src", "x")
+          .agg(count(when(!col("self"), 1)).as("c"),
+            max(when(col("self"), col("x"))).as("own"))
+          .groupBy("src")
+          .agg(max(struct(col("c"), (-col("x")).as("negX"))).as("best"),
+            max("own").as("x_old"))
+          .select(col("src").as("id"),
+            when(col("best.c") > 0, -col("best.negX")).otherwise(col("x_old")).as("x"),
+            col("x_old"))
+      } finally spark.conf.set(coPartKey, coPartPrev)
     links.unpersist()
     Result(
       loop.state.select(col("id"), col("x").as("label")),

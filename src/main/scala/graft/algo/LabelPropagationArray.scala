@@ -15,7 +15,8 @@ import graft.exec.BlockIterate.Kernel
   *
   * WHY a second LP path (the VERDICT r04 #2 kernel tier): LP was the
   * slowest per-iteration DataFrame lane (0.7-1.1 s/iter at 1M vertices —
-  * per-round join + histogram-aggregate shuffle). In the broadcast regime
+  * a shuffle join and an aggregate shuffle every round, see
+  * [[LabelPropagation]]). In the broadcast regime
   * (V <= ~10^8, labels fit one executor at 8 B/vertex) a whole LP round is
   * ONE zero-shuffle gather job over the cached CSR blocks: executors
   * compute per-row neighbor-label modes against the broadcast array and

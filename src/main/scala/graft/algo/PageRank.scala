@@ -142,8 +142,8 @@ object PageRank {
     // (HashPartitioning(_blk) under clustering {_blk, src}); Spark 3.3+'s
     // requireAllClusterKeysForCoPartition=true would re-shuffle the cached
     // norm every iteration to (_blk, src) — scope-disable it for the loop
-    // (set/restore, the LP fallbackThreshold pattern). Skew guard stays:
-    // _blk has ~64x more distinct values than partitions.
+    // (set/restore). Skew guard stays: _blk has ~64x more distinct values
+    // than partitions.
     val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
     val coPartPrev = spark.conf.get(coPartKey, "true")
     spark.conf.set(coPartKey, "false")

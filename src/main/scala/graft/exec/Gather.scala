@@ -38,13 +38,11 @@ object GatherStrategy {
     * tier above it. Connected components does not take a strategy yet: it
     * always runs its DataFrame two-phase tier.
     *
-    * The 4M-vertex default pins the MEASURED r02 trade-off point on this
-    * class of box: the DataFrame broadcast plan rebuilt a driver-side
-    * hashed relation every iteration — a serial term no executor count
-    * dilutes (N→4N efficiency 0.28, but 4.45 s/iter absolute at 2^21
-    * vertices) — while ShuffleJoin scales (0.84 efficiency) at 16.9 s/iter.
-    * The array tier's per-iteration serial term is two O(V) memcpys, not a
-    * hashed-relation build, so the bound is conservative for it. */
+    * The 4M-vertex default is kept as it was. It was measured against the
+    * DataFrame broadcast plan, which is gone; it has not been measured for
+    * the array tier, whose limits are memory (the state on the driver and
+    * on each executor, the CSR cache), and is to be replaced by a bound
+    * sized from memory (ROADMAP direction 4). */
   final case class Auto(maxBroadcastVertices: Long = 4L * 1000 * 1000)
       extends GatherStrategy
 

@@ -12,11 +12,16 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 object bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** `c` converted to a Catalyst tree now. `expression` may wrap it for the
+    * Dataset analyzer to convert later, which a SQL function builder's
+    * result never goes through. */
+  def eagerExpression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
   /** Public alias for the private[sql] supertype of DataType used by
     * `ExpectsInputTypes.inputTypes` — needed so custom expressions outside

@@ -18,7 +18,7 @@ import graft.sources.Synth
   *     weights make their source dangling instead of leaking its mass, in
   *     the ShuffleJoin tier too;
   *   - a null id, or one outside [0, n), fails the build on row-backed and
-  *     columnar inputs;
+  *     columnar inputs, as it fails the DataFrame LP rounds;
   *   - the columnar build source gives bit-identical results to the row
   *     source on the same table;
   *   - every iteration is one job over the cached blocks;
@@ -124,15 +124,21 @@ class BlockIterateSpec extends SparkSuite {
           "PageRankArray" -> (() => PageRankArray.run(spark, edges, n)),
           "PageRankArray f32" -> (() => PageRankArray.run(spark, edges, n, floatPrecision = true)),
           "ConnectedComponentsArray" -> (() => ConnectedComponentsArray.run(spark, edges, n)),
-          "LabelPropagationArray" -> (() => LabelPropagationArray.run(spark, edges, n)))
+          "LabelPropagationArray" -> (() => LabelPropagationArray.run(spark, edges, n)),
+          "LabelPropagation ShuffleJoin" -> (() => LabelPropagation.run(spark, edges, n,
+            strategy = GatherStrategy.ShuffleJoin)))
         for ((tier, build) <- builds) {
           val e = intercept[Exception](build())
           val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
             .collectFirst { case x: IllegalArgumentException => x }
           val where = s"$what, $tier, columnar = $columnar"
           assert(iae.isDefined, s"$where: $e")
-          assert(iae.get.getMessage.startsWith("edge (") && iae.get.getMessage.contains(shown),
-            s"$where: ${iae.get.getMessage}")
+          val msg = iae.get.getMessage
+          // the array builds name the whole edge; the DataFrame rounds check
+          // the symmetrized links, so they name the id and the range
+          if (tier == "LabelPropagation ShuffleJoin")
+            assert(msg.endsWith(s"[0, $n): ${shown.split(" = ")(1)}"), s"$where: $msg")
+          else assert(msg.startsWith("edge (") && msg.contains(shown), s"$where: $msg")
         }
       }
       if (columnar) BlockIterateSpec.viaParquet(spark, rows)(check) else check(rows)

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 import graft.algo.LabelPropagation
 import graft.exec.GatherStrategy
@@ -10,7 +13,8 @@ import graft.sources.Synth
   *   - Auto at V <= maxBroadcastVertices (and explicit BroadcastState) runs
   *     the broadcast-array tier, label-identical to the DataFrame rounds;
   *   - ShuffleJoin, or Auto above the bound, runs the DataFrame rounds;
-  *   - the array path never writes the shared session conf.
+  *   - the array path never writes the shared session conf, and the
+  *     DataFrame rounds run on built-in aggregates only.
   */
 class LabelPropagationRoutingSpec extends SparkSuite {
   import spark.implicits._
@@ -83,9 +87,34 @@ class LabelPropagationRoutingSpec extends SparkSuite {
     val edges = communities(n.toInt, 3)
     val before = read()
     assert(seenDuring(LabelPropagation.run(spark, edges, n, maxIter = 3)) == Set(before))
-    // the observer works: the DataFrame rounds do scope both keys
+    // The DataFrame rounds leave the object-hash fallback threshold alone:
+    // they plan no ObjectHashAggregate. They still scope the co-partition
+    // key, which also shows the observer works; a conf-free co-partitioned
+    // join is what remains of ROADMAP direction 5.
     val df = seenDuring(LabelPropagation.run(spark, edges, n, maxIter = 3,
       strategy = GatherStrategy.ShuffleJoin))
+    assert(df.map(_.head) == Set(before.head), df)
     assert(df.size > 1 && df.contains(before), df)
+  }
+
+  test("the ShuffleJoin rounds plan no ObjectHashAggregate") {
+    val nodes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def collect(p: SparkPlanInfo): Unit = { nodes.add(p.nodeName); p.children.foreach(collect) }
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => collect(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => collect(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    val n = 2048L
+    spark.sparkContext.addSparkListener(l)
+    try {
+      LabelPropagation.run(spark, communities(n.toInt, 5), n, maxIter = 3,
+        strategy = GatherStrategy.ShuffleJoin).labels.count()
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    val seen = scala.jdk.CollectionConverters.SetHasAsScala(nodes).asScala.toSet
+    assert(seen("HashAggregate") && !seen("ObjectHashAggregate"), seen)
   }
 }

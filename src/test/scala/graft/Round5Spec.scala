@@ -143,9 +143,9 @@ class Round5Spec extends SparkSuite {
     assert(got(2L) === ((1L, 9L)))
   }
 
-  test("LP per-round plan: ONE aggregate, no groupBy(src,label) double shuffle") {
-    // one round, fixed mode; the step plan must contain exactly one
-    // Aggregate above the links-state join (the LabelMode one-pass form)
+  test("LP per-round plan: one job per round, its aggregates over one src exchange") {
+    // one round, fixed mode; both aggregates above the links-state join are
+    // partition-local over the one exchange on src, so a round is one job
     val r = LabelPropagation.run(spark, Synth.blocks(spark, 120, 30), 120,
       maxIter = 1, strategy = GatherStrategy.ShuffleJoin)
     assert(r.labels.count() === 120)

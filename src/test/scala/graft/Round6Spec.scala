@@ -1,15 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.algo.{ConnectedComponents, LabelPropagation, PageRank}
+import graft.algo.{ConnectedComponents, LabelPropagation, LabelPropagationArray, PageRank}
 import graft.exec.{GatherStrategy, IterConfig}
 import graft.sources.Synth
 
 /** Round-6 (optimization round) regressions:
-  *   - salted hub-safe LP (VERDICT r05 #3): two-phase (src, salt) partial
-  *     histograms must be label-identical to the single-phase aggregate,
-  *     and the salt must actually bound any single group's buffer;
+  *   - hub-safe LP (VERDICT r05 #3): the DataFrame rounds on the hub graph
+  *     must be label-identical to the array tier;
   *   - ranged CSR builds (RangedCsr): full-range blocks must reproduce the
   *     r05 semantics on graphs with isolated/duplicate/dangling structure;
   *   - CC local phase-2 fast path: identical labels with the threshold on
@@ -20,41 +17,17 @@ import graft.sources.Synth
 class Round6Spec extends SparkSuite {
   import spark.implicits._
 
-  test("salted LP rounds are label-identical to single-phase LP on the hub graph") {
+  test("ShuffleJoin LP on the hub graph is label-identical to the array tier") {
+    // vertex 0's degree is ~n: the DataFrame rounds count per (vertex,
+    // label), so its neighbor labels spread over many groups
     val n = 600L
     val edges = Synth.skew(spark, n)
-    val plain = LabelPropagation.run(spark, edges, n, maxIter = 3,
+    val df = LabelPropagation.run(spark, edges, n, maxIter = 3,
       strategy = GatherStrategy.ShuffleJoin)
       .labels.orderBy("id").collect().toSeq
-    spark.conf.set("spark.graft.lp.salts", "8")
-    val salted =
-      try LabelPropagation.run(spark, edges, n, maxIter = 3,
-          strategy = GatherStrategy.ShuffleJoin)
-        .labels.orderBy("id").collect().toSeq
-      finally spark.conf.unset("spark.graft.lp.salts")
-    assert(salted == plain)
-  }
-
-  test("salting bounds the max single-group histogram buffer") {
-    // hub graph: vertex 0's in-degree is ~n. The phase-1 aggregation key is
-    // (src, pmod(hash(dst), salts)) — measure the worst group directly on
-    // the same link set the round aggregates.
-    val n = 600L
-    val salts = 8
-    val links = graft.graph.AdjacencyBuilder.symmetrize(Synth.skew(spark, n))
-    val unsaltedMax = links.groupBy("src")
-      .agg(countDistinct("dst").as("d"))
-      .agg(max("d")).as[Long].head()
-    val saltedMax = links
-      .groupBy(col("src"), pmod(hash(col("dst")), lit(salts)).as("_salt"))
-      .agg(countDistinct("dst").as("d"))
-      .agg(max("d")).as[Long].head()
-    // buffer bytes ~ 16 B/label + 13 B header (LabelMode.serializeHist)
-    assert(unsaltedMax > n / 2, s"fixture lost its hub (max deg $unsaltedMax)")
-    assert(saltedMax * 16 + 13 < (unsaltedMax * 16 + 13) / 2,
-      s"salting did not bound the hub buffer: $unsaltedMax -> $saltedMax")
-    assert(saltedMax <= unsaltedMax / salts * 2 + 8,
-      s"salt spread worse than 2x ideal: $unsaltedMax/$salts vs $saltedMax")
+    val ar = LabelPropagationArray.run(spark, edges, n, maxIter = 3)
+      .labels.orderBy("id").collect().toSeq
+    assert(df == ar)
   }
 
   test("ranged CSR build handles isolated, dangling and duplicate-edge structure") {
