@@ -11,7 +11,9 @@ import graft.obs.Obs
 /** Connected components, two-phase (undirected semantics — the reference's
   * symmetric .mtx expansion, `/root/reference/lib/MMIO/mmio_cpp.h:40-48`, is
   * the same move). Component label = smallest vertex id in the component;
-  * exact-match requirement per the north rule.
+  * exact-match requirement per the north rule. Every id must lie in
+  * [0, nVertices): the phase-1 tasks fail on a null id or one outside with
+  * an IllegalArgumentException naming it.
   *
   * Phase 1 — partition-local contraction (the 100 TB move): edges are
   * range-partitioned by src (locality-preserving: web graphs keyed by
@@ -64,11 +66,14 @@ object ConnectedComponents {
     val ((mapping, g), p1) = Obs.span(spark, "cc:phase1", track = true) {
       val mapping = edges.select(col("src"), col("dst"))
         .repartitionByRange(nParts, col("src"))
-        .as[(Long, Long)]
+        .as[(java.lang.Long, java.lang.Long)]
         .mapPartitions { it =>
           var nE = 0L
+          def id(v: java.lang.Long): Long =
+            if (v == null || v < 0 || v >= nVertices) throw AdjacencyBuilder.badId(nVertices, v)
+            else v
           // 64k initial slots; the map grows to the partition's vertex count
-          val out = unionFind(it.map { e => nE += 1; e }, 1 << 16)
+          val out = unionFind(it.map { case (s, d) => nE += 1; (id(s), id(d)) }, 1 << 16)
           edgeCount.add(nE)
           out.iterator
         }.toDF("id", "root")

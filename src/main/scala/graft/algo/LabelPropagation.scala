@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.exec.{GatherStrategy, IterConfig, Iterate}
+import graft.graph.AdjacencyBuilder
 
 /** Synchronous label propagation (community detection) over the symmetrized
   * link set. Every vertex starts with its own id as label; each iteration it
@@ -85,16 +86,8 @@ object LabelPropagation {
     // max of src cover them all. Ids in [0, n) also make every label >= 0,
     // which the round's -label encoding needs.
     val stats = links.agg(count(lit(1)), count("src"), min("src"), max("src")).head()
-    val badId =
-      if (stats.getLong(1) < stats.getLong(0)) Some("null")
-      else Seq(stats.get(2), stats.get(3)).collectFirst {
-        case id: Long if id < 0 || id >= nVertices => id.toString
-      }
-    badId.foreach { id =>
-      links.unpersist()
-      throw new IllegalArgumentException(
-        s"an edge has a null id or one outside [0, $nVertices): $id")
-    }
+    AdjacencyBuilder.requireIds(nVertices, stats.getLong(1) < stats.getLong(0),
+      stats.get(2), stats.get(3))(links.unpersist())
     val nLinks = stats.getLong(0) - nVertices // plumbing rows aren't edges
 
     // labels as LONG end to end (no double-typed join keys — the CC r03

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.exec.{Gather, GatherStrategy, IterConfig, Iterate, LoopResult}
+import graft.graph.AdjacencyBuilder
 
 /** PageRank as iterated gather-scatter, in two tiers picked by `strategy`
   * exactly as [[LabelPropagation.run]] picks its tiers:
@@ -37,6 +38,9 @@ import graft.exec.{Gather, GatherStrategy, IterConfig, Iterate, LoopResult}
   * and its iteration number) continues a run on either tier; both write the
   * same [[graft.exec.Iterate.snapshot]] format, so a snapshot of one tier
   * resumes on the other.
+  *
+  * Every id must lie in [0, nVertices): a null id or one outside fails
+  * with an IllegalArgumentException naming it, on both tiers.
   *
   * Scores sum to 1.0 (probability form):
   *   x'[v] = (1-d)/n + d * (Σ_{u->v} p(u,v)·x[u] + danglingMass/n)
@@ -81,13 +85,24 @@ object PageRank {
     // does a non-finite wtot (a NaN or infinite weight): Spark SQL orders
     // NaN above every number, +inf included, so `< +inf` drops it — the
     // array tier's rule (live iff 0 < W < +inf, W not NaN).
-    // outW persisted at its O(V) aggregate output: consumed by BOTH the
-    // normalize join and the dangling anti-join below — without it each
-    // consumer re-runs the O(E) aggregation scan (r06; guide §5 caching).
-    val outW = edges.groupBy("src").agg(
-      (if (weighted) sum("w") else count(lit(1)).cast("double")).as("wtot"))
-      .filter(col("wtot") > 0 && col("wtot") < Double.PositiveInfinity)
+    // The per-src aggregate is persisted at its O(V) output: consumed by
+    // the id check, the normalize join and the dangling anti-join below —
+    // without it each consumer re-runs the O(E) aggregation scan (r06;
+    // guide §5 caching). It also keeps each src's null-dst flag and dst
+    // range, so ONE job over it (the one that materializes it) checks every
+    // id and counts the live sources; every other vertex dangles.
+    val live = col("wtot") > 0 && col("wtot") < Double.PositiveInfinity
+    val outAgg = edges.groupBy("src").agg(
+      (if (weighted) sum("w") else count(lit(1)).cast("double")).as("wtot"),
+      max(col("dst").isNull).as("nullDst"), min("dst").as("lo"), max("dst").as("hi"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val stats = outAgg.agg(count(lit(1)), count("src"), max("nullDst"), min("src"),
+      max("src"), min("lo"), max("hi"), count(when(live, 1))).head()
+    AdjacencyBuilder.requireIds(nVertices,
+      stats.getLong(1) < stats.getLong(0) || stats.get(2) == true,
+      stats.get(3), stats.get(4), stats.get(5), stats.get(6))(outAgg.unpersist())
+    val nDangling = nVertices - stats.getLong(7)
+    val outW = outAgg.filter(live).select("src", "wtot")
     // normalize-join shape (r06, guide §3.1): broadcast the O(V) weight
     // side below 8M vertices so the O(E) edge stream never shuffles for
     // the join; above that, shuffle_hash — default sort-merge would SORT
@@ -117,7 +132,7 @@ object PageRank {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = norm.count() - nVertices // real edges only, for throughput
 
-    // Dangling vertex set (no out-edges), computed once. Their mass is
+    // Dangling vertex set (no out-edges), cached on first use. Their mass is
     // re-gathered per iteration as a broadcast 1-row aggregate INSIDE the
     // iteration plan — one Spark job per iteration, no driver-side scalar
     // round-trip (the reference's trailing-isolated-vertex hazard,
@@ -128,7 +143,6 @@ object PageRank {
     val dangling = spark.range(nVertices).toDF("id")
       .join(outW.select(col("src").as("id")), Seq("id"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nDangling = dangling.count()
 
     // The vertex universe is minted FRESH on every use: localCheckpoint
     // preserves attribute ids, so reusing one Range plan across state
@@ -177,7 +191,7 @@ object PageRank {
         }
     } finally spark.conf.set(coPartKey, coPartPrev)
     dangling.unpersist()
-    outW.unpersist()
+    outAgg.unpersist()
     norm.unpersist()
     Result(loop.state, loop.metrics, GatherStrategy.ShuffleJoin)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.exec.{StateCache, StateCodec}
+import graft.graph.{CsrBlock, RangedCsr}
 
 /** The reference's NON-CSR matrix layouts, re-expressed on the same
   * per-partition flat-block tier as [[PageRankArray]]:
@@ -37,7 +38,8 @@ import graft.exec.{StateCache, StateCodec}
   * nRows_p * width * 12 B (ELLPACK) or nRows_p * V * 8 B (dense) — callers
   * must size partitions so that fits; `build` fails fast on layouts whose
   * GLOBAL footprint (V * width * 12 B resp. V^2 * 8 B) exceeds a sane
-  * single-box bound rather than letting executors OOM mid-build. The
+  * single-box bound (ELLPACK once the CSR build has found the width, before
+  * any padded array is allocated) rather than letting executors OOM. The
   * 10^12-vertex path stays CSR/ShuffleJoin; these layouts are measurement
   * tiers, exactly like the reference's.
   */
@@ -56,7 +58,6 @@ object SpmvLayouts {
   private[algo] final case class Block(
       rows: Array[Long],      // src vertex ids, dense row index order
       width: Int,             // ELLPACK width (global max degree) or V for dense
-      nnz: Long,              // real edges drained into this block
       colInd: Array[Int],
       colVal: Array[Double],
       dense: Array[Double])
@@ -73,12 +74,14 @@ object SpmvLayouts {
     def unpersist(): Unit = org.apache.spark.sql.graft.bridge.releaseRDD(blocks)
   }
 
-  /** Build the layout from an (src, dst, w) edge DataFrame. One aggregate
-    * job for the global width (the reference computes max row length the
-    * same way, `graphCOO.hpp:155-160`), one O(E) shuffle to co-locate rows
-    * (hash on src — each row lives in exactly one partition), then a
-    * per-partition two-pass scatter into the flat arrays (no sort — the
-    * same histogram grouping as the CSR build, `PageRankArray.scala`). */
+  /** Build the layout from an (src, dst, w) edge DataFrame in one scan of
+    * the edge table. [[RangedCsr.build]] shuffles the edges into CSR blocks
+    * keyed by src (each row lives in exactly one block). The job that caches
+    * those blocks also returns each block's edge count, longest row and
+    * rows with edges; the global width is the longest row, as the reference
+    * finds it while it builds its CSR (`graphCOO.hpp:155-160`). A second job
+    * pads each CSR block into the layout ([[pad]]) and caches it; the CSR
+    * blocks are then released. */
   def build(
       spark: SparkSession,
       edges: DataFrame,
@@ -86,107 +89,78 @@ object SpmvLayouts {
       layout: Layout): Built = {
     require(nVertices <= Int.MaxValue, "flat-block layouts need V <= 2^31")
     val n = nVertices.toInt
-    import spark.implicits._
-
-    val width = layout match {
-      case Dense => n
-      case _ =>
-        edges.groupBy("src").agg(count(lit(1)).as("d"))
-          .agg(max("d")).as[Long].head().toInt
-    }
     // fail fast on insane global footprints (see scale contract above)
-    layout match {
-      case Dense =>
-        require(nVertices * nVertices * 8L <= (4L << 30),
-          s"dense layout is V^2*8 B = ${nVertices * nVertices * 8L} B; " +
-            "refusing above 4 GiB — this tier exists to MEASURE the C5 " +
-            "anti-pattern, not to run it at scale")
-      case _ =>
+    if (layout == Dense)
+      require(nVertices * nVertices * 8L <= (4L << 30),
+        s"dense layout is V^2*8 B = ${nVertices * nVertices * 8L} B; " +
+          "refusing above 4 GiB — this tier exists to MEASURE the C5 " +
+          "anti-pattern, not to run it at scale")
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val csr = RangedCsr.build(edges.select(col("src").cast("long"),
+      col("dst").cast("long"), col("w").cast("double")), n, nParts)
+      .persist(StorageLevel.MEMORY_ONLY)
+    try {
+      // per CSR block: (edges, longest row, rows with edges)
+      val stats = csr.map { b =>
+        val degs = Array.tabulate(b.rows)(r => b.rowPtr(r + 1) - b.rowPtr(r))
+        (b.colInd.length.toLong, degs.foldLeft(0)(math.max), degs.count(_ > 0))
+      }.collect()
+      val width = if (layout == Dense) n else stats.map(_._2).foldLeft(0)(math.max)
+      if (layout != Dense)
         require(nVertices * width * 12L <= (16L << 30),
           s"ELLPACK at global width $width pads to V*width*12 B = " +
             s"${nVertices * width * 12L} B; refusing above 16 GiB (the " +
             "reference's measured 13.4x crankseg_2 blow-up, " +
             "matricesWithELPACK.csv:4 — use the CSR tier)")
-    }
+      val blocks = csr.map(pad(_, layout, width)).persist(StorageLevel.MEMORY_ONLY)
+      blocks.localCheckpoint() // truncate lineage (see PageRankArray)
+      blocks.count()
+      val nnz = stats.map(_._1).sum
+      val slots = stats.map(_._3.toLong).sum * width
+      Built(blocks, layout, nVertices, width, nnz,
+        if (nnz > 0) slots.toDouble / nnz else 1.0)
+    } finally csr.unpersist()
+  }
 
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val transposed = layout == EllpackT
-    val isDense = layout == Dense
-    val w = width
-    // r06 fast path (shared with the CSR builds — graft.graph.RangedCsr):
-    // the O(E) exchange ships packed 16 B/edge column blobs through a
-    // RANGE partitioner on src instead of 32 B/edge UnsafeRows through a
-    // hash exchange, and the downstream scatter indexes rows by
-    // (src - base) + a dense present-row compaction — no per-edge hash map
-    // (the old LongLongMap probe per edge). Present rows only, as before:
-    // pad_ratio semantics (slots / nnz over rows that EXIST) unchanged.
-    import graft.graph.RangedCsr
-    val blocks = RangedCsr.mapRanges(RangedCsr.blobRdd(
-      edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("double")),
-      n, nParts, RangedCsr.ValD), n, nParts) { (base, len, blobList, m) =>
-      if (m == 0) Iterator.empty
-      else {
-        val tmpK = new Array[Int](1 << 17)
-        val tmpP = new Array[Int](1 << 17)
-        val tmpD = new Array[Double](1 << 17)
-        val counts = RangedCsr.rowCounts(blobList, base, len)
-        // present-row compaction: dense row index per src WITH edges
-        val denseIdx = new Array[Int](len)
-        var nRows = 0
-        var r = 0
-        while (r < len) {
-          if (counts(r) > 0) { denseIdx(r) = nRows; nRows += 1 }
-          else denseIdx(r) = -1
-          r += 1
-        }
-        val rows = new Array[Long](nRows)
-        r = 0
-        while (r < len) {
-          if (denseIdx(r) >= 0) rows(denseIdx(r)) = base + r
-          r += 1
-        }
-        // pass 2: scatter into the padded/dense arrays. ELLPACK padding =
-        // (col 0, w 0.0): 0.0 * x(0) contributes nothing, so the
-        // constant-trip kernel needs no bounds logic (reference pads the
-        // same way, graphCOO.hpp:171-178)
-        val slots = nRows * w
-        val dense = if (isDense) new Array[Double](slots) else Array.emptyDoubleArray
-        val colInd = if (isDense) Array.emptyIntArray else new Array[Int](slots)
-        val colVal = if (isDense) Array.emptyDoubleArray else new Array[Double](slots)
-        val cursor = new Array[Int](nRows)
-        var bi = 0
-        while (bi < blobList.length) {
-          val b = blobList(bi)
-          val bm = RangedCsr.blobCount(b)
-          RangedCsr.blobKeys(b, bm, tmpK)
-          RangedCsr.blobPayloads(b, bm, tmpP)
-          RangedCsr.blobValsD(b, bm, tmpD)
-          var i = 0
-          if (isDense) while (i < bm) {
-            // duplicate edges ACCUMULATE — reference += semantics
-            dense(denseIdx(tmpK(i) - base) * w + tmpP(i)) += tmpD(i)
-            i += 1
-          }
-          else while (i < bm) {
-            val ri = denseIdx(tmpK(i) - base)
-            val slot = cursor(ri); cursor(ri) = slot + 1
-            val pos = if (transposed) slot * nRows + ri else ri * w + slot
-            colInd(pos) = tmpP(i)
-            colVal(pos) = tmpD(i)
-            i += 1
-          }
-          bi += 1
-        }
-        Iterator.single(Block(rows, w, m.toLong, colInd, colVal, dense))
+  /** One CSR block in `layout` at `width`: its rows with edges, in order
+    * (pad_ratio counts the rows that exist), each row's edges in CSR order.
+    * ELLPACK pads with (col 0, w 0.0): 0.0 * x(0) contributes nothing, so
+    * the constant-trip kernel needs no bounds logic (the reference pads the
+    * same way, graphCOO.hpp:171-178). Dense accumulates duplicate edges
+    * (reference += semantics). */
+  private def pad(c: CsrBlock, layout: Layout, width: Int): Block = {
+    val ptr = c.rowPtr
+    val present = Array.range(0, c.rows).filter(r => ptr(r + 1) > ptr(r))
+    val nRows = present.length
+    val rows = present.map(r => (c.base + r).toLong)
+    val slots = nRows * width
+    if (layout == Dense) {
+      val dense = new Array[Double](slots)
+      var i = 0
+      while (i < nRows) {
+        var e = ptr(present(i))
+        while (e < ptr(present(i) + 1)) { dense(i * width + c.colInd(e)) += c.colVal(e); e += 1 }
+        i += 1
       }
-    }.persist(StorageLevel.MEMORY_ONLY)
-    blocks.localCheckpoint() // truncate lineage (see PageRankArray)
-    val (nnz, slots) = blocks
-      .map(b => (b.nnz, b.rows.length.toLong * b.width))
-      .fold((0L, 0L)) { case ((a1, a2), (b1, b2)) => (a1 + b1, a2 + b2) }
-    Built(blocks, layout, nVertices, width, nnz,
-      if (nnz > 0) slots.toDouble / nnz else 1.0)
+      Block(rows, width, Array.emptyIntArray, Array.emptyDoubleArray, dense)
+    } else {
+      val transposed = layout == EllpackT
+      val colInd = new Array[Int](slots)
+      val colVal = new Array[Double](slots)
+      var i = 0
+      while (i < nRows) {
+        val beg = ptr(present(i))
+        var j = 0
+        while (j < ptr(present(i) + 1) - beg) {
+          val pos = if (transposed) j * nRows + i else i * width + j
+          colInd(pos) = c.colInd(beg + j)
+          colVal(pos) = c.colVal(beg + j)
+          j += 1
+        }
+        i += 1
+      }
+      Block(rows, width, colInd, colVal, Array.emptyDoubleArray)
+    }
   }
 
   /** One SpMV pass: flow[src] = Σ_{(src -> dst, w)} w * x[dst] — identical

@@ -36,6 +36,20 @@ object AdjacencyBuilder {
       .filter(col("src") =!= col("dst"))
       .distinct()
 
+  /** The error for an edge with a null id or one outside [0, n): `id` is
+    * "null" or the id. */
+  def badId(n: Long, id: Any): IllegalArgumentException =
+    new IllegalArgumentException(s"an edge has a null id or one outside [0, $n): $id")
+
+  /** Checks an edge table's ids from one aggregate of it: `hasNull` when
+    * some id is null, `bounds` the min and max of each id column (null over
+    * no rows). On a bad id, `release` runs and [[badId]] is thrown. */
+  def requireIds(n: Long, hasNull: Boolean, bounds: Any*)(release: => Unit): Unit = {
+    val bad = if (hasNull) Some("null")
+      else bounds.collectFirst { case id: Long if id < 0 || id >= n => id }
+    bad.foreach { id => release; throw badId(n, id) }
+  }
+
   /** Degree-skew statistics (reference A5/A6: max row degree at
     * `/root/reference/include/graphCSR.hpp:464-467`, avg at
     * `perf_compare/perf_compare.cpp:427-428`) — the north rule requires skew

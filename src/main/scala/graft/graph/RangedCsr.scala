@@ -57,14 +57,17 @@ final case class CsrBlock(
   * The blocks follow the range contract stated on
   * [[graft.exec.BlockIterate]] (partition p builds the block of key range
   * [p*chunk, min(n, (p+1)*chunk)), one row per key).
+  *
+  * This object is the only module that reads or writes blobs: every caller
+  * gets [[CsrBlock]]s ([[build]], [[buildWeighted]], [[buildSymmetric]]).
   */
 object RangedCsr {
 
   /** Keys-per-partition chunk: ceil(n / nParts). */
-  def chunkFor(n: Int, nParts: Int): Int =
+  private def chunkFor(n: Int, nParts: Int): Int =
     math.max(1, ((n.toLong + nParts - 1) / nParts).toInt)
 
-  final class IdPartitioner(n: Int) extends Partitioner {
+  private final class IdPartitioner(n: Int) extends Partitioner {
     def numPartitions: Int = n
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
     override def equals(o: Any): Boolean = o match {
@@ -75,13 +78,13 @@ object RangedCsr {
   }
 
   // value modes for the packed wire blobs
-  final val ValNone = 0
-  final val ValF = 1
-  final val ValD = 2
+  private final val ValNone = 0
+  private final val ValF = 1
+  private final val ValD = 2
 
   // blob kinds (the header's first Int)
-  final val EdgeBlob = 0
-  final val OutWBlob = 1
+  private final val EdgeBlob = 0
+  private final val OutWBlob = 1
 
   /** Edges per blob before a flush: 128k edges ≈ 1-2 MB — large enough that
     * serde is bulk memcpy, small enough that a map task's nParts open
@@ -130,20 +133,20 @@ object RangedCsr {
     b
   }
 
-  def blobKind(b: Array[Byte]): Int = le(b, 0, 4).getInt
+  private def blobKind(b: Array[Byte]): Int = le(b, 0, 4).getInt
 
-  def blobCount(b: Array[Byte]): Int = le(b, 4, 4).getInt
+  private def blobCount(b: Array[Byte]): Int = le(b, 4, 4).getInt
 
-  def blobKeys(b: Array[Byte], m: Int, out: Array[Int]): Unit =
+  private def blobKeys(b: Array[Byte], m: Int, out: Array[Int]): Unit =
     le(b, Header, 4 * m).asIntBuffer().get(out, 0, m)
 
-  def blobPayloads(b: Array[Byte], m: Int, out: Array[Int]): Unit =
+  private def blobPayloads(b: Array[Byte], m: Int, out: Array[Int]): Unit =
     le(b, Header + 4 * m, 4 * m).asIntBuffer().get(out, 0, m)
 
-  def blobValsF(b: Array[Byte], m: Int, out: Array[Float]): Unit =
+  private def blobValsF(b: Array[Byte], m: Int, out: Array[Float]): Unit =
     le(b, Header + 8 * m, 4 * m).asFloatBuffer().get(out, 0, m)
 
-  def blobValsD(b: Array[Byte], m: Int, out: Array[Double]): Unit =
+  private def blobValsD(b: Array[Byte], m: Int, out: Array[Double]): Unit =
     le(b, Header + 8 * m, 8 * m).asDoubleBuffer().get(out, 0, m)
 
   private def blobSums(b: Array[Byte], m: Int, out: Array[Double]): Unit =
@@ -313,7 +316,7 @@ object RangedCsr {
     *                Double slice per touched payload range, allocated on
     *                first use: at most 8 B × n per map task.
     */
-  def blobRdd(
+  private def blobRdd(
       df: DataFrame, n: Int, nParts: Int, valMode: Int,
       norm: Broadcast[Array[Double]] = null,
       sym: Boolean = false,
@@ -383,7 +386,7 @@ object RangedCsr {
   /** Reduce side of the range contract: `f(base, len, blobs, m)` runs once
     * per partition whose key range [base, base + len) is non-empty, over
     * that partition's blobs (of both kinds) and their total edge count m. */
-  private[graft] def mapRanges[T: ClassTag](
+  private def mapRanges[T: ClassTag](
       blobs: RDD[(Int, Array[Byte])], n: Int, nParts: Int)(
       f: (Int, Int, Array[Array[Byte]], Int) => Iterator[T]): RDD[T] = {
     val chunk = chunkFor(n, nParts)
@@ -399,7 +402,7 @@ object RangedCsr {
 
   /** Pass 1 of the histogram grouping: edge count per row of the range
     * [base, base + len) (out-weight blobs skipped). */
-  private[graft] def rowCounts(
+  private def rowCounts(
       blobs: Array[Array[Byte]], base: Int, len: Int): Array[Int] = {
     val counts = new Array[Int](len)
     val keys = new Array[Int](FlushEdges)
@@ -473,6 +476,15 @@ object RangedCsr {
     }
     CsrBlock(base, rowPtr, colInd, colVal, colValF)
   }
+
+  /** Plain CSR blocks over pre-projected (key LONG, payload LONG, value
+    * DOUBLE) rows, one scan of the edge table: values are the raw doubles,
+    * every edge is stored (non-finite values included), no out-weights are
+    * summed. Caller persists/checkpoints. */
+  def build(edges: DataFrame, n: Int, nParts: Int): RDD[CsrBlock] =
+    mapRanges(blobRdd(edges, n, nParts, ValD), n, nParts) { (base, len, blobs, m) =>
+      Iterator.single(csrBlock(blobs, m, base, len, ValD))
+    }
 
   /** In-neighbor CSR blocks over (dst, src, w) rows: key = dst, payload =
     * src, one scan of the edge table.

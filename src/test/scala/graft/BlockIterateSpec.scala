@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.algo.{ConnectedComponents, ConnectedComponentsArray, LabelPropagation,
-  LabelPropagationArray, PageRank, PageRankArray, SpmvLayouts}
+  LabelPropagationArray, PageRank, PageRankArray, SpMV, SpmvLayouts}
 import graft.exec.{GatherStrategy, IterConfig, Iterate}
 import graft.graph.RangedCsr
 import graft.sources.Synth
@@ -14,17 +14,18 @@ import graft.sources.Synth
 /** The broadcast-array tiers on the shared block driver (BlockIterate):
   *   - f32 and f64 PageRank agree and stop together; f32 warns on a
   *     tolerance it cannot resolve;
-  *   - the PageRank build reads its edge table once, and non-finite
-  *     weights make their source dangling instead of leaking its mass, in
-  *     the ShuffleJoin tier too;
+  *   - the PageRank build and the padded layouts' build read their edge
+  *     table once, and non-finite weights make their source dangling
+  *     instead of leaking its mass, in the ShuffleJoin tier too;
   *   - a null id, or one outside [0, n), fails the build on row-backed and
-  *     columnar inputs, as it fails the DataFrame LP rounds;
+  *     columnar inputs, as it fails the DataFrame PageRank, CC and LP tiers;
   *   - the columnar build source gives bit-identical results to the row
   *     source on the same table;
   *   - every iteration is one job over the cached blocks;
   *   - a snapshot written by the array tier reads back as the returned state;
   *   - PageRank, CC and LP array tiers are row-identical to their DataFrame
-  *     tiers on shapes that stress the range contract and the builds;
+  *     tiers, and the padded layouts' flows to the SpMV oracle's, on shapes
+  *     that stress the range contract and the builds;
   *   - released blocks leave no cached RDD and log no WARN.
   */
 class BlockIterateSpec extends SparkSuite {
@@ -68,21 +69,26 @@ class BlockIterateSpec extends SparkSuite {
     assert(warnings(1e-9, f32 = false) == 0)
   }
 
-  test("the PageRank array tier reads its edge table once, f64, f32 and under Auto") {
+  test("the PageRank array tier and the padded layouts read their edge table once") {
     val rows = Synth.band(spark, 500, 6).as[(Long, Long, Double)].collect()
     val read = spark.sparkContext.longAccumulator("edge rows read")
     val edges = spark.sparkContext.parallelize(rows.toSeq, 4)
       .map { e => read.add(1); e }.toDF("src", "dst", "w")
     val cfg = IterConfig(tol = 0.0, maxIter = 3)
-    def reads(run: => PageRank.Result): Long = {
+    def reads(run: => Unit): Long = {
       read.reset()
-      run.state.collect()
+      run
       read.value
     }
-    assert(reads(PageRankArray.run(spark, edges, 500, cfg = cfg)) == rows.length, "f64")
-    assert(reads(PageRankArray.run(spark, edges, 500, cfg = cfg, floatPrecision = true)) ==
-      rows.length, "f32")
-    assert(reads(PageRank.run(spark, edges, 500, cfg = cfg)) == rows.length, "Auto")
+    assert(reads(PageRankArray.run(spark, edges, 500, cfg = cfg).state.collect()) ==
+      rows.length, "f64")
+    assert(reads(PageRankArray.run(spark, edges, 500, cfg = cfg, floatPrecision = true)
+      .state.collect()) == rows.length, "f32")
+    assert(reads(PageRank.run(spark, edges, 500, cfg = cfg).state.collect()) ==
+      rows.length, "Auto")
+    for (layout <- BlockIterateSpec.layouts)
+      assert(reads(SpmvLayouts.build(spark, edges, 500, layout).unpersist()) == rows.length,
+        s"$layout")
   }
 
   test("a NaN or +inf weight makes its source dangling: scores finite, mass 1") {
@@ -126,7 +132,10 @@ class BlockIterateSpec extends SparkSuite {
           "ConnectedComponentsArray" -> (() => ConnectedComponentsArray.run(spark, edges, n)),
           "LabelPropagationArray" -> (() => LabelPropagationArray.run(spark, edges, n)),
           "LabelPropagation ShuffleJoin" -> (() => LabelPropagation.run(spark, edges, n,
-            strategy = GatherStrategy.ShuffleJoin)))
+            strategy = GatherStrategy.ShuffleJoin)),
+          "PageRank ShuffleJoin" -> (() => PageRank.run(spark, edges, n,
+            strategy = GatherStrategy.ShuffleJoin)),
+          "ConnectedComponents" -> (() => ConnectedComponents.run(spark, edges, n)))
         for ((tier, build) <- builds) {
           val e = intercept[Exception](build())
           val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
@@ -134,9 +143,9 @@ class BlockIterateSpec extends SparkSuite {
           val where = s"$what, $tier, columnar = $columnar"
           assert(iae.isDefined, s"$where: $e")
           val msg = iae.get.getMessage
-          // the array builds name the whole edge; the DataFrame rounds check
-          // the symmetrized links, so they name the id and the range
-          if (tier == "LabelPropagation ShuffleJoin")
+          // the array builds name the whole edge; the DataFrame tiers check
+          // ids (LP on the symmetrized links), so they name the id and range
+          if (!tier.contains("Array"))
             assert(msg.endsWith(s"[0, $n): ${shown.split(" = ")(1)}"), s"$where: $msg")
           else assert(msg.startsWith("edge (") && msg.contains(shown), s"$where: $msg")
         }
@@ -181,6 +190,30 @@ class BlockIterateSpec extends SparkSuite {
         strategy = GatherStrategy.ShuffleJoin).labels), s"LP: $name")
       assert(cc.map(_._1) == (0L until n) && lp.map(_._1) == (0L until n), name)
     }
+  }
+
+  test("ELLPACK, transposed ELLPACK and dense == the SpMV oracle on adversarial shapes") {
+    def flows(df: DataFrame): Seq[(Long, Double)] =
+      df.orderBy("id").as[(Long, Double)].collect().toSeq
+        .map { case (i, x) => (i, math.rint(x * 1e9) / 1e9) }
+    // a NaN and a +inf weight: the plain CSR build stores both edges, so
+    // their rows' flows are NaN and +inf, as in the oracle
+    val nonFinite = ("NaN and +inf weights", 4L, 3, Seq((0L, 1L, Double.NaN), (0L, 2L, 1.0),
+      (1L, 2L, Double.PositiveInfinity), (2L, 3L, 1.0), (3L, 0L, 0.5)).toDF("src", "dst", "w"))
+    for ((name, n, p, edges) <- BlockIterateSpec.shapes(spark) :+ nonFinite)
+      withPartitions(spark, p) {
+        val state = Synth.state(spark, n)
+        val universe = Some(spark.range(n).toDF("id"))
+        val want = flows(SpMV(edges, state, universe, GatherStrategy.ShuffleJoin))
+        assert(want.map(_._1) == (0L until n), name)
+        for (layout <- BlockIterateSpec.layouts) {
+          val got = flows(SpmvLayouts.spmvOnce(spark, edges, state, n, layout, universe))
+          val same = got.length == want.length && got.zip(want).forall {
+            case ((i, a), (j, b)) => i == j && (a == b || a.isNaN && b.isNaN)
+          }
+          assert(same, s"$name, $layout: $got vs $want")
+        }
+      }
   }
 
   test("the columnar build source == the row source, bit for bit, on parquet inputs") {
@@ -273,6 +306,8 @@ object BlockIterateSpec {
       rows.write.parquet(dir.resolve("t").toString)
       f(spark.read.parquet(dir.resolve("t").toString))
     }
+
+  val layouts = Seq(SpmvLayouts.Ellpack, SpmvLayouts.EllpackT, SpmvLayouts.Dense)
 
   /** The projections the PageRank and CC/LP array tiers hand their builds. */
   def weighted(edges: DataFrame): DataFrame =
